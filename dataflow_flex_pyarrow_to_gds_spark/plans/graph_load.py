@@ -30,10 +30,11 @@ from __future__ import annotations
 
 import logging
 from dataclasses import dataclass, field
+from functools import partial
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-from ..model import Edge, Graph, Node
+from ..model import Graph
 from ..operators.graph import project_edges, project_nodes, route_paths
 from ..sinks.base import GraphSink, WriteResult, sum_results
 
@@ -76,8 +77,8 @@ class GraphLoadPipeline:
         the scheduler interleave many small jobs (Beam gets this for free
         from a single DAG; Spark actions are blocking per thread). Phase
         ordering is untouched: all node jobs join before ``nodes_done``.
-        Requires a thread-safe sink (ParquetGraphSink's writes are; its
-        element counter is guarded by the phase lock here).
+        Requires a thread-safe sink (every ``PhasedGraphSink`` is: its
+        element counter is guarded by its phase lock).
         """
         self.spark = spark
         self.graph = graph
@@ -90,21 +91,46 @@ class GraphLoadPipeline:
         self.source_format = source_format
         self.source_options = dict(source_options or {})
 
-    def _read(self, paths: list[str]):
+    def _read_paths(self, paths: list[str], fields: list[str]) -> DataFrame:
         return (
             self.spark.read.format(self.source_format)
             .options(**self.source_options)
             .load(paths)
+            .select(*fields)
         )
 
-    def _run_phase(self, jobs: list) -> list[WriteResult]:
-        """Run [(fn, element)] jobs, optionally in driver threads."""
+    def _run_phase(self, jobs: list, kind: str, project, write) -> list[WriteResult]:
+        """Run one phase's ``[(element, read)]`` jobs, optionally in driver
+        threads; ``read(fields)`` returns the element's source columns."""
+
+        def job(element, read) -> WriteResult:
+            res = write(project(read(element.fields()), element), element)
+            log.info("%s %s: %s", kind, element.source, res)
+            return res
+
         if self.max_parallel_elements <= 1 or len(jobs) <= 1:
-            return [fn() for fn in jobs]
+            return [job(*j) for j in jobs]
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=self.max_parallel_elements) as ex:
-            return list(ex.map(lambda fn: fn(), jobs))
+            return list(ex.map(lambda j: job(*j), jobs))
+
+    def _load(self, node_jobs: list, edge_jobs: list, report: GraphLoadReport):
+        """The one lifecycle driver: ``start`` → node phase →
+        ``nodes_done`` → edge phase → ``edges_done``. Nodes come strictly
+        first (GDS protocol, pipeline.py:68-87); every node job joins
+        before ``nodes_done``."""
+        self.sink.start(self.graph)
+        report.node_results.extend(
+            self._run_phase(node_jobs, "nodes", project_nodes, self.sink.write_nodes)
+        )
+        self.sink.nodes_done()
+        report.edge_results.extend(
+            self._run_phase(edge_jobs, "edges", project_edges, self.sink.write_edges)
+        )
+        self.sink.edges_done()
+        log.info("final: %s", report.final)  # ≙ Echo sink, _dofn.py:144-155
+        return report
 
     def run(self, sources: list[str]) -> GraphLoadReport:
         """Load the graph from concrete Parquet paths (mode ≙ ``--mode gcs``).
@@ -113,44 +139,13 @@ class GraphLoadPipeline:
         ``source`` regexes against each entry.
         """
         node_map, edge_map, unmatched = route_paths(sources, self.graph)
-        report = GraphLoadReport(unmatched_sources=unmatched)
         for src in unmatched:
             log.warning("source %s matched no model element — skipped", src)
-
-        self.sink.start(self.graph)
-
-        # --- node phase (strictly first: GDS protocol, pipeline.py:68-87)
-        def node_job(node: Node, paths: list[str]):
-            def run():
-                df = self._read(paths).select(*node.fields())
-                res = self.sink.write_nodes(project_nodes(df, node), node)
-                log.info("nodes %s: %s", node.source, res)
-                return res
-
-            return run
-
-        report.node_results.extend(
-            self._run_phase([node_job(n, p) for n, p in node_map.items()])
+        return self._load(
+            [(n, partial(self._read_paths, p)) for n, p in node_map.items()],
+            [(e, partial(self._read_paths, p)) for e, p in edge_map.items()],
+            GraphLoadReport(unmatched_sources=unmatched),
         )
-        self.sink.nodes_done()
-
-        # --- edge phase
-        def edge_job(edge: Edge, paths: list[str]):
-            def run():
-                df = self._read(paths).select(*edge.fields())
-                res = self.sink.write_edges(project_edges(df, edge), edge)
-                log.info("edges %s: %s", edge.source, res)
-                return res
-
-            return run
-
-        report.edge_results.extend(
-            self._run_phase([edge_job(e, p) for e, p in edge_map.items()])
-        )
-        self.sink.edges_done()
-
-        log.info("final: %s", report.final)  # ≙ Echo sink, _dofn.py:144-155
-        return report
 
     def run_tables(
         self,
@@ -165,32 +160,18 @@ class GraphLoadPipeline:
         here is a ``.select`` the connector pushes down itself.
         """
         report = GraphLoadReport()
-        routed_nodes: list[tuple[Node, str]] = []
-        routed_edges: list[tuple[Edge, str]] = []
-        for t in node_tables:
-            node = self.graph.node_for_src(t)
-            if node is None:
-                log.warning("node table %s matched no model element", t)
-                report.unmatched_sources.append(t)
-                continue
-            routed_nodes.append((node, t))
-        for t in edge_tables:
-            edge = self.graph.edge_for_src(t)
-            if edge is None:
-                log.warning("edge table %s matched no model element", t)
-                report.unmatched_sources.append(t)
-                continue
-            routed_edges.append((edge, t))
 
-        self.sink.start(self.graph)
-        for node, t in routed_nodes:
-            df = source.table(t, fields=node.fields())
-            res = self.sink.write_nodes(project_nodes(df, node), node)
-            report.node_results.append(res)
-        self.sink.nodes_done()
-        for edge, t in routed_edges:
-            df = source.table(t, fields=edge.fields())
-            res = self.sink.write_edges(project_edges(df, edge), edge)
-            report.edge_results.append(res)
-        self.sink.edges_done()
-        return report
+        def route(kind: str, tables: list[str], lookup) -> list:
+            jobs = []
+            for t in tables:
+                element = lookup(t)
+                if element is None:
+                    log.warning("%s table %s matched no model element", kind, t)
+                    report.unmatched_sources.append(t)
+                else:
+                    jobs.append((element, partial(source.table, t)))
+            return jobs
+
+        node_jobs = route("node", node_tables, self.graph.node_for_src)
+        edge_jobs = route("edge", edge_tables, self.graph.edge_for_src)
+        return self._load(node_jobs, edge_jobs, report)

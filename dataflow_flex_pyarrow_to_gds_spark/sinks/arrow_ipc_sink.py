@@ -3,9 +3,9 @@ reference.
 
 The reference never leaves Arrow format (Parquet → RecordBatch → Flight);
 this sink preserves that property for offline exports: each partition
-writes its batches straight to an ``.arrows`` IPC stream file via
-``mapInArrow`` — no row conversion, no driver collect, telemetry as a
-side-output (same shape as the Flight sink).
+writes its batches straight to an ``.arrows`` IPC stream file through the
+shared Arrow write path (:func:`~.base.write_arrow_partitions`) — no row
+conversion, no driver collect, telemetry as a side-output.
 
 Files land under ``{out_dir}/{nodes|edges}/element_XXX/part-*.arrows``;
 consumers memory-map them (``pyarrow.ipc.open_stream``) or hand them to
@@ -16,101 +16,56 @@ anything Arrow-native. Paths must be on a filesystem all executors share
 from __future__ import annotations
 
 import os
-import threading
 import uuid
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from contextlib import ExitStack, contextmanager
+from functools import partial
+from typing import Any
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..model import Edge, Graph, Node
-from .base import WriteResult
-from .flight_sink import DEFAULT_CHUNK_ROWS, coalesce_batches
+from .base import (
+    DEFAULT_CHUNK_ROWS,
+    KEYS,
+    PhasedGraphSink,
+    write_arrow_partitions,
+    write_model,
+)
 
-RESULT_SCHEMA = "count long, nbytes long"
 
-
-def _ipc_writer_fn(out_dir: str, chunk_rows: int):
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        rows = 0
-        nbytes = 0
+@contextmanager
+def _ipc_stream(out_dir: str) -> Iterator[Callable[[pa.Table], None]]:
+    """Yield ``write(table)`` appending to one new ``.arrows`` file; the
+    file is created on the first table, whose schema the stream takes."""
+    path = os.path.join(out_dir, f"part-{uuid.uuid4().hex}.arrows")
+    with ExitStack() as stack:
         writer = None
-        path = os.path.join(out_dir, f"part-{uuid.uuid4().hex}.arrows")
-        try:
-            for table in coalesce_batches(batches, chunk_rows):
-                if writer is None:
-                    sink = pa.OSFile(path, "wb")
-                    writer = pa.ipc.new_stream(sink, table.schema)
-                writer.write_table(table)
-                rows += table.num_rows
-                nbytes += table.nbytes
-        finally:
-            if writer is not None:
-                writer.close()
-        yield pa.RecordBatch.from_pydict(
-            {"count": pa.array([rows], pa.int64()),
-             "nbytes": pa.array([nbytes], pa.int64())}
-        )
 
-    return fn
+        def write(table: pa.Table) -> None:
+            nonlocal writer
+            if writer is None:
+                sink = stack.enter_context(pa.OSFile(path, "wb"))
+                writer = stack.enter_context(pa.ipc.new_stream(sink, table.schema))
+            writer.write_table(table)
+
+        yield write
 
 
-class ArrowIPCGraphSink:
+class ArrowIPCGraphSink(PhasedGraphSink):
     """GraphSink writing Arrow IPC stream files per element."""
 
     def __init__(self, out_dir: str, chunk_rows: int = DEFAULT_CHUNK_ROWS):
+        super().__init__()
         self.out_dir = out_dir
         self.chunk_rows = chunk_rows
-        self._phase = "init"
-        self._element_idx = 0
-        self._lock = threading.Lock()
 
-    def start(self, graph: Graph) -> None:
-        if self._phase != "init":
-            raise RuntimeError(f"start() in phase {self._phase}")
-        os.makedirs(self.out_dir, exist_ok=True)
-        with open(os.path.join(self.out_dir, "model.json"), "w") as f:
-            f.write(graph.to_json())
-        self._phase = "nodes"
+    def _on_start(self) -> None:
+        write_model(self.out_dir, self.graph)
 
-    def _write(self, df: DataFrame, sub: str, kind: str) -> WriteResult:
+    def _write(self, df: DataFrame, kind: str, element: Any, sub: str):
         path = os.path.join(self.out_dir, sub)
         os.makedirs(path, exist_ok=True)
-        stats = (
-            df.mapInArrow(_ipc_writer_fn(path, self.chunk_rows), RESULT_SCHEMA)
-            .agg(F.sum("count").alias("count"), F.sum("nbytes").alias("nbytes"))
-            .first()
+        return write_arrow_partitions(
+            df, KEYS[kind], self.chunk_rows, partial(_ipc_stream, path)
         )
-        return WriteResult(
-            count=int(stats["count"] or 0),
-            nbytes=int(stats["nbytes"] or 0),
-            kind=kind,
-        )
-
-    def write_nodes(self, df: DataFrame, node: Node) -> WriteResult:
-        with self._lock:
-            if self._phase != "nodes":
-                raise RuntimeError(f"write_nodes() in phase {self._phase}")
-            sub = f"nodes/element_{self._element_idx:03d}"
-            self._element_idx += 1
-        return self._write(df, sub, "node")
-
-    def nodes_done(self) -> None:
-        if self._phase != "nodes":
-            raise RuntimeError(f"nodes_done() in phase {self._phase}")
-        self._phase = "edges"
-        self._element_idx = 0
-
-    def write_edges(self, df: DataFrame, edge: Edge) -> WriteResult:
-        with self._lock:
-            if self._phase != "edges":
-                raise RuntimeError(f"write_edges() in phase {self._phase}")
-            sub = f"edges/element_{self._element_idx:03d}"
-            self._element_idx += 1
-        return self._write(df, sub, "edge")
-
-    def edges_done(self) -> None:
-        if self._phase != "edges":
-            raise RuntimeError(f"edges_done() in phase {self._phase}")
-        self._phase = "done"

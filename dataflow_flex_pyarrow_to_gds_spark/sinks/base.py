@@ -1,4 +1,4 @@
-"""Sink protocol + write telemetry.
+"""Sink protocol, the phase-ordered load core, and the Arrow write path.
 
 Mirrors the reference's sink lifecycle and result model:
 
@@ -8,16 +8,40 @@ Mirrors the reference's sink lifecycle and result model:
   Spark, actions are synchronous so the plan just calls these in order);
 - per-write ``(count, nbytes, kind)`` telemetry summed globally
   (``Neo4jResult`` + ``sum_results``, ``neo4j_beam/_dofn.py:21,34-47``).
+
+:class:`PhasedGraphSink` owns everything the sinks share: the phase
+checks, the ``{nodes,edges}/element_NNN`` naming and the numeric-key check
+(reference ``README.md:169-170``). A concrete sink supplies only its
+lifecycle hooks and one ``_write``.
 """
 
 from __future__ import annotations
 
+import os
+import threading
+from collections.abc import Callable, Iterator
+from contextlib import AbstractContextManager, contextmanager
 from dataclasses import dataclass
-from typing import Protocol
+from typing import Any, Protocol
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..model import Edge, Graph, Node
+from ..operators.graph import NODE_ID, SOURCE_ID, TARGET_ID
+
+#: GDS ingest wants chunky batches (reference ``_dofn.py:172``).
+DEFAULT_CHUNK_ROWS = 50_000
+
+#: key columns per element kind; ``project_nodes``/``project_edges``
+#: ``try_cast`` them to long, so a non-numeric key arrives as a null.
+KEYS = {"node": (NODE_ID,), "edge": (SOURCE_ID, TARGET_ID)}
+
+#: one telemetry row per partition of the Arrow write path: rows, Arrow
+#: bytes, and the null count of each key column.
+RESULT_COLUMNS = ("count", "nbytes", NODE_ID, SOURCE_ID, TARGET_ID)
+RESULT_SCHEMA = ", ".join(f"{c} long" for c in RESULT_COLUMNS)
 
 
 @dataclass(frozen=True)
@@ -54,3 +78,172 @@ class GraphSink(Protocol):
     def write_edges(self, df: DataFrame, edge: Edge) -> WriteResult: ...
 
     def edges_done(self) -> None: ...
+
+
+class PhasedGraphSink:
+    """The GDS load protocol, enforced once for every sink.
+
+    ``start``, ``nodes_done`` and ``edges_done`` move the phase
+    ``init → nodes → edges → done`` and raise ``RuntimeError`` when called
+    out of order; a hook that raises leaves the phase where it was. Element
+    writes may come from several driver threads: each claims its
+    ``{nodes,edges}/element_NNN`` name under the lock, then writes
+    unlocked. A write whose key columns hold nulls raises ``ValueError``
+    after the write.
+
+    Subclasses implement ``_write(df, kind, element, sub)``, returning
+    ``(count, nbytes, nulls)`` with ``nulls`` mapping each of
+    ``KEYS[kind]`` to its null count, and may override the ``_on_start``,
+    ``_on_nodes_done`` and ``_on_edges_done`` hooks (``self.graph`` is set
+    before ``_on_start`` runs).
+    """
+
+    def __init__(self) -> None:
+        self._phase = "init"
+        self._element_idx = 0
+        self._lock = threading.Lock()  # plans may submit elements from threads
+
+    def _require(self, call: str, phase: str) -> None:
+        if self._phase != phase:
+            raise RuntimeError(f"{call}() in phase {self._phase}")
+
+    @contextmanager
+    def _step(self, call: str, phase: str, then: str) -> Iterator[None]:
+        with self._lock:
+            self._require(call, phase)
+            yield
+            self._phase, self._element_idx = then, 0
+
+    def start(self, graph: Graph) -> None:
+        with self._step("start", "init", "nodes"):
+            self.graph = graph
+            self._on_start()
+
+    def nodes_done(self) -> None:
+        with self._step("nodes_done", "nodes", "edges"):
+            self._on_nodes_done()
+
+    def edges_done(self) -> None:
+        with self._step("edges_done", "edges", "done"):
+            self._on_edges_done()
+
+    def _on_start(self) -> None:
+        pass
+
+    def _on_nodes_done(self) -> None:
+        pass
+
+    def _on_edges_done(self) -> None:
+        pass
+
+    def write_nodes(self, df: DataFrame, node: Node) -> WriteResult:
+        return self._write_element(df, "node", node)
+
+    def write_edges(self, df: DataFrame, edge: Edge) -> WriteResult:
+        return self._write_element(df, "edge", edge)
+
+    def _write_element(self, df: DataFrame, kind: str, element: Any) -> WriteResult:
+        with self._lock:
+            self._require(f"write_{kind}s", f"{kind}s")
+            sub = f"{kind}s/element_{self._element_idx:03d}"
+            self._element_idx += 1
+        count, nbytes, nulls = self._write(df, kind, element, sub)
+        for key in KEYS[kind]:
+            if nulls[key]:
+                raise ValueError(
+                    f"{nulls[key]} non-numeric/null {key} values in {sub} "
+                    "(GDS graph keys must be numeric)"
+                )
+        return WriteResult(count=int(count), nbytes=int(nbytes), kind=kind)
+
+    def _write(
+        self, df: DataFrame, kind: str, element: Any, sub: str
+    ) -> tuple[int, int, dict[str, int]]:
+        raise NotImplementedError
+
+
+def write_model(out_dir: str, graph: Graph) -> None:
+    """Create an export directory holding the graph model as ``model.json``."""
+    os.makedirs(out_dir, exist_ok=True)
+    with open(os.path.join(out_dir, "model.json"), "w") as f:
+        f.write(graph.to_json())
+
+
+def coalesce_batches(
+    batches: Iterator[pa.RecordBatch], chunk_rows: int = DEFAULT_CHUNK_ROWS
+) -> Iterator[pa.Table]:
+    """Buffer small record batches into ≥chunk_rows tables.
+
+    ≙ reference ``ReadBQStream.process`` buffering (``_dofn.py:184-202``),
+    as a reusable generator: never holds more than one chunk in memory.
+    """
+    buf: list[pa.RecordBatch] = []
+    buffered = 0
+    for b in batches:
+        buf.append(b)
+        buffered += b.num_rows
+        if buffered >= chunk_rows:
+            yield pa.Table.from_batches(buf)
+            buf, buffered = [], 0
+    if buf:
+        yield pa.Table.from_batches(buf)
+
+
+def write_tables(
+    batches: Iterator[pa.RecordBatch],
+    chunk_rows: int,
+    write: Callable[[pa.Table], None],
+    keys: tuple[str, ...] = (),
+) -> dict[str, int]:
+    """Coalesce ``batches`` into ≥chunk_rows tables and ``write`` each.
+
+    Returns the totals ``count`` (rows), ``nbytes`` (Arrow bytes),
+    ``writes`` (tables written) and, per column in ``keys``, its null
+    count — read from Arrow's ``null_count``, so the key check costs no
+    extra pass.
+    """
+    tally = dict.fromkeys(("count", "nbytes", "writes", *keys), 0)
+    for table in coalesce_batches(batches, chunk_rows):
+        write(table)
+        tally["count"] += table.num_rows
+        tally["nbytes"] += table.nbytes
+        tally["writes"] += 1
+        for k in keys:
+            tally[k] += table.column(k).null_count
+    return tally
+
+
+def write_arrow_partitions(
+    df: DataFrame,
+    keys: tuple[str, ...],
+    chunk_rows: int,
+    open_writer: Callable[[], AbstractContextManager[Callable[[pa.Table], None]]],
+) -> tuple[int, int, dict[str, int]]:
+    """Write every partition of ``df`` as coalesced Arrow tables.
+
+    ``open_writer`` runs on the executor, once per partition, and yields
+    the ``write(table)`` callable; it must open its connection or file
+    there, since closures must not capture live connections (reference
+    ``_dofn.py:58``). Each partition returns one ``RESULT_SCHEMA`` row and
+    a single built-in aggregate sums them (≙ ``CombineGlobally``), so the
+    write and its telemetry take one action. Returns ``(count, nbytes,
+    nulls per key)``.
+    """
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        with open_writer() as write:
+            tally = write_tables(batches, chunk_rows, write, keys)
+        yield pa.RecordBatch.from_pydict(
+            {c: pa.array([tally.get(c, 0)], pa.int64()) for c in RESULT_COLUMNS}
+        )
+
+    stats = (
+        df.mapInArrow(fn, RESULT_SCHEMA)
+        .agg(*(F.sum(c).alias(c) for c in RESULT_COLUMNS))
+        .first()
+    )
+    return (
+        stats["count"] or 0,
+        stats["nbytes"] or 0,
+        {k: stats[k] or 0 for k in keys},
+    )

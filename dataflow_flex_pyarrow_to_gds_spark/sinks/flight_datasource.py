@@ -35,7 +35,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from .flight_sink import DEFAULT_CHUNK_ROWS, coalesce_batches
+from .base import DEFAULT_CHUNK_ROWS, write_tables
+from .flight_sink import flight_put
 
 
 @dataclass
@@ -52,22 +53,9 @@ class GDSFlightWriter(DataSourceArrowWriter):
         self.chunk_rows = int(options.get("chunk_rows", DEFAULT_CHUNK_ROWS))
 
     def write(self, iterator: Iterator[pa.RecordBatch]) -> FlightCommit:
-        import pyarrow.flight as flight
-
-        client = flight.connect(self.location)
-        try:
-            rows = nbytes = puts = 0
-            desc = flight.FlightDescriptor.for_path(self.path)
-            for table in coalesce_batches(iterator, self.chunk_rows):
-                writer, _ = client.do_put(desc, table.schema)
-                writer.write_table(table)
-                writer.close()
-                rows += table.num_rows
-                nbytes += table.nbytes
-                puts += 1
-            return FlightCommit(rows=rows, nbytes=nbytes, puts=puts)
-        finally:
-            client.close()
+        with flight_put(self.location, self.path) as put:
+            t = write_tables(iterator, self.chunk_rows, put)
+        return FlightCommit(rows=t["count"], nbytes=t["nbytes"], puts=t["writes"])
 
 
 @dataclass
@@ -151,11 +139,3 @@ class GDSFlightDataSource(DataSource):
             )
         return GDSFlightWriter(self.options)
 
-
-def totals(messages: list[FlightCommit]) -> tuple[int, int, int]:
-    """Aggregate per-partition commit messages → (rows, nbytes, puts)."""
-    return (
-        sum(m.rows for m in messages),
-        sum(m.nbytes for m in messages),
-        sum(m.puts for m in messages),
-    )

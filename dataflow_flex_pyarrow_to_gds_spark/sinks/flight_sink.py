@@ -1,86 +1,41 @@
-"""Arrow Flight sink for Neo4j GDS — structure real, transport gated.
+"""Arrow Flight sink for Neo4j GDS.
 
 ≙ reference ``WriteNodes``/``WriteEdges`` DoFns (``neo4j_beam/_dofn.py:
 96-141``) + the client lifecycle (``pipeline.py:56,68-87``). No stock
 Spark sink speaks the GDS Flight protocol, so this is the one genuinely
 custom executor-side operator the reference surface requires (SURVEY §4):
 
-- ``df.mapInArrow`` streams each partition to the executor-side function
-  as ``pyarrow.RecordBatch``es — the literal analog of the reference's
-  Arrow-batch DoFns;
-- a Flight client is created **inside** the partition function (closures
-  must not capture live connections — the same discipline as the
-  reference's ``client.copy()`` / ``__getstate__`` dance,
-  ``_dofn.py:58,101,125``, ``neo4j_bigquery/_client.py:35-39``);
-- tiny record batches are coalesced to ≥``chunk_size`` rows before each
-  PUT (≙ ``ReadBQStream.chunk_size=50_000``, ``_dofn.py:171-202``) —
-  GDS ingest throughput depends on batch size, not Spark;
-- each partition yields one ``(count, nbytes)`` telemetry row; the global
-  sum is a built-in partial+final aggregate (≙ ``CombineGlobally``).
+- the driver sends the three GDS lifecycle actions (CREATE_GRAPH,
+  NODE_LOAD_DONE, RELATIONSHIP_LOAD_DONE) as ``do_action`` RPCs;
+- each element streams through the shared Arrow write path
+  (:func:`~.base.write_arrow_partitions`): every partition opens its own
+  Flight client on the executor (closures must not capture live
+  connections — the same discipline as the reference's ``client.copy()``
+  / ``__getstate__`` dance, ``_dofn.py:58,101,125``,
+  ``neo4j_bigquery/_client.py:35-39``) and PUTs each coalesced table of
+  ≥``chunk_rows`` rows (≙ ``ReadBQStream.chunk_size=50_000``,
+  ``_dofn.py:171-202``) to descriptor path ``{kind}/{element.source}``.
 
-There is no GDS server in this environment, so ``put_fn`` defaults to a
-no-op recorder; integration wiring swaps in a real
-``pyarrow.flight.FlightClient`` PUT. The batching/telemetry path is
-exercised by unit tests either way.
+By default the sink connects to ``grpc[+tls]://host:port``. Tests and
+benchmarks may inject ``make_put_factory`` and ``action_fn`` instead.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+from contextlib import contextmanager, nullcontext
+from functools import partial
 from typing import Any
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..model import Edge, Graph, Node
-from .base import WriteResult
-
-RESULT_SCHEMA = "count long, nbytes long"
-
-#: GDS ingest wants chunky batches (reference ``_dofn.py:172``).
-DEFAULT_CHUNK_ROWS = 50_000
-
-
-def coalesce_batches(
-    batches: Iterator[pa.RecordBatch], chunk_rows: int = DEFAULT_CHUNK_ROWS
-) -> Iterator[pa.Table]:
-    """Buffer small record batches into ≥chunk_rows tables.
-
-    ≙ reference ``ReadBQStream.process`` buffering (``_dofn.py:184-202``),
-    as a reusable generator: never holds more than one chunk in memory.
-    """
-    buf: list[pa.RecordBatch] = []
-    buffered = 0
-    for b in batches:
-        buf.append(b)
-        buffered += b.num_rows
-        if buffered >= chunk_rows:
-            yield pa.Table.from_batches(buf)
-            buf, buffered = [], 0
-    if buf:
-        yield pa.Table.from_batches(buf)
-
-
-def _flight_put_partition(
-    make_put: Callable[[], Callable[[pa.Table], None]],
-    chunk_rows: int,
-) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        put = make_put()  # connection created per-partition, never pickled
-        rows = 0
-        nbytes = 0
-        for table in coalesce_batches(batches, chunk_rows):
-            put(table)
-            rows += table.num_rows
-            nbytes += table.nbytes
-        yield pa.RecordBatch.from_pydict(
-            {"count": pa.array([rows], pa.int64()),
-             "nbytes": pa.array([nbytes], pa.int64())}
-        )
-
-    return fn
-
+from .base import (
+    DEFAULT_CHUNK_ROWS,
+    KEYS,
+    PhasedGraphSink,
+    write_arrow_partitions,
+)
 
 #: GDS Arrow server action types (public GDS Arrow protocol; the reference
 #: drives them through ``Neo4jArrowClient.start`` / ``Signal`` at
@@ -90,17 +45,36 @@ ACTION_NODES_DONE = "v1/NODE_LOAD_DONE"
 ACTION_EDGES_DONE = "v1/RELATIONSHIP_LOAD_DONE"
 
 
-class FlightGraphSink:
+@contextmanager
+def flight_put(location: str, path: str) -> Iterator[Callable[[pa.Table], None]]:
+    """Open one Flight connection and yield ``put(table)``, which sends
+    the table to descriptor ``path`` as one ``do_put`` stream."""
+    import pyarrow.flight as flight
+
+    client = flight.connect(location)
+    desc = flight.FlightDescriptor.for_path(path)
+
+    def put(table: pa.Table) -> None:
+        writer, _ = client.do_put(desc, table.schema)
+        writer.write_table(table)
+        writer.close()
+
+    try:
+        yield put
+    finally:
+        client.close()
+
+
+class FlightGraphSink(PhasedGraphSink):
     """GraphSink streaming node/edge DataFrames over Arrow Flight.
 
-    ``make_put_factory(kind, element)`` returns a zero-arg factory invoked
-    on the executor to open the connection — by default a no-op (dry run).
+    ``make_put_factory(kind, element)`` may replace the default PUT: it
+    runs on the driver and returns a zero-arg opener, which runs on the
+    executor and returns ``put(table)``.
 
-    ``action_fn(action_type, body)`` sends the GDS lifecycle actions
-    (CREATE_GRAPH / NODE_LOAD_DONE / RELATIONSHIP_LOAD_DONE) from the
-    driver — the protocol twin of the local phase state machine. Default
-    records to ``action_log`` without a server; pass
-    :func:`flight_action_fn` to emit real ``do_action`` RPCs.
+    ``action_fn(action_type, body)`` may replace the default
+    :func:`flight_action_fn` sender. Every action sent is also recorded,
+    in order, in ``action_log``.
     """
 
     def __init__(
@@ -114,75 +88,43 @@ class FlightGraphSink:
         | None = None,
         action_fn: Callable[[str, dict], Any] | None = None,
     ):
-        self.host, self.port, self.tls, self.database = host, port, tls, database
+        super().__init__()
+        self.location = f"grpc{'+tls' if tls else ''}://{host}:{port}"
+        self.database = database
         self.chunk_rows = chunk_rows
-        self._make_put_factory = make_put_factory or (
-            lambda kind, element: (lambda: (lambda table: None))
-        )
-        self._action_fn = action_fn
+        self._make_put_factory = make_put_factory
+        self._action_fn = action_fn or flight_action_fn(self.location)
         #: ordered driver-side record of lifecycle actions sent
         self.action_log: list[tuple[str, dict]] = []
-        self._phase = "init"
 
     def _action(self, action_type: str, body: dict) -> None:
         self.action_log.append((action_type, body))
-        if self._action_fn is not None:
-            self._action_fn(action_type, body)
+        self._action_fn(action_type, body)
 
-    def start(self, graph: Graph) -> None:
+    def _on_start(self) -> None:
         # ≙ client.start() → GDS CREATE_GRAPH action (pipeline.py:56).
-        if self._phase != "init":
-            raise RuntimeError(f"start() called in phase {self._phase}")
-        self.graph = graph
         self._action(
             ACTION_CREATE_GRAPH,
-            {"name": graph.name, "database_name": self.database},
-        )
-        self._phase = "nodes"
-
-    def _stream(self, df: DataFrame, kind: str, element: Any) -> WriteResult:
-        fn = _flight_put_partition(
-            self._make_put_factory(kind, element), self.chunk_rows
-        )
-        stats = (
-            df.mapInArrow(fn, RESULT_SCHEMA)
-            .agg(
-                F.sum("count").alias("count"),
-                F.sum("nbytes").alias("nbytes"),
-            )
-            .first()
-        )
-        return WriteResult(
-            count=int(stats["count"] or 0),
-            nbytes=int(stats["nbytes"] or 0),
-            kind=kind,
+            {"name": self.graph.name, "database_name": self.database},
         )
 
-    def write_nodes(self, df: DataFrame, node: Node) -> WriteResult:
-        if self._phase != "nodes":
-            raise RuntimeError(f"write_nodes() in phase {self._phase}")
-        return self._stream(df, "node", node)
-
-    def nodes_done(self) -> None:
+    def _on_nodes_done(self) -> None:
         # ≙ Signal("nodes_done") → server-side edge-import start
-        # (pipeline.py:68-73): the driver emits the protocol action AND
-        # advances the local phase machine.
-        if self._phase != "nodes":
-            raise RuntimeError(f"nodes_done() in phase {self._phase}")
+        # (pipeline.py:68-73).
         self._action(ACTION_NODES_DONE, {"name": self.graph.name})
-        self._phase = "edges"
 
-    def write_edges(self, df: DataFrame, edge: Edge) -> WriteResult:
-        if self._phase != "edges":
-            raise RuntimeError(f"write_edges() in phase {self._phase}")
-        return self._stream(df, "edge", edge)
-
-    def edges_done(self) -> None:
+    def _on_edges_done(self) -> None:
         # ≙ Signal("edges_done") (pipeline.py:86).
-        if self._phase != "edges":
-            raise RuntimeError(f"edges_done() in phase {self._phase}")
         self._action(ACTION_EDGES_DONE, {"name": self.graph.name})
-        self._phase = "done"
+
+    def _write(self, df: DataFrame, kind: str, element: Any, sub: str):
+        if self._make_put_factory is None:
+            path = f"{kind}/{element.source}"
+            open_writer = partial(flight_put, self.location, path)
+        else:
+            open_put = self._make_put_factory(kind, element)
+            open_writer = lambda: nullcontext(open_put())  # noqa: E731
+        return write_arrow_partitions(df, KEYS[kind], self.chunk_rows, open_writer)
 
 
 def flight_action_fn(

@@ -1,33 +1,27 @@
 """GDS-ready Parquet graph export — the primary (offline) sink.
 
-Writes ``{out_dir}/nodes/<element>/`` and ``{out_dir}/edges/<element>/`` in
-the GDS Arrow column layout (``nodeId``/``labels``/…, reference protocol
-docs linked at ``README.md:287-289``), enforcing the protocol's phase
-ordering (nodes strictly before edges, reference ``pipeline.py:68-87``) as
-local state.
+Writes ``{out_dir}/nodes/element_NNN/`` and ``{out_dir}/edges/element_NNN/``
+in the GDS Arrow column layout (``nodeId``/``labels``/…, reference
+protocol docs linked at ``README.md:287-289``), plus the model as
+``{out_dir}/model.json``. Phase order and the key check come from
+:class:`~.base.PhasedGraphSink`.
 
-Telemetry comes from ``df.observe`` — counts are collected as a side effect
-of the single write action (no second pass over the data, unlike a
-``df.count()`` + write pair); byte counts come from the written files.
-
-Scale notes: node/edge outputs are repartitioned by their id key before the
-write so downstream consumers (edge resolution, GDS import shards) see
-co-located keys; file sizes then track ``maxRecordsPerFile`` rather than
-upstream partitioning accidents.
+Telemetry comes from ``df.observe`` — the row count and the null-key
+counts are collected as a side effect of the single write action (no
+second pass over the data, unlike a ``df.count()`` + write pair); byte
+counts come from the written files.
 """
 
 from __future__ import annotations
 
 import os
-import threading
 import uuid
+from typing import Any
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..model import Edge, Graph, Node
-from ..operators.graph import NODE_ID, SOURCE_ID, TARGET_ID
-from .base import WriteResult
+from .base import KEYS, PhasedGraphSink, write_model
 
 
 def _dir_bytes(path: str) -> int:
@@ -39,83 +33,22 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-class ParquetGraphSink:
-    def __init__(
-        self,
-        out_dir: str,
-        partitions: int | None = None,
-        validate_keys: bool = True,
-    ):
+class ParquetGraphSink(PhasedGraphSink):
+    def __init__(self, out_dir: str):
+        super().__init__()
         self.out_dir = out_dir
-        self.partitions = partitions
-        self.validate_keys = validate_keys
-        self._phase = "init"
-        self._element_idx = 0
-        self._lock = threading.Lock()  # plans may submit elements from threads
 
-    # -- lifecycle ---------------------------------------------------------
-    def start(self, graph: Graph) -> None:
-        if self._phase != "init":
-            raise RuntimeError(f"start() called in phase {self._phase}")
-        self.graph = graph
-        os.makedirs(self.out_dir, exist_ok=True)
-        with open(os.path.join(self.out_dir, "model.json"), "w") as f:
-            f.write(graph.to_json())
-        self._phase = "nodes"
+    def _on_start(self) -> None:
+        write_model(self.out_dir, self.graph)
 
-    def nodes_done(self) -> None:
-        if self._phase != "nodes":
-            raise RuntimeError(f"nodes_done() in phase {self._phase}")
-        self._phase = "edges"
-        self._element_idx = 0
-
-    def edges_done(self) -> None:
-        if self._phase != "edges":
-            raise RuntimeError(f"edges_done() in phase {self._phase}")
-        self._phase = "done"
-
-    # -- writes ------------------------------------------------------------
-    def _write(
-        self, df: DataFrame, sub: str, key_cols: list[str], kind: str
-    ) -> WriteResult:
+    def _write(self, df: DataFrame, kind: str, element: Any, sub: str):
         path = os.path.join(self.out_dir, sub)
         obs = Observation(f"obs_{uuid.uuid4().hex[:8]}")
-        metrics = [F.count(F.lit(1)).alias("rows")]
-        if self.validate_keys:
-            # numeric-key constraint (reference README.md:169-170): a key
-            # that failed the cast-to-long surfaces as a null here. Edges
-            # validate BOTH endpoints — a non-numeric target key nulled by
-            # try_cast must fail here, not at GDS import time.
-            metrics.extend(
-                F.sum(F.col(k).isNull().cast("long")).alias(f"null_keys_{k}")
-                for k in key_cols
-            )
-        observed = df.observe(obs, *metrics)
-        if self.partitions:
-            observed = observed.repartition(self.partitions, key_cols[0])
+        observed = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            *(F.sum(F.col(k).isNull().cast("long")).alias(k) for k in KEYS[kind]),
+        )
         observed.write.mode("overwrite").parquet(path)
         got = obs.get
-        if self.validate_keys:
-            for k in key_cols:
-                if got[f"null_keys_{k}"]:
-                    raise ValueError(
-                        f"{got[f'null_keys_{k}']} non-numeric/null {k} values "
-                        f"in {sub} (GDS graph keys must be numeric)"
-                    )
-        return WriteResult(count=int(got["rows"]), nbytes=_dir_bytes(path), kind=kind)
-
-    def write_nodes(self, df: DataFrame, node: Node) -> WriteResult:
-        with self._lock:
-            if self._phase != "nodes":
-                raise RuntimeError(f"write_nodes() in phase {self._phase}")
-            sub = f"nodes/element_{self._element_idx:03d}"
-            self._element_idx += 1
-        return self._write(df, sub, [NODE_ID], "node")
-
-    def write_edges(self, df: DataFrame, edge: Edge) -> WriteResult:
-        with self._lock:
-            if self._phase != "edges":
-                raise RuntimeError(f"write_edges() in phase {self._phase}")
-            sub = f"edges/element_{self._element_idx:03d}"
-            self._element_idx += 1
-        return self._write(df, sub, [SOURCE_ID, TARGET_ID], "edge")
+        return got["rows"], _dir_bytes(path), {k: got[k] for k in KEYS[kind]}

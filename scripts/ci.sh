@@ -1,5 +1,6 @@
 #!/usr/bin/env bash
-# Full local gate: unit tests → DuckDB-oracle correctness → plan audit → bench.
+# Full local gate: unit tests → perfbench smoke → DuckDB-oracle correctness →
+# plan audit → bench.
 # Usage: scripts/ci.sh [--fast]   (--fast skips bench)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -20,6 +21,11 @@ python scripts/check_window.py
 
 echo "=== pytest ==="
 python -m pytest tests/ -q
+
+echo "=== perfbench smoke ==="
+# server-side row counts, Flight action order and Parquet footers checked
+# against the sinks, one short pass per benchmark workload
+python3 perfbench/smoke.py
 
 echo "=== oracle gate (sf0.01) ==="
 SWEEP_LOG="$(mktemp /tmp/ci_oracle_sweep.XXXXXX.log)"

@@ -64,6 +64,49 @@ def test_cli_gcs_mode(spark, sf_dir, tmp_path, capsys):
     assert "final: WriteResult" in out and "kind='final'" in out
 
 
+def test_cli_flight_sink_delivers_to_server(
+    spark, sf_dir, tmp_path, capsys, flight_server
+):
+    """``--sink flight`` connects to --neo4j_host/--neo4j_port, PUTs every
+    element and sends the GDS actions in protocol order."""
+    from dataflow_flex_pyarrow_to_gds_spark.sinks.flight_sink import (
+        ACTION_CREATE_GRAPH,
+        ACTION_EDGES_DONE,
+        ACTION_NODES_DONE,
+    )
+
+    rc = main(
+        [
+            "--mode", "gcs",
+            "--graph_json", _write_model(tmp_path),
+            "--node_pattern", f"{sf_dir}/customer.parquet",
+            "--node_pattern", f"{sf_dir}/orders.parquet",
+            "--edge_pattern", f"{sf_dir}/lineitem.parquet",
+            "--sink", "flight",
+            "--neo4j_host", "127.0.0.1",
+            "--neo4j_port", str(flight_server.port),
+            "--neo4j_use_tls", "False",
+        ]
+    )
+    assert rc == 0
+    assert "final: WriteResult" in capsys.readouterr().out
+
+    g = tpch_graph()
+    rows = {
+        t: spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
+        for t in ("customer", "orders", "lineitem")
+    }
+    assert flight_server.rows == {
+        f"node/{g.nodes[0].source}": rows["customer"],
+        f"node/{g.nodes[1].source}": rows["orders"],
+        f"edge/{g.edges[0].source}": rows["orders"],
+        f"edge/{g.edges[1].source}": rows["lineitem"],
+    }
+    assert flight_server.protocol() == [
+        ACTION_CREATE_GRAPH, "node", ACTION_NODES_DONE, "edge", ACTION_EDGES_DONE,
+    ]
+
+
 def test_cli_bigquery_fake_mode(spark, sf_dir, tmp_path, capsys):
     rc = main(
         [

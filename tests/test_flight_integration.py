@@ -13,71 +13,10 @@ from dataflow_flex_pyarrow_to_gds_spark.operators.graph import project_nodes
 from dataflow_flex_pyarrow_to_gds_spark.sinks.flight_sink import FlightGraphSink
 
 
-class CollectingFlightServer(flight.FlightServerBase):
-    """Accepts do_put streams and do_action RPCs, recording a global
-    ordered event log (the GDS protocol sequence under test)."""
-
-    def __init__(self):
-        super().__init__("grpc://127.0.0.1:0")  # OS-assigned port
-        self.lock = threading.Lock()
-        self.rows: dict[str, int] = {}
-        self.events: list[tuple[str, str]] = []  # (kind, detail)
-
-    def do_put(self, context, descriptor, reader, writer):
-        key = "/".join(p.decode() for p in descriptor.path)
-        n = 0
-        for chunk in reader:
-            n += chunk.data.num_rows
-        with self.lock:
-            self.rows[key] = self.rows.get(key, 0) + n
-            self.events.append(("put", key))
-
-    def do_action(self, context, action):
-        import json
-
-        body = json.loads(action.body.to_pybytes() or b"{}")
-        with self.lock:
-            self.events.append(("action", action.type))
-        return [json.dumps({"ok": True, "name": body.get("name")}).encode()]
-
-
-@pytest.fixture(scope="module")
-def flight_server():
-    server = CollectingFlightServer()
-    t = threading.Thread(target=server.serve, daemon=True)
-    t.start()
-    yield server
-    server.shutdown()
-
-
-def make_put_factory(port):
-    """Factory-of-factories: the outer callable runs on the driver, the
-    inner one on the executor (creating the client per partition — the
-    serialization discipline from reference ``_dofn.py:58``)."""
-
-    def factory(kind, element):
-        path = f"{kind}/{element.source}"
-
-        def open_conn():
-            client = flight.connect(f"grpc://127.0.0.1:{port}")
-
-            def put(table: pa.Table):
-                desc = flight.FlightDescriptor.for_path(path)
-                writer, _ = client.do_put(desc, table.schema)
-                writer.write_table(table)
-                writer.close()
-
-            return put
-
-        return open_conn
-
-    return factory
-
-
 def test_flight_sink_streams_to_live_server(spark, sf_dir, flight_server):
     g = tpch_graph()
     sink = FlightGraphSink(
-        chunk_rows=500, make_put_factory=make_put_factory(flight_server.port)
+        host="127.0.0.1", port=flight_server.port, tls=False, chunk_rows=500
     )
     sink.start(g)
 
@@ -94,7 +33,7 @@ def test_flight_sink_streams_to_live_server(spark, sf_dir, flight_server):
     assert flight_server.rows.get(key) == expected  # server-side truth
 
 
-def test_flight_action_sequence_reaches_server(spark, sf_dir):
+def test_flight_action_sequence_reaches_server(spark, sf_dir, flight_server):
     """The GDS lifecycle actions (CREATE_GRAPH → PUTs → NODE_LOAD_DONE →
     RELATIONSHIP_LOAD_DONE, reference pipeline.py:56,72,86) are emitted as
     real Flight do_action RPCs in protocol order, interleaved correctly
@@ -103,44 +42,36 @@ def test_flight_action_sequence_reaches_server(spark, sf_dir):
         ACTION_CREATE_GRAPH,
         ACTION_EDGES_DONE,
         ACTION_NODES_DONE,
-        flight_action_fn,
     )
 
-    server = CollectingFlightServer()  # fresh server → clean event log
-    t = threading.Thread(target=server.serve, daemon=True)
-    t.start()
-    try:
-        g = tpch_graph()
-        sink = FlightGraphSink(
-            chunk_rows=500,
-            make_put_factory=make_put_factory(server.port),
-            action_fn=flight_action_fn(f"grpc://127.0.0.1:{server.port}"),
-        )
-        sink.start(g)
-        src = f"{sf_dir}/customer.parquet"
-        node = g.node_for_src(src)
-        df = project_nodes(spark.read.parquet(src), node)
-        sink.write_nodes(df, node)
-        sink.nodes_done()
-        sink.edges_done()
+    server = flight_server
+    g = tpch_graph()
+    sink = FlightGraphSink(
+        host="127.0.0.1", port=server.port, tls=False, chunk_rows=500
+    )
+    sink.start(g)
+    src = f"{sf_dir}/customer.parquet"
+    node = g.node_for_src(src)
+    df = project_nodes(spark.read.parquet(src), node)
+    sink.write_nodes(df, node)
+    sink.nodes_done()
+    sink.edges_done()
 
-        actions = [d for k, d in server.events if k == "action"]
-        assert actions == [
-            ACTION_CREATE_GRAPH,
-            ACTION_NODES_DONE,
-            ACTION_EDGES_DONE,
-        ]
-        # protocol ordering: every PUT lands after CREATE_GRAPH and before
-        # NODE_LOAD_DONE
-        idx_create = server.events.index(("action", ACTION_CREATE_GRAPH))
-        idx_nodes_done = server.events.index(("action", ACTION_NODES_DONE))
-        put_idx = [i for i, (k, _) in enumerate(server.events) if k == "put"]
-        assert put_idx, "no PUTs recorded"
-        assert all(idx_create < i < idx_nodes_done for i in put_idx)
-        # driver-side log mirrors the wire sequence
-        assert [a for a, _ in sink.action_log] == actions
-    finally:
-        server.shutdown()
+    actions = [d for k, d in server.events if k == "action"]
+    assert actions == [
+        ACTION_CREATE_GRAPH,
+        ACTION_NODES_DONE,
+        ACTION_EDGES_DONE,
+    ]
+    # protocol ordering: every PUT lands after CREATE_GRAPH and before
+    # NODE_LOAD_DONE
+    idx_create = server.events.index(("action", ACTION_CREATE_GRAPH))
+    idx_nodes_done = server.events.index(("action", ACTION_NODES_DONE))
+    put_idx = [i for i, (k, _) in enumerate(server.events) if k == "put"]
+    assert put_idx, "no PUTs recorded"
+    assert all(idx_create < i < idx_nodes_done for i in put_idx)
+    # driver-side log mirrors the wire sequence
+    assert [a for a, _ in sink.action_log] == actions
 
 
 def test_flight_chunking_respects_chunk_rows(spark, sf_dir, flight_server):
@@ -148,8 +79,10 @@ def test_flight_chunking_respects_chunk_rows(spark, sf_dir, flight_server):
     possible) — verified by the telemetry matching and server totals."""
     g = tpch_graph()
     sink = FlightGraphSink(
+        host="127.0.0.1",
+        port=flight_server.port,
+        tls=False,
         chunk_rows=100_000,  # larger than the table → exactly one PUT/partition
-        make_put_factory=make_put_factory(flight_server.port),
     )
     sink.start(g)
     src = f"{sf_dir}/orders.parquet"
@@ -161,41 +94,34 @@ def test_flight_chunking_respects_chunk_rows(spark, sf_dir, flight_server):
     assert res.count == spark.read.parquet(src).count()
 
 
-def test_flight_python_datasource_writer(spark, sf_dir):
+def test_flight_python_datasource_writer(spark, sf_dir, flight_server):
     """df.write.format('gds_flight') — the PySpark 4 Python DataSource
     writer streams partitions to the live server (same wire behavior as
     FlightGraphSink, exposed through the idiomatic V2 API)."""
-    import pytest as _pytest
-
     from dataflow_flex_pyarrow_to_gds_spark.sinks.flight_datasource import (
         GDSFlightDataSource,
     )
 
-    server = CollectingFlightServer()
-    t = threading.Thread(target=server.serve, daemon=True)
-    t.start()
-    try:
-        spark.dataSource.register(GDSFlightDataSource)
-        df = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    location = f"grpc://127.0.0.1:{flight_server.port}"
+    spark.dataSource.register(GDSFlightDataSource)
+    df = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    (
+        df.write.format("gds_flight")
+        .option("location", location)
+        .option("path", "node/customer_ds")
+        .option("chunk_rows", "500")
+        .mode("append")
+        .save()
+    )
+    assert flight_server.rows.get("node/customer_ds") == df.count()
+
+    with pytest.raises(Exception, match="append"):
         (
             df.write.format("gds_flight")
-            .option("location", f"grpc://127.0.0.1:{server.port}")
-            .option("path", "node/customer_ds")
-            .option("chunk_rows", "500")
-            .mode("append")
+            .option("location", location)
+            .mode("overwrite")
             .save()
         )
-        assert server.rows.get("node/customer_ds") == df.count()
-
-        with _pytest.raises(Exception, match="append"):
-            (
-                df.write.format("gds_flight")
-                .option("location", f"grpc://127.0.0.1:{server.port}")
-                .mode("overwrite")
-                .save()
-            )
-    finally:
-        server.shutdown()
 
 
 class ServingFlightServer(flight.FlightServerBase):
@@ -263,8 +189,9 @@ def test_flight_python_datasource_reader_roundtrip(spark, sf_dir):
 
 
 class RetainingFlightServer(flight.FlightServerBase):
-    """do_put server that KEEPS the received Arrow tables (the counting
-    server above only tallies rows) — the golden-parity fixture."""
+    """do_put server that KEEPS the received Arrow tables (the
+    ``flight_server`` fixture only tallies rows) — the golden-parity
+    fixture."""
 
     def __init__(self):
         super().__init__("grpc://127.0.0.1:0")
@@ -276,6 +203,9 @@ class RetainingFlightServer(flight.FlightServerBase):
         t = reader.read_all()
         with self.lock:
             self.tables.setdefault(key, []).append(t)
+
+    def do_action(self, context, action):
+        return []  # lifecycle actions are accepted and not recorded
 
 
 def _canon_type(t: pa.DataType) -> str:
@@ -332,7 +262,7 @@ def test_gds_export_parity_flight_vs_parquet(spark, sf_dir, tmp_path):
     t.start()
     try:
         sink = FlightGraphSink(
-            chunk_rows=512, make_put_factory=make_put_factory(server.port)
+            host="127.0.0.1", port=server.port, tls=False, chunk_rows=512
         )
         GraphLoadPipeline(spark, g, sink).run(tpch_graph_sources(sf_dir))
 

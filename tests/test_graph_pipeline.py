@@ -16,8 +16,16 @@ from dataflow_flex_pyarrow_to_gds_spark.operators.edge_resolution import (
     resolve_edges,
 )
 from dataflow_flex_pyarrow_to_gds_spark.plans import GraphLoadPipeline
-from dataflow_flex_pyarrow_to_gds_spark.sinks import ParquetGraphSink
-from dataflow_flex_pyarrow_to_gds_spark.sinks.flight_sink import FlightGraphSink
+from dataflow_flex_pyarrow_to_gds_spark.sinks import (
+    ArrowIPCGraphSink,
+    FlightGraphSink,
+    ParquetGraphSink,
+)
+from dataflow_flex_pyarrow_to_gds_spark.sinks.flight_sink import (
+    ACTION_CREATE_GRAPH,
+    ACTION_EDGES_DONE,
+    ACTION_NODES_DONE,
+)
 from dataflow_flex_pyarrow_to_gds_spark.sources import read_parquet_tagged
 
 
@@ -112,10 +120,19 @@ def test_edge_resolution(spark):
     assert ok.count() + bad.count() == edges.count()
 
 
+def _dry_flight_sink(chunk_rows: int = 1000) -> FlightGraphSink:
+    """A FlightGraphSink whose PUTs and actions go nowhere."""
+    return FlightGraphSink(
+        chunk_rows=chunk_rows,
+        make_put_factory=lambda kind, element: lambda: lambda table: None,
+        action_fn=lambda action_type, body: None,
+    )
+
+
 def test_flight_sink_dry_run_counts(spark, sf_dir):
     """FlightGraphSink's mapInArrow path: batching + telemetry without a server."""
     g = tpch_graph()
-    sink = FlightGraphSink(chunk_rows=1000)
+    sink = _dry_flight_sink()
     sink.start(g)
     src = f"{sf_dir}/customer.parquet"
     node = g.node_for_src(src)
@@ -130,7 +147,7 @@ def test_flight_sink_dry_run_counts(spark, sf_dir):
 def test_coalesce_batches():
     import pyarrow as pa
 
-    from dataflow_flex_pyarrow_to_gds_spark.sinks.flight_sink import coalesce_batches
+    from dataflow_flex_pyarrow_to_gds_spark.sinks.base import coalesce_batches
 
     batches = [pa.RecordBatch.from_pydict({"x": list(range(10))}) for _ in range(25)]
     tables = list(coalesce_batches(iter(batches), chunk_rows=100))
@@ -164,10 +181,6 @@ def test_arrow_ipc_sink_roundtrip(spark, sf_dir, tmp_path):
 
     import pyarrow as pa
 
-    from dataflow_flex_pyarrow_to_gds_spark.sinks.arrow_ipc_sink import (
-        ArrowIPCGraphSink,
-    )
-
     out = str(tmp_path / "ipc")
     report = GraphLoadPipeline(
         spark, tpch_graph(), ArrowIPCGraphSink(out, chunk_rows=500)
@@ -186,10 +199,12 @@ def test_arrow_ipc_sink_roundtrip(spark, sf_dir, tmp_path):
     assert total == report.nodes.count
 
 
-def test_run_tables_with_bq_fake_source(spark, sf_dir, tmp_path):
+def test_run_tables_with_bq_fake_source(spark, sf_dir, tmp_path, flight_server):
     """Table-name mode (≙ --mode bigquery) through the FULL pipeline:
     ParquetBackedBigQuerySource → per-table model lookup + projection →
-    phase-ordered sink writes; unmatched tables reported, not fatal."""
+    phase-ordered sink writes; unmatched tables reported, not fatal. The
+    same load through FlightGraphSink reaches a live server in protocol
+    order."""
     from dataflow_flex_pyarrow_to_gds_spark.model import Edge as E, Graph as G, Node as N
     from dataflow_flex_pyarrow_to_gds_spark.sources.bigquery import (
         ParquetBackedBigQuerySource,
@@ -227,3 +242,54 @@ def test_run_tables_with_bq_fake_source(spark, sf_dir, tmp_path):
     assert {"nodeId", "acctbal"} <= set(nodes.columns)
     edges = spark.read.parquet(f"{out}/edges/*")
     assert {"sourceNodeId", "targetNodeId"} <= set(edges.columns)
+
+    sink = FlightGraphSink(host="127.0.0.1", port=flight_server.port, tls=False)
+    flight = GraphLoadPipeline(spark, g, sink).run_tables(
+        src, node_tables=["customer", "nation"], edge_tables=["orders"]
+    )
+    assert [r.count for r in flight.node_results] == [n_cust]
+    assert [r.count for r in flight.edge_results] == [n_orders]
+    assert flight.unmatched_sources == ["nation"]
+    assert flight_server.rows == {"node/customer": n_cust, "edge/orders": n_orders}
+    assert flight_server.protocol() == [
+        ACTION_CREATE_GRAPH, "node", ACTION_NODES_DONE, "edge", ACTION_EDGES_DONE,
+    ]
+
+
+def _bad_key_graph():
+    from dataflow_flex_pyarrow_to_gds_spark.model import Edge as E, Graph as G, Node as N
+
+    return G(
+        name="badkeys",
+        db="neo4j",
+        nodes=(N(source="n", key_field="id"),),
+        edges=(E(source="e", source_field="src", target_field="dst"),),
+    )
+
+
+@pytest.mark.parametrize(
+    "make_sink",
+    [ParquetGraphSink, ArrowIPCGraphSink, lambda out: _dry_flight_sink()],
+    ids=["parquet", "ipc", "flight"],
+)
+@pytest.mark.parametrize("kind", ["node", "edge_target"])
+def test_sinks_reject_non_numeric_keys(spark, tmp_path, make_sink, kind):
+    """Every sink refuses a key that the projection's try_cast nulled —
+    GDS graph keys must be numeric (reference README.md:169-170). Edges
+    check both endpoints; the bad value here is in the target."""
+    g = _bad_key_graph()
+    sink = make_sink(str(tmp_path / "out"))
+    sink.start(g)
+    if kind == "node":
+        node = g.nodes[0]
+        df = spark.createDataFrame([("1",), ("x",), ("3",)], "id string")
+        with pytest.raises(ValueError, match="must be numeric"):
+            sink.write_nodes(project_nodes(df, node), node)
+    else:
+        sink.nodes_done()
+        edge = g.edges[0]
+        df = spark.createDataFrame(
+            [("1", "2"), ("2", "y"), ("3", "1")], "src string, dst string"
+        )
+        with pytest.raises(ValueError, match="must be numeric"):
+            sink.write_edges(project_edges(df, edge), edge)
