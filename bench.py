@@ -254,39 +254,6 @@ HEADLINE = [
     "stats_grouped_quantiles_hc",
 ]
 
-#: Session-memoized fixture builds (VERDICT r12 #2): these queries own a
-#: pay-once MATERIALIZED session fixture (a localCheckpoint / cached
-#: table / trained model), so their three consecutive isolated trials
-#: read [build+query, warm, warm] and min-of-3 charges the build to NO
-#: row. The isolated pass evicts the memo before the owner's trials,
-#: times one cold run, and reports cold − warm_min as an explicit
-#: ``fixture_builds`` line which isolated_total includes exactly once.
-#: (Disk-persisted build artifacts — the bucketed edge table, the
-#: persisted minhash index — are deliberately NOT evicted: they model a
-#: separate build-pipeline step and survive sessions by design; the
-#: plan-handle memo behind curation_full_funnel re-executes per trial
-#: and needs no accounting.)
-FIXTURES: list[tuple[str, str]] = [
-    ("dag_levels", "graph_dag_levels"),
-    ("co_order_edges", "graph_label_propagation"),
-    ("pq_codebooks", "similarity_pq_topk"),
-    ("scc_assignment", "graph_scc"),
-]
-
-
-def _clear_fixture(fixture: str) -> None:
-    if fixture == "dag_levels":
-        catalog.clear_dag_levels_memo()
-    elif fixture == "co_order_edges":
-        catalog.clear_co_order_memo()
-    elif fixture == "pq_codebooks":
-        catalog.clear_pq_codebook_memo()
-    elif fixture == "scc_assignment":
-        catalog.clear_scc_memo()
-    else:  # pragma: no cover - config error is a loud error
-        raise ValueError(f"unknown fixture {fixture!r}")
-
-
 def _ambient_load() -> dict:
     """Machine-contention snapshot recorded into the artifact (VERDICT
     r9 #3: a contended driver run inflated every untouched query ~1.4×
@@ -417,11 +384,14 @@ def main() -> None:
     warm_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
+    # Warm-up is best-effort (the timed run surfaces real errors), but a
+    # failure is recorded in the artifact rather than hidden.
+    warmup_failures: dict[str, str] = {}
     for name in HEADLINE:
         try:
             qs[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass  # warm-up is best-effort; the timed run surfaces real errors
+        except Exception as exc:  # noqa: BLE001
+            warmup_failures[name] = f"{type(exc).__name__}: {exc}"[:300]
 
     # Best of 3 trials per query: single-shot numbers on a shared host mix
     # engine cost with noisy-neighbor load (measured: the same suite swings
@@ -440,25 +410,23 @@ def main() -> None:
 
     # Isolated pass (VERDICT r6 #7): per-query best-of-3 with the three
     # trials CONSECUTIVE (the microbench protocol) instead of interleaved
-    # with 41 other queries' GC/codegen/cache pressure. Recorded NEXT TO
-    # the suite-context numbers so a regression verdict can separate
-    # ambient suite pressure from a real per-query change without
-    # re-measuring. Skippable for a fast suite-only run.
+    # with the other queries' GC/codegen/cache pressure, recorded next to
+    # the suite-context numbers. A row that owns a session fixture
+    # (queries.FIXTURE_OWNERS) first clears it and runs once cold: the
+    # suite pass already built the fixture, so min-of-3 alone would charge
+    # the build to no row. cold - best is reported as one
+    # ``fixture:<name>`` line that isolated_total counts exactly once.
+    # Skippable for a fast suite-only run.
     isolated: dict[str, float] = {}
     fixture_builds: dict[str, float] = {}
     if "--no-isolated" not in sys.argv and not os.environ.get(
         "SPARK_GRAFT_NO_ISOLATED"
     ):
-        fixture_owner = {owner: fx for fx, owner in FIXTURES}
+        fixture_of = {o: f for f, o in catalog.FIXTURE_OWNERS.items()}
         for name in HEADLINE:
-            cold = None
-            if name in fixture_owner:
-                # evict the session fixture and pay its build ONCE,
-                # visibly (VERDICT r12 #2) — the suite pass above
-                # already warmed it, so without this eviction the 3
-                # isolated trials would all read warm and the build
-                # would appear in no total
-                _clear_fixture(fixture_owner[name])
+            fixture = fixture_of.get(name)
+            if fixture is not None:
+                catalog.clear_fixtures(fixture)
                 t0 = time.perf_counter()
                 qs[name](spark, sf_dir).write.format("noop").mode(
                     "overwrite"
@@ -472,8 +440,8 @@ def main() -> None:
                 ).save()
                 best = min(best, time.perf_counter() - t0)
             isolated[name] = round(best, 3)
-            if cold is not None:
-                fixture_builds[f"fixture:{fixture_owner[name]}"] = round(
+            if fixture is not None:
+                fixture_builds[f"fixture:{fixture}"] = round(
                     max(cold - best, 0.0), 3
                 )
 
@@ -493,6 +461,7 @@ def main() -> None:
         "trials": {k: [round(t, 3) for t in v] for k, v in trials.items()},
         "load_start": load_start,
         "load_end": _ambient_load(),
+        "warmup_failures": warmup_failures,
     }
     if isolated:
         full["queries_isolated"] = isolated

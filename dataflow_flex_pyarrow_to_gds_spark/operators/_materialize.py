@@ -48,6 +48,47 @@ from pyspark.sql import DataFrame
 _WARNED = False
 
 
+def _checkpoint(df: DataFrame, count: bool) -> tuple[DataFrame, int | None]:
+    """The one private-API block behind :func:`materialize` and
+    :func:`materialize_count`: localCheckpoint ``df`` (eagerly, unless a
+    ``count()`` is to be the materializing action) and re-wrap the
+    checkpointed RDD in a fresh, stats-free ``LogicalRDD``. Returns the
+    frame and the row count (None unless ``count``)."""
+    global _WARNED
+    # eager=False: Dataset.localCheckpoint row-COPIES the internal RDD
+    # (UnsafeRows are buffer-reused per partition — caching them
+    # un-copied aliases every row in a partition to the last one) and
+    # MARKS it for local checkpointing without running the materializing
+    # count; the count below is that action.
+    ck = df.localCheckpoint(eager=not count)
+    try:
+        jdf = ck._jdf
+        spark = ck.sparkSession
+        jrdd = jdf.queryExecution().toRdd()
+        n = int(jrdd.count()) if count else None  # count for free
+        fresh = spark._jsparkSession.internalCreateDataFrame(
+            jrdd, jdf.schema(), False
+        )
+        from pyspark.sql.classic.dataframe import DataFrame as _CDF
+
+        return _CDF(fresh, spark), n
+    except Exception as exc:  # noqa: BLE001 — private-API drift guard
+        if not _WARNED:
+            _WARNED = True
+            warnings.warn(
+                "materialize: stats truncation unavailable "
+                f"({exc!r}); falling back to plain localCheckpoint — "
+                "iterative self-join loops regain the compounding "
+                "size-estimate pathology (see operators/_materialize.py)",
+                RuntimeWarning,
+                stacklevel=3,
+            )
+        if not count:
+            return ck, None
+        ck = df.localCheckpoint(eager=True)
+        return ck, ck.count()
+
+
 def materialize_count(df: DataFrame) -> tuple[DataFrame, int]:
     """:func:`materialize`, but the action that materializes the
     checkpoint IS a ``count()`` whose value is returned — ONE Spark job
@@ -60,36 +101,7 @@ def materialize_count(df: DataFrame) -> tuple[DataFrame, int]:
     Same stats/lineage truncation contract as :func:`materialize`; the
     loud-but-soft fallback pays the extra count job but stays correct.
     """
-    global _WARNED
-    try:
-        # eager=False: Dataset.localCheckpoint row-COPIES the internal
-        # RDD (UnsafeRows are buffer-reused per partition — caching
-        # them un-copied aliases every row in a partition to the last
-        # one) and MARKS it for local checkpointing without running the
-        # materializing count; our count below is that action.
-        ck = df.localCheckpoint(eager=False)
-        jdf = ck._jdf
-        spark = ck.sparkSession
-        jrdd = jdf.queryExecution().toRdd()
-        n = jrdd.count()  # the materializing action — count for free
-        fresh = spark._jsparkSession.internalCreateDataFrame(
-            jrdd, jdf.schema(), False
-        )
-        from pyspark.sql.classic.dataframe import DataFrame as _CDF
-
-        return _CDF(fresh, spark), int(n)
-    except Exception as exc:  # noqa: BLE001 — private-API drift guard
-        if not _WARNED:
-            _WARNED = True
-            warnings.warn(
-                "materialize_count: fused checkpoint+count unavailable "
-                f"({exc!r}); falling back to localCheckpoint + a "
-                "separate count job per loop round",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        ck = df.localCheckpoint(eager=True)
-        return ck, ck.count()
+    return _checkpoint(df, count=True)
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -97,27 +109,4 @@ def materialize(df: DataFrame) -> DataFrame:
     whose logical plan carries neither lineage NOR compounded size
     statistics. Drop-in for ``.localCheckpoint(eager=True)`` in
     iterative loops — chain as ``.transform(materialize)``."""
-    ck = df.localCheckpoint(eager=True)
-    global _WARNED
-    try:
-        jdf = ck._jdf
-        spark = ck.sparkSession
-        jrdd = jdf.queryExecution().toRdd()
-        fresh = spark._jsparkSession.internalCreateDataFrame(
-            jrdd, jdf.schema(), False
-        )
-        from pyspark.sql.classic.dataframe import DataFrame as _CDF
-
-        return _CDF(fresh, spark)
-    except Exception as exc:  # noqa: BLE001 — private-API drift guard
-        if not _WARNED:
-            _WARNED = True
-            warnings.warn(
-                "materialize: stats truncation unavailable "
-                f"({exc!r}); falling back to plain localCheckpoint — "
-                "iterative self-join loops regain the compounding "
-                "size-estimate pathology (see operators/_materialize.py)",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        return ck
+    return _checkpoint(df, count=False)[0]

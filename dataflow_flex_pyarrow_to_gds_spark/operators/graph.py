@@ -16,8 +16,6 @@ Catalyst pushes the pruning into the Parquet/BigQuery scan (check
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -131,8 +129,3 @@ def route_paths(paths: list[str], graph: Graph) -> tuple[
         if node is None and edge is None:
             unmatched.append(p)
     return node_map, edge_map, unmatched
-
-
-def match_source(pattern: str, src: str) -> bool:
-    """Driver-side routing predicate (``re.match`` semantics)."""
-    return re.match(pattern, src) is not None

@@ -50,6 +50,72 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
+# Session fixtures: state a row builds once per SparkContext and reuses
+# --------------------------------------------------------------------------
+
+#: fixture name -> the catalog row that owns it. Each fixture is declared
+#: next to its helper, with the reason it is built once; bench.py evicts
+#: it before the owner's isolated trials and charges the rebuild as
+#: ``fixture:<name>``.
+FIXTURE_OWNERS: dict[str, str] = {}
+
+#: (name, applicationId, sf_dir, *args) -> (value, ids of the RDDs the
+#: build persisted)
+_FIXTURES: dict[tuple, tuple[object, frozenset[int]]] = {}
+
+
+def _persistent_rdd_ids(sc) -> set[int]:
+    return set(sc._jsc.getPersistentRDDs().keySet())
+
+
+def _fixture(
+    spark: SparkSession, name: str, build, sf_dir: str, *args, alive=None
+):
+    """Session fixture ``name`` for ``(sf_dir, *args)``: ``build()`` runs
+    once per SparkContext and its value is reused until
+    :func:`clear_fixtures` drops it; a hit runs no Spark job.
+    ``alive(value)`` re-checks a table- or path-backed fixture, whose
+    artifact can vanish while the entry stays."""
+    if name not in FIXTURE_OWNERS:
+        raise KeyError(f"undeclared session fixture {name!r}")
+    sc = spark.sparkContext
+    key = (name, sc.applicationId, sf_dir, *args)
+    got = _FIXTURES.get(key)
+    if got is not None and (alive is None or alive(got[0])):
+        return got[0]
+    before = _persistent_rdd_ids(sc)
+    value = build()
+    _FIXTURES[key] = (value, frozenset(_persistent_rdd_ids(sc) - before))
+    return value
+
+
+def clear_fixtures(name: str | None = None, sf_dir: str | None = None) -> int:
+    """Drop the current application's fixtures matching ``name`` and
+    ``sf_dir`` (None matches any) and unpersist exactly the RDDs their
+    builds persisted; returns the number of entries dropped. Entries of
+    other applications are left alone: RDD ids restart with each
+    SparkContext, so a stale id may name an unrelated live RDD."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return 0
+    keys = [
+        k for k in _FIXTURES
+        if k[1] == sc.applicationId
+        and (name is None or k[0] == name)
+        and (sf_dir is None or k[2] == sf_dir)
+    ]
+    live = sc._jsc.getPersistentRDDs()
+    for k in keys:
+        for rdd_id in _FIXTURES.pop(k)[1]:
+            rdd = live.get(rdd_id)
+            if rdd is not None:
+                rdd.unpersist(True)
+    return len(keys)
+
+
+# --------------------------------------------------------------------------
 # Graph path (reference parity: SURVEY §2.1/2.2/2.7, §2.4 A1/A2)
 # --------------------------------------------------------------------------
 
@@ -150,10 +216,13 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank_fixedpoint(nodes, edges, iters=4)
 
 
-#: Session memo of written bucketed edge tables (one per sf_dir) —
-#: write-once/iterate-many is the pattern graph_pagerank_bucketed
-#: demonstrates; repeated invocations reuse the layout.
-_BUCKETED_EDGES_MEMO: set[str] = set()
+#: The written bucketed edge table — write-once/iterate-many is the
+#: pattern graph_pagerank_bucketed demonstrates; repeated invocations
+#: reuse the layout. The table lives in the session catalog, which a
+#: recreated session (in-memory catalog) empties, so the catalog is
+#: co-checked as the source of truth (ADVICE r6; tableExists is a cheap
+#: catalog probe).
+FIXTURE_OWNERS["bucketed_edges"] = "graph_pagerank_bucketed"
 
 
 def q_graph_pagerank_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,12 +243,10 @@ def q_graph_pagerank_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_bucketed_edges,
     )
 
-    table = "pagerank_edges_b_" + re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir).strip("_")
-    # The memo is process-global but the table lives in a session catalog:
-    # a recreated session (in-memory catalog) would orphan the memo entry
-    # and spark.table() below would raise, so the catalog is co-checked as
-    # the source of truth (ADVICE r6; tableExists is a cheap catalog probe).
-    if table not in _BUCKETED_EDGES_MEMO or not spark.catalog.tableExists(table):
+    def build():
+        table = "pagerank_edges_b_" + re.sub(
+            r"[^0-9a-zA-Z]+", "_", sf_dir
+        ).strip("_")
         edges = _orders_edges(spark, sf_dir).select(
             "sourceNodeId",
             (F.col("targetNodeId") + F.lit(1_000_000_000)).alias(
@@ -187,8 +254,12 @@ def q_graph_pagerank_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         write_bucketed_edges(spark, edges, table, buckets=8)
-        _BUCKETED_EDGES_MEMO.add(table)
-    b = spark.table(table)
+        return table
+
+    b = spark.table(
+        _fixture(spark, "bucketed_edges", build, sf_dir,
+                 alive=spark.catalog.tableExists)
+    )
     nodes = (
         b.select(F.col("sourceNodeId").alias("nodeId"))
         .unionByName(b.select(F.col("targetNodeId").alias("nodeId")))
@@ -2981,11 +3052,10 @@ def q_similarity_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Session memo of corpus-adaptive ANN parameters per (app, sf_dir):
-#: tuning pays one exact top-k pass + a seeded k-means fit — an
-#: index-BUILD-time cost, paid once and reused by every ANN row and
-#: every bench trial in the session.
-_ANN_TUNE_MEMO: dict[tuple, tuple] = {}
+#: Corpus-adaptive ANN parameters: tuning pays one exact top-k pass + a
+#: seeded k-means fit — an index-BUILD-time cost, paid once and reused
+#: by every ANN row and every bench trial in the session.
+FIXTURE_OWNERS["ann_tune"] = "similarity_lsh_topk"
 
 
 def _ann_tuned(spark: SparkSession, sf_dir: str) -> tuple:
@@ -3001,9 +3071,7 @@ def _ann_tuned(spark: SparkSession, sf_dir: str) -> tuple:
     rank drives nprobe high (19/22 at sf0.01) — unclustered data has no
     cheap recall, and the tuner SAYS so instead of shipping a lucky
     constant; clustered real embeddings tune far tighter."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _ANN_TUNE_MEMO.get(key)
-    if got is None:
+    def build():
         from .operators.similarity import (
             corpus_ann_stats,
             tune_ivf,
@@ -3015,9 +3083,9 @@ def _ann_tuned(spark: SparkSession, sf_dir: str) -> tuple:
         stats = corpus_ann_stats(emb, "vec_id", "embedding", qv, k=10)
         nbits, n_tables = tune_lsh(stats)
         n_cent, nprobe, cents = tune_ivf(emb, "vec_id", "embedding", qv, k=10)
-        got = (nbits, n_tables, n_cent, nprobe, cents)
-        _ANN_TUNE_MEMO[key] = got
-    return got
+        return (nbits, n_tables, n_cent, nprobe, cents)
+
+    return _fixture(spark, "ann_tune", build, sf_dir)
 
 
 def q_similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3703,21 +3771,21 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Session memo of built minhash indexes, keyed by sf_dir — the
-#: build-once / probe-many deployment shape: the standing-corpus index
-#: is immutable for a given corpus, so the two catalog rows probing it
-#: (dedup_incremental_indexed, curation_admission) and repeated bench
-#: trials share one build; the first invocation pays it, steady-state
-#: invocations measure the probe cost a daily increment actually pays.
-_MINHASH_INDEX_MEMO: dict[str, str] = {}
+#: The built minhash index — the build-once / probe-many deployment
+#: shape: the standing-corpus index is immutable for a given corpus, so
+#: the two catalog rows probing it (dedup_incremental_indexed,
+#: curation_admission) and repeated bench trials share one build; the
+#: first invocation pays it, steady-state invocations measure the probe
+#: cost a daily increment actually pays.
+FIXTURE_OWNERS["minhash_index"] = "dedup_incremental_indexed"
 
 
 def _corpus_minhash_index(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
+    def build():
+        import tempfile
 
-    from .operators.dedup import build_minhash_index
+        from .operators.dedup import build_minhash_index
 
-    if sf_dir not in _MINHASH_INDEX_MEMO:
         path = tempfile.mkdtemp(prefix="minhash_index_")
         build_minhash_index(
             _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 7 != 0),
@@ -3727,8 +3795,9 @@ def _corpus_minhash_index(spark: SparkSession, sf_dir: str) -> str:
             num_hashes=96,
             bands=24,
         )
-        _MINHASH_INDEX_MEMO[sf_dir] = path
-    return _MINHASH_INDEX_MEMO[sf_dir]
+        return path
+
+    return _fixture(spark, "minhash_index", build, sf_dir)
 
 
 def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4067,6 +4136,13 @@ def q_similarity_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: PQ codebooks are the build-once side of PQ (the IVF-index precedent):
+#: deterministic given (corpus, seed), so a session trains them once and
+#: every re-invocation pays only the encode + ADC scan — exactly how a
+#: production index is used.
+FIXTURE_OWNERS["pq_codebooks"] = "similarity_pq_topk"
+
+
 def q_similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization retrieval (r12 — the IVF-PQ compression
     half, Jégou et al. TPAMI'11): the corpus encodes to 16 sub-centroid
@@ -4083,15 +4159,11 @@ def q_similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import pq_codebooks, pq_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cb = _PQ_CODEBOOK_MEMO.get(key)
-    if cb is None:
-        # codebooks are the build-once side of PQ (the IVF-index
-        # precedent): deterministic given (corpus, seed), so a session
-        # trains them once and every re-invocation pays only the
-        # encode + ADC scan — exactly how a production index is used
-        cb = pq_codebooks(emb, "vec_id", "embedding", m_sub=16, n_codes=64)
-        _PQ_CODEBOOK_MEMO[key] = cb
+
+    def build():
+        return pq_codebooks(emb, "vec_id", "embedding", m_sub=16, n_codes=64)
+
+    cb = _fixture(spark, "pq_codebooks", build, sf_dir)
     return pq_topk(
         emb,
         "vec_id",
@@ -4103,16 +4175,6 @@ def q_similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         shortlist=200,
         codebooks=cb,
     )
-
-
-#: Per-session PQ codebook memo, keyed by (applicationId, sf_dir) —
-#: the _CO_ORDER_MEMO / funnel-memo lifecycle (a new session retrains).
-_PQ_CODEBOOK_MEMO: dict = {}
-
-
-def clear_pq_codebook_memo() -> None:
-    """Evict memoized PQ codebooks (the clear_co_order_memo analog)."""
-    _PQ_CODEBOOK_MEMO.clear()
 
 
 _MMR_K = 5
@@ -4481,16 +4543,15 @@ def q_sample_per_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Per-session memo of the funnel's final DataFrame, keyed by
-#: (applicationId, sf_dir). The funnel's Gopher metric tree is the
+#: The funnel's final DataFrame. The funnel's Gopher metric tree is the
 #: catalog's widest expression plan (~0.9 s of pure Catalyst
 #: analysis/optimization per rebuild at sf0.1, measured r7 — more than
 #: its execution) and the query is deterministic for a given corpus, so
 #: a session plans it ONCE and re-executes the same handle — exactly how
-#: a production pipeline holds its plan. A new session (new appId) or a
-#: different sf_dir rebuilds; the underlying stage-table cache entry is
-#: plan-keyed and survives either way.
-_FUNNEL_MEMO: dict[tuple[str, str], DataFrame] = {}
+#: a production pipeline holds its plan. A new session or a different
+#: sf_dir rebuilds; the underlying stage-table cache entry is plan-keyed
+#: and survives either way.
+FIXTURE_OWNERS["funnel_plan"] = "curation_full_funnel"
 
 
 def q_curation_full_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4520,61 +4581,57 @@ def q_curation_full_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.quality import spread_to_cluster, with_gopher_keep
     from .operators.sampling import hash_of_id_col
 
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    memoized = _FUNNEL_MEMO.get(memo_key)
-    if memoized is not None:
-        return memoized
+    def build():
+        t = F.col("text")
+        # The skinny stage table (id, source, keep, fingerprint ≈ 50 B/doc)
+        # is cached — the one text-width pass (Gopher metrics + fingerprint)
+        # happens once per corpus and every re-invocation in a session
+        # re-hits the canonicalized-plan cache entry, the same
+        # materialize-the-projection role the r4 localCheckpoint played
+        # without its eager barrier. At 100 TB this caches a 4-column
+        # projection, never the text.
+        docs = (
+            with_gopher_keep(
+                spread_to_cluster(_t(spark, sf_dir, "documents")), "text"
+            )
+            .select(
+                "doc_id",
+                "source",
+                "keep",
+                normalized_fingerprint_col(t).alias("fingerprint"),
+            )
+            .cache()
+        )
+        staged = (
+            docs.withColumn(
+                "_rn",
+                F.row_number().over(
+                    W.partitionBy("fingerprint", "keep").orderBy("doc_id")
+                ),
+            )
+            .withColumn(
+                "is_keeper", F.col("keep") & (F.col("_rn") == 1)
+            )
+            .withColumn(
+                "_sr",
+                F.row_number().over(
+                    W.partitionBy("source").orderBy(
+                        F.col("is_keeper").desc(),
+                        hash_of_id_col("doc_id"),
+                        F.col("doc_id"),
+                    )
+                ),
+            )
+            .withColumn("is_final", F.col("is_keeper") & (F.col("_sr") <= 10))
+        )
+        return staged.groupBy("source").agg(
+            F.count("*").alias("n_docs"),
+            F.sum(F.col("keep").cast("long")).alias("n_quality"),
+            F.sum(F.col("is_keeper").cast("long")).alias("n_dedup"),
+            F.sum(F.col("is_final").cast("long")).alias("n_final"),
+        )
 
-    t = F.col("text")
-    # The skinny stage table (id, source, keep, fingerprint ≈ 50 B/doc)
-    # is cached — the one text-width pass (Gopher metrics + fingerprint)
-    # happens once per corpus and every re-invocation in a session
-    # re-hits the canonicalized-plan cache entry, the same
-    # materialize-the-projection role the r4 localCheckpoint played
-    # without its eager barrier. At 100 TB this caches a 4-column
-    # projection, never the text.
-    docs = (
-        with_gopher_keep(
-            spread_to_cluster(_t(spark, sf_dir, "documents")), "text"
-        )
-        .select(
-            "doc_id",
-            "source",
-            "keep",
-            normalized_fingerprint_col(t).alias("fingerprint"),
-        )
-        .cache()
-    )
-    staged = (
-        docs.withColumn(
-            "_rn",
-            F.row_number().over(
-                W.partitionBy("fingerprint", "keep").orderBy("doc_id")
-            ),
-        )
-        .withColumn(
-            "is_keeper", F.col("keep") & (F.col("_rn") == 1)
-        )
-        .withColumn(
-            "_sr",
-            F.row_number().over(
-                W.partitionBy("source").orderBy(
-                    F.col("is_keeper").desc(),
-                    hash_of_id_col("doc_id"),
-                    F.col("doc_id"),
-                )
-            ),
-        )
-        .withColumn("is_final", F.col("is_keeper") & (F.col("_sr") <= 10))
-    )
-    out = staged.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.col("keep").cast("long")).alias("n_quality"),
-        F.sum(F.col("is_keeper").cast("long")).alias("n_dedup"),
-        F.sum(F.col("is_final").cast("long")).alias("n_final"),
-    )
-    _FUNNEL_MEMO[memo_key] = out
-    return out
+    return _fixture(spark, "funnel_plan", build, sf_dir)
 
 
 def q_text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5093,41 +5150,23 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return label_propagation(nodes, edges, iters=3, assume_canonical=True)
 
 
-#: Session memo of the derived co-order edge lists, keyed by
-#: (application, sf_dir, threshold): MATERIALIZED once per session via
-#: localCheckpoint and shared by every graph row — the production shape
-#: (a pipeline derives its graph ONCE, then runs N algorithms over it;
-#: nine catalog rows were each re-running the lineitem self-join, ~1.5 s
-#: apiece at sf0.1). Same amortization policy as the Z-order/ANN-tuning
-#: memos: a build-time cost paid once per session, never a per-query
-#: recompute — and identical rows either way.
+#: The derived co-order edge lists, one per threshold: MATERIALIZED once
+#: per session via localCheckpoint and shared by every graph row — the
+#: production shape (a pipeline derives its graph ONCE, then runs N
+#: algorithms over it; nine catalog rows were each re-running the
+#: lineitem self-join, ~1.5 s apiece at sf0.1). Same amortization policy
+#: as the Z-order/ANN-tuning fixtures: a build-time cost paid once per
+#: session, never a per-query recompute — and identical rows either way.
 #:
 #: Lifecycle caveats (ADVICE r10): entries are eagerly
 #: ``localCheckpoint``-ed, so (a) a long-lived session sweeping MANY
 #: sf_dirs accumulates checkpointed RDD blocks — call
-#: :func:`clear_co_order_memo` between corpora; and (b) a LOST EXECUTOR
-#: invalidates local checkpoints (they live in executor block storage,
-#: not a reliable store) — on a cluster where executor churn is
-#: expected, clear the memo on failure or swap ``localCheckpoint`` for
-#: a reliable ``checkpoint`` directory.
-_CO_ORDER_MEMO: dict[tuple, DataFrame] = {}
-
-
-def clear_co_order_memo(*, sf_dir: str | None = None) -> int:
-    """Evict co-order memo entries (all, or one corpus's) and unpersist
-    their checkpointed blocks; returns the number of entries dropped.
-    The hook long-lived multi-corpus sessions need (ADVICE r10) — a
-    bounded test run never does."""
-    keys = [
-        k for k in _CO_ORDER_MEMO if sf_dir is None or k[1] == sf_dir
-    ]
-    for k in keys:
-        df = _CO_ORDER_MEMO.pop(k)
-        try:
-            df.unpersist(blocking=False)
-        except Exception:
-            pass  # session already stopped — nothing to release
-    return len(keys)
+#: ``clear_fixtures("co_order_edges", sf_dir)`` between corpora; and (b)
+#: a LOST EXECUTOR invalidates local checkpoints (they live in executor
+#: block storage, not a reliable store) — on a cluster where executor
+#: churn is expected, clear the fixture on failure or swap
+#: ``localCheckpoint`` for a reliable ``checkpoint`` directory.
+FIXTURE_OWNERS["co_order_edges"] = "graph_label_propagation"
 
 
 def _co_order_edges(spark: SparkSession, sf_dir: str, min_qty: int = 30):
@@ -5135,33 +5174,32 @@ def _co_order_edges(spark: SparkSession, sf_dir: str, min_qty: int = 30):
     carries ≥ ``min_qty`` units of both) — shared by the LPA / BFS /
     clustering rows (threshold 30) and the k-core row (43: sparse
     enough that peeling actually cascades) so the fixtures can't
-    drift. Checkpointed once per session (see ``_CO_ORDER_MEMO``)."""
-    key = (spark.sparkContext.applicationId, sf_dir, min_qty)
-    got = _CO_ORDER_MEMO.get(key)
-    if got is not None:
-        return got
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") >= min_qty)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    edges = (
-        li.alias("a")
-        .join(
-            li.alias("b"),
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+    drift. Checkpointed once per session (the ``co_order_edges``
+    fixture)."""
+
+    def build():
+        li = (
+            _t(spark, sf_dir, "lineitem")
+            .filter(F.col("l_quantity") >= min_qty)
+            .select("l_orderkey", "l_partkey")
+            .distinct()
         )
-        .select(
-            F.col("a.l_partkey").alias("sourceNodeId"),
-            F.col("b.l_partkey").alias("targetNodeId"),
+        return (
+            li.alias("a")
+            .join(
+                li.alias("b"),
+                (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+                & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+            )
+            .select(
+                F.col("a.l_partkey").alias("sourceNodeId"),
+                F.col("b.l_partkey").alias("targetNodeId"),
+            )
+            .distinct()
+            .localCheckpoint(eager=True)
         )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    _CO_ORDER_MEMO[key] = edges
-    return edges
+
+    return _fixture(spark, "co_order_edges", build, sf_dir, min_qty)
 
 
 def _co_order_sql(min_qty: int = 30) -> str:
@@ -5804,41 +5842,32 @@ def q_graph_dag_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dag_levels(spark, sf_dir)
 
 
-#: Per-session memo of the order-chain DAG's LEVELS table, keyed by
-#: (applicationId, sf_dir) — the _CO_ORDER_MEMO pattern one derivation
-#: deeper: levels are the shared FIXTURE of the DAG family (the
-#: dag-levels row selects them, the topo row ranks over them — both
-#: oracles already ride one recursive CTE), and the ~24-round
-#: relaxation loop is the single most expensive fixture build in the
-#: catalog (~18 s at sf0.1), so a session pays it once. The memoized
-#: frame is already localCheckpoint-materialized by the fixpoint loop.
-_DAG_LEVELS_MEMO: dict[tuple, DataFrame] = {}
-
-
-def clear_dag_levels_memo() -> None:
-    """Evict memoized DAG levels (the clear_co_order_memo analog)."""
-    _DAG_LEVELS_MEMO.clear()
+#: The order-chain DAG's LEVELS table — the co_order_edges pattern one
+#: derivation deeper: levels are the shared FIXTURE of the DAG family
+#: (the dag-levels row selects them, the topo row ranks over them — both
+#: oracles already ride one recursive CTE), and the ~24-round relaxation
+#: loop is the single most expensive fixture build in the catalog
+#: (~18 s at sf0.1), so a session pays it once. The stored frame is
+#: already localCheckpoint-materialized by the fixpoint loop.
+FIXTURE_OWNERS["dag_levels"] = "graph_dag_levels"
 
 
 def _dag_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.graph_algo import dag_longest_path
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _DAG_LEVELS_MEMO.get(key)
-    if got is not None:
-        return got
-    w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    nxt = (
-        _t(spark, sf_dir, "orders")
-        .select(
-            F.col("o_orderkey").alias("sourceNodeId"),
-            F.lead("o_orderkey").over(w).alias("targetNodeId"),
+    def build():
+        w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+        nxt = (
+            _t(spark, sf_dir, "orders")
+            .select(
+                F.col("o_orderkey").alias("sourceNodeId"),
+                F.lead("o_orderkey").over(w).alias("targetNodeId"),
+            )
+            .filter(F.col("targetNodeId").isNotNull())
         )
-        .filter(F.col("targetNodeId").isNotNull())
-    )
-    levels = dag_longest_path(nxt, max_iter=64)
-    _DAG_LEVELS_MEMO[key] = levels
-    return levels
+        return dag_longest_path(nxt, max_iter=64)
+
+    return _fixture(spark, "dag_levels", build, sf_dir)
 
 
 #: Shared recursive head of the order-chain DAG oracles: ``lv`` holds
@@ -5897,7 +5926,7 @@ def q_graph_topo_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME recursive level CTE the graph_dag_levels row selects from.
     The rank itself is assigned by the range-bucket prefix-sum
     scaffold, never a single-task global window; the level fixpoint is
-    the DAG family's memoized shared fixture (``_DAG_LEVELS_MEMO``),
+    the DAG family's shared session fixture (``dag_levels``),
     so a session pays the ~24-round relaxation once across both
     rows."""
     from .operators.graph_algo import topological_order
@@ -7939,7 +7968,9 @@ _RELATIONAL_ORACLES["events_decayed_guardrails"] = _DECAYED_SUM_ORACLE.format(
 )
 
 
-_ZORDER_LINEITEM_MEMO: set[str] = set()
+#: The Z-ordered lineitem copy, rewritten once per session; it lives in
+#: the temp dir, so the registry re-checks the path still exists.
+FIXTURE_OWNERS["zorder_lineitem"] = "layout_zorder_revenue"
 
 
 def q_layout_zorder_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7958,11 +7989,12 @@ def q_layout_zorder_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.layout import write_zorder_table
 
-    path = _os.path.join(
-        _tempfile.gettempdir(),
-        "zorder_lineitem_" + re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir).strip("_"),
-    )
-    if path not in _ZORDER_LINEITEM_MEMO or not _os.path.exists(path):
+    def build():
+        path = _os.path.join(
+            _tempfile.gettempdir(),
+            "zorder_lineitem_"
+            + re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir).strip("_"),
+        )
         li = _t(spark, sf_dir, "lineitem").select(
             "l_partkey",
             "l_suppkey",
@@ -7973,8 +8005,12 @@ def q_layout_zorder_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_zorder_table(
             spark, li, path, ["l_partkey", "l_suppkey"], files=8
         )
-        _ZORDER_LINEITEM_MEMO.add(path)
-    scan = spark.read.parquet(path)
+        return path
+
+    scan = spark.read.parquet(
+        _fixture(spark, "zorder_lineitem", build, sf_dir,
+                 alive=_os.path.exists)
+    )
     return (
         scan.filter((F.col("l_partkey") <= 200) & (F.col("l_suppkey") <= 40))
         .groupBy("l_returnflag")
@@ -10038,9 +10074,9 @@ def q_text_bpe_encode_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Session memo of written month-partitioned orders tables (one per
-#: sf_dir) — write-once/read-many, the bucketed-edges pattern.
-_PARTITIONED_ORDERS_MEMO: set[str] = set()
+#: The written month-partitioned orders table — write-once/read-many,
+#: the bucketed_edges pattern, catalog co-check included.
+FIXTURE_OWNERS["partitioned_orders"] = "layout_dpp_revenue"
 
 
 def q_layout_dpp_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10059,18 +10095,20 @@ def q_layout_dpp_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, rounded before the double cast."""
     from .operators.layout import write_partitioned_table
 
-    table = "orders_by_month_" + re.sub(
-        r"[^0-9a-zA-Z]+", "_", sf_dir
-    ).strip("_")
-    if table not in _PARTITIONED_ORDERS_MEMO or not spark.catalog.tableExists(
-        table
-    ):
+    def build():
+        table = "orders_by_month_" + re.sub(
+            r"[^0-9a-zA-Z]+", "_", sf_dir
+        ).strip("_")
         orders = _t(spark, sf_dir, "orders").withColumn(
             "o_month", F.month("o_orderdate")
         )
         write_partitioned_table(spark, orders, table, "o_month")
-        _PARTITIONED_ORDERS_MEMO.add(table)
-    fact = spark.table(table)
+        return table
+
+    fact = spark.table(
+        _fixture(spark, "partitioned_orders", build, sf_dir,
+                 alive=spark.catalog.tableExists)
+    )
     dim = (
         _t(spark, sf_dir, "orders")
         .filter(
@@ -10097,19 +10135,12 @@ def q_layout_dpp_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the one revisitable non-goal, shipped) + the condensation DAG
 # ---------------------------------------------------------------------------
 
-#: Per-session memo of the order-cycle digraph's SCC assignment, keyed
-#: by (applicationId, sf_dir) — the _DAG_LEVELS_MEMO pattern: the SCC
-#: decomposition is the shared fixture of the SCC family (the scc row
-#: selects it, the condensation row contracts over it), and the
+#: The order-cycle digraph's SCC assignment — the dag_levels pattern:
+#: the SCC decomposition is the shared fixture of the SCC family (the scc
+#: row selects it, the condensation row contracts over it), and the
 #: two-phase coloring fixpoint is iterative-join work a session should
-#: pay once. bench.py charges the build explicitly (FIXTURES).
-_SCC_MEMO: dict[tuple, DataFrame] = {}
-
-
-def clear_scc_memo() -> None:
-    """Evict memoized SCC assignments (the clear_dag_levels_memo
-    analog)."""
-    _SCC_MEMO.clear()
+#: pay once.
+FIXTURE_OWNERS["scc_assignment"] = "graph_scc"
 
 
 def _scc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10172,16 +10203,12 @@ _SCC_FIXTURE_KW = {"trim_rounds": 2, "max_outer": 16, "max_rounds": 64}
 def _scc_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.scc import strongly_connected_components
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _SCC_MEMO.get(key)
-    if got is not None:
-        return got
-    scc = strongly_connected_components(
-        _scc_edges(spark, sf_dir), **_SCC_FIXTURE_KW
-    )
-    scc = scc.localCheckpoint(eager=True)
-    _SCC_MEMO[key] = scc
-    return scc
+    def build():
+        return strongly_connected_components(
+            _scc_edges(spark, sf_dir), **_SCC_FIXTURE_KW
+        ).localCheckpoint(eager=True)
+
+    return _fixture(spark, "scc_assignment", build, sf_dir)
 
 
 def q_graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10207,8 +10234,8 @@ def q_graph_scc_condensation(spark: SparkSession, sf_dir: str) -> DataFrame:
     with cross-edge multiplicity — the acyclic quotient a scheduler or
     cycle-breaking pass consumes. Two skinny label joins + one
     partial-agg count, no iteration; the SCC assignment itself is the
-    family's memoized session fixture (``_SCC_MEMO``, charged
-    explicitly by bench.py's fixture accounting)."""
+    family's session fixture (``scc_assignment``, charged explicitly by
+    bench.py's fixture accounting)."""
     from .operators.scc import scc_condensation
 
     return scc_condensation(
@@ -10733,26 +10760,19 @@ def _biconn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Per-session biconnectivity state memo (the _SCC_MEMO lifecycle):
+#: The biconnectivity state (the scc_assignment lifecycle):
 #: graph_bridges and graph_articulation_points share one
-#: biconnectivity_state build per (applicationId, sf_dir).
-_BICONN_MEMO: dict[tuple, dict] = {}
-
-
-def clear_biconn_memo() -> None:
-    """Evict memoized biconnectivity state (the clear_scc_memo analog)."""
-    _BICONN_MEMO.clear()
+#: biconnectivity_state build per session.
+FIXTURE_OWNERS["biconn_state"] = "graph_bridges"
 
 
 def _biconn_state(spark: SparkSession, sf_dir: str) -> dict:
     from .operators.biconnect import biconnectivity_state
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _BICONN_MEMO.get(key)
-    if got is None:
-        got = biconnectivity_state(_biconn_edges(spark, sf_dir))
-        _BICONN_MEMO[key] = got
-    return got
+    def build():
+        return biconnectivity_state(_biconn_edges(spark, sf_dir))
+
+    return _fixture(spark, "biconn_state", build, sf_dir)
 
 
 def q_graph_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -67,21 +67,100 @@ def test_entry_module_contract():
 
 
 def test_clear_co_order_memo(spark):
-    """ADVICE r10: the co-order memo exposes an eviction hook for
-    long-lived multi-corpus sessions — entries drop (per-corpus or all)
-    and re-derive on next use."""
-    from dataflow_flex_pyarrow_to_gds_spark import queries as Q
-
+    """ADVICE r10: the co-order fixture can be evicted in long-lived
+    multi-corpus sessions — entries drop (per-corpus or all) and
+    re-derive on next use."""
     sf = "/root/testdata/sf0.001"
-    Q._co_order_edges(spark, sf)            # populate
-    assert any(k[1] == sf for k in Q._CO_ORDER_MEMO)
-    n = Q.clear_co_order_memo(sf_dir=sf)
+
+    def held(sf_dir=None):
+        return [
+            k for k in C._FIXTURES
+            if k[0] == "co_order_edges" and sf_dir in (None, k[2])
+        ]
+
+    C._co_order_edges(spark, sf)            # populate
+    assert held(sf)
+    sc = spark.sparkContext
+    sc.setJobGroup("fixture-hit", "a cache hit")
+    try:
+        C._co_order_edges(spark, sf)
+    finally:
+        sc.setJobGroup(None, None)
+    assert not sc.statusTracker().getJobIdsForGroup("fixture-hit")
+    n = C.clear_fixtures("co_order_edges", sf_dir=sf)
     assert n >= 1
-    assert not any(k[1] == sf for k in Q._CO_ORDER_MEMO)
-    e = Q._co_order_edges(spark, sf)        # re-derives cleanly
+    assert not held(sf)
+    e = C._co_order_edges(spark, sf)        # re-derives cleanly
     assert e.count() > 0
-    assert Q.clear_co_order_memo() >= 1     # full clear
-    assert not Q._CO_ORDER_MEMO
+    assert C.clear_fixtures() >= 1          # full clear
+    assert not held()
+
+
+def test_clear_fixtures_releases_exactly_the_builds_blocks(spark):
+    """Clearing a fixture unpersists the RDDs its build persisted — a
+    localCheckpoint frame's blocks are not released by df.unpersist — and
+    leaves every other fixture's blocks alone."""
+    sf = "/root/testdata/sf0.001"
+    jsc = spark.sparkContext._jsc
+
+    def live():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    C.clear_fixtures()
+    before = live()
+    C._co_order_edges(spark, sf)
+    assert live() - before
+    assert C.clear_fixtures("co_order_edges") == 1
+    assert not live() - before
+
+    C._dag_levels(spark, sf)
+    co = C._co_order_edges(spark, sf)
+    assert C.clear_fixtures("dag_levels") == 1
+    assert co.count() > 0                   # its checkpoint still reads
+    C.clear_fixtures()
+    assert not live() - before
+
+
+def test_every_fixture_owner_reaches_its_helper():
+    """Each declared session fixture is built by exactly one catalog
+    function, and its owner row reaches that function through
+    check_window's dependency walk — bench charges the build to the
+    owner, so the declaration cannot drift from the code (no Spark)."""
+    import importlib.util
+    import inspect
+    import os
+    import types
+
+    spec = importlib.util.spec_from_file_location(
+        "check_window",
+        os.path.join(os.path.dirname(__file__), "..", "scripts",
+                     "check_window.py"),
+    )
+    cw = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(cw)
+    closure, _ = cw.module_closures()
+
+    builders: dict[str, list] = {n: [] for n in C.FIXTURE_OWNERS}
+    for fn in vars(C).values():
+        if (
+            isinstance(fn, types.FunctionType)
+            and fn.__module__ == C.__name__
+            and "_fixture" in fn.__code__.co_names
+        ):
+            for name in set(C.FIXTURE_OWNERS) & set(fn.__code__.co_consts):
+                builders[name].append(fn)
+    assert all(len(b) == 1 for b in builders.values()), builders
+    owners = list(C.FIXTURE_OWNERS.values())
+    assert len(set(owners)) == len(owners)  # bench charges one per row
+
+    specs = C._specs()
+    for name, owner in C.FIXTURE_OWNERS.items():
+        (helper,) = builders[name]
+        owner_fn = specs[owner].fn
+        _deps, helper_src = cw.query_deps(owner_fn, closure)
+        assert owner_fn is helper or inspect.getsource(helper) in helper_src, (
+            name, owner, helper.__name__
+        )
 
 
 def test_tripwire_v2_flags_operator_edits():
