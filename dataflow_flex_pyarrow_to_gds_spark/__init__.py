@@ -12,7 +12,8 @@ Neo4j GDS — see ``/root/reference/pipeline.py``), rebuilt Spark-first:
   URIs, reference ``README.md:87-177``) is a small dependency-free module
   (:mod:`.model`);
 - phase ordering (all nodes before any edges, reference
-  ``pipeline.py:68-87``) is sequential driver code between Spark actions;
+  ``pipeline.py:68-87``) is the sink's phase barrier: a phase's element
+  writes run concurrently and ``nodes_done``/``edges_done`` join them;
 - sinks are pluggable: GDS-ready Parquet graph export (offline-testable)
   and an Arrow Flight writer skeleton.
 

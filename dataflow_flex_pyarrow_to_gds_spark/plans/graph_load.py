@@ -7,13 +7,18 @@ End-to-end lifecycle (≙ reference entry point A/B, ``pipeline.py:48-96,
 2. route concrete sources (file paths / table names) to model elements at
    **plan time** (driver-side regex, ≙ ``get_streams`` ``pipeline.py:
    99-127``) — unmatched sources are skipped but reported,
-3. ``sink.start()`` (≙ ``client.start()``, ``pipeline.py:56``),
-4. per node element: scan (projection pruned to the element's field list —
-   Catalyst pushes it into the Parquet footer read) → project/rename →
-   ``sink.write_nodes`` → telemetry,
-5. ``sink.nodes_done()`` — the protocol's phase barrier. Beam needs a DAG
-   trick for this (``Signal``, ``_dofn.py:50-77``); Spark actions are
-   synchronous, so sequential driver code IS the barrier,
+3. plan every element, nodes and edges, on driver threads: scan
+   (projection pruned to the element's field list — Catalyst pushes it
+   into the Parquet footer read) → project/rename. The per-element schema
+   reads overlap, and a planning error (say, a missing column) raises
+   here, before the sink has sent anything,
+4. ``sink.start()`` (≙ ``client.start()``, ``pipeline.py:56``), then
+   ``sink.write_nodes`` for each node element in model order; the sink
+   runs the writes concurrently, naming them ``element_NNN`` in call order,
+5. ``sink.nodes_done()`` — the protocol's phase barrier (≙ ``Signal``,
+   ``_dofn.py:50-77``): it joins every node write, and raises the first
+   failure before the server hears of the phase's end; then each node
+   element's telemetry is logged,
 6. same for edges, ``sink.edges_done()``,
 7. global telemetry fold (≙ ``Flatten`` + ``CombineGlobally`` +
    ``kind="final"`` relabel, ``pipeline.py:88-95``).
@@ -21,18 +26,20 @@ End-to-end lifecycle (≙ reference entry point A/B, ``pipeline.py:48-96,
 Scale notes: each element's scan reads only matching files (plan-time
 routing = partition pruning at the file level; no rlike filter over rows)
 and only the model's columns (``ReadSchema`` in explain). Elements are
-independent Spark jobs — at 1000 executors they pipeline through the
-scheduler; no shuffle exists anywhere in the node path (scan → narrow
-project → write).
+independent Spark jobs, submitted together so the scheduler interleaves
+them; no shuffle exists anywhere in the node path (scan → narrow project
+→ write).
 """
 
 from __future__ import annotations
 
 import logging
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from ..model import Graph
 from ..operators.graph import project_edges, project_nodes, route_paths
@@ -68,22 +75,12 @@ class GraphLoadPipeline:
         graph: Graph,
         sink: GraphSink,
         *,
-        max_parallel_elements: int = 1,
         source_format: str = "parquet",
         source_options: dict[str, str] | None = None,
     ):
-        """``max_parallel_elements > 1`` submits the independent element
-        jobs of a phase from driver threads — the Spark idiom for letting
-        the scheduler interleave many small jobs (Beam gets this for free
-        from a single DAG; Spark actions are blocking per thread). Phase
-        ordering is untouched: all node jobs join before ``nodes_done``.
-        Requires a thread-safe sink (every ``PhasedGraphSink`` is: its
-        element counter is guarded by its phase lock).
-        """
         self.spark = spark
         self.graph = graph
         self.sink = sink
-        self.max_parallel_elements = max_parallel_elements
         #: any Spark batch source: parquet (default), orc, csv, json.
         #: Columnar formats carry their own schemas; csv/json callers
         #: should pass options (e.g. {"header": "true", "inferSchema":
@@ -99,36 +96,49 @@ class GraphLoadPipeline:
             .select(*fields)
         )
 
-    def _run_phase(self, jobs: list, kind: str, project, write) -> list[WriteResult]:
-        """Run one phase's ``[(element, read)]`` jobs, optionally in driver
-        threads; ``read(fields)`` returns the element's source columns."""
+    def _plan(self, node_jobs: list, edge_jobs: list) -> tuple[list, list]:
+        """Build every ``[(element, read)]`` job's projected frame, on
+        driver threads that keep the caller's Spark local properties;
+        ``read(fields)`` returns the element's source columns. Returns the
+        ``[(element, frame)]`` lists of both phases, in job order."""
+        jobs = [(project_nodes, *j) for j in node_jobs] + [
+            (project_edges, *j) for j in edge_jobs
+        ]
 
-        def job(element, read) -> WriteResult:
-            res = write(project(read(element.fields()), element), element)
+        def plan(job) -> tuple:
+            project, element, read = job
+            return element, project(read(element.fields()), element)
+
+        with ThreadPoolExecutor(thread_name_prefix="graph-plan") as pool:
+            planned = list(pool.map(inheritable_thread_target(self.spark)(plan), jobs))
+        return planned[: len(node_jobs)], planned[len(node_jobs) :]
+
+    @staticmethod
+    def _write_phase(planned: list, write, done, kind: str) -> list[WriteResult]:
+        """Submit every ``(element, frame)`` of one phase in order, then
+        join them at the phase barrier ``done`` and log each result."""
+        results = [write(df, element) for element, df in planned]
+        done()
+        for (element, _), res in zip(planned, results):
             log.info("%s %s: %s", kind, element.source, res)
-            return res
-
-        if self.max_parallel_elements <= 1 or len(jobs) <= 1:
-            return [job(*j) for j in jobs]
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=self.max_parallel_elements) as ex:
-            return list(ex.map(lambda j: job(*j), jobs))
+        return results
 
     def _load(self, node_jobs: list, edge_jobs: list, report: GraphLoadReport):
-        """The one lifecycle driver: ``start`` → node phase →
-        ``nodes_done`` → edge phase → ``edges_done``. Nodes come strictly
-        first (GDS protocol, pipeline.py:68-87); every node job joins
-        before ``nodes_done``."""
-        self.sink.start(self.graph)
+        """The one lifecycle driver: plan every element, then ``start`` →
+        node writes → ``nodes_done`` → edge writes → ``edges_done``. The
+        sink is called synchronously in job order (model order for
+        :meth:`run`), so ``element_NNN`` is the NNN-th job of its kind;
+        the sink runs a phase's writes concurrently and joins them at the
+        phase barrier (GDS protocol, pipeline.py:68-87)."""
+        nodes, edges = self._plan(node_jobs, edge_jobs)
+        sink = self.sink
+        sink.start(self.graph)
         report.node_results.extend(
-            self._run_phase(node_jobs, "nodes", project_nodes, self.sink.write_nodes)
+            self._write_phase(nodes, sink.write_nodes, sink.nodes_done, "nodes")
         )
-        self.sink.nodes_done()
         report.edge_results.extend(
-            self._run_phase(edge_jobs, "edges", project_edges, self.sink.write_edges)
+            self._write_phase(edges, sink.write_edges, sink.edges_done, "edges")
         )
-        self.sink.edges_done()
         log.info("final: %s", report.final)  # ≙ Echo sink, _dofn.py:144-155
         return report
 
@@ -142,8 +152,10 @@ class GraphLoadPipeline:
         for src in unmatched:
             log.warning("source %s matched no model element — skipped", src)
         return self._load(
-            [(n, partial(self._read_paths, p)) for n, p in node_map.items()],
-            [(e, partial(self._read_paths, p)) for e, p in edge_map.items()],
+            [(n, partial(self._read_paths, node_map[n]))
+             for n in self.graph.nodes if n in node_map],
+            [(e, partial(self._read_paths, edge_map[e]))
+             for e in self.graph.edges if e in edge_map],
             GraphLoadReport(unmatched_sources=unmatched),
         )
 

@@ -3,16 +3,17 @@
 Mirrors the reference's sink lifecycle and result model:
 
 - lifecycle ``start → write nodes → nodes_done → write edges → edges_done``
-  (reference ``pipeline.py:56-95``; the Beam version needs a DAG trick —
-  ``Signal``, ``neo4j_beam/_dofn.py:50-77`` — to order the phases; in
-  Spark, actions are synchronous so the plan just calls these in order);
+  (reference ``pipeline.py:56-95``). As in the reference, the element
+  writes of a phase run concurrently and only the phase barrier orders
+  them: Beam's is ``Signal`` (``neo4j_beam/_dofn.py:50-77``), ours is
+  ``nodes_done``/``edges_done``, which join every write of the phase;
 - per-write ``(count, nbytes, kind)`` telemetry summed globally
   (``Neo4jResult`` + ``sum_results``, ``neo4j_beam/_dofn.py:21,34-47``).
 
 :class:`PhasedGraphSink` owns everything the sinks share: the phase
-checks, the ``{nodes,edges}/element_NNN`` naming and the numeric-key check
-(reference ``README.md:169-170``). A concrete sink supplies only its
-lifecycle hooks and one ``_write``.
+checks, the ``{nodes,edges}/element_NNN`` naming, the write executor and
+the numeric-key check (reference ``README.md:169-170``). A concrete sink
+supplies only its lifecycle hooks and one ``_write``.
 """
 
 from __future__ import annotations
@@ -20,13 +21,14 @@ from __future__ import annotations
 import os
 import threading
 from collections.abc import Callable, Iterator
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from contextlib import AbstractContextManager, contextmanager
-from dataclasses import dataclass
 from typing import Any, Protocol
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..model import Edge, Graph, Node
 from ..operators.graph import NODE_ID, SOURCE_ID, TARGET_ID
@@ -44,13 +46,52 @@ RESULT_COLUMNS = ("count", "nbytes", NODE_ID, SOURCE_ID, TARGET_ID)
 RESULT_SCHEMA = ", ".join(f"{c} long" for c in RESULT_COLUMNS)
 
 
-@dataclass(frozen=True)
 class WriteResult:
-    """≙ reference ``Neo4jResult`` (``neo4j_beam/_dofn.py:21``)."""
+    """≙ reference ``Neo4jResult`` (``neo4j_beam/_dofn.py:21``).
 
-    count: int
-    nbytes: int
-    kind: str  # "node" | "edge" | "final"
+    A sink returns one per element write as soon as the write is
+    submitted: ``count`` and ``nbytes`` block until the write is done and
+    raise its error, if any. ``done()`` tells without blocking.
+    """
+
+    def __init__(
+        self,
+        count: int = 0,
+        nbytes: int = 0,
+        kind: str = "",
+        *,
+        totals: Future | None = None,
+    ):
+        """``totals``, when given, is the future of a submitted write that
+        yields its ``(count, nbytes)``."""
+        self.kind = kind  # "node" | "edge" | "final"
+        if totals is None:
+            totals = Future()
+            totals.set_result((count, nbytes))
+        self._totals = totals
+
+    @property
+    def count(self) -> int:
+        return self._totals.result()[0]
+
+    @property
+    def nbytes(self) -> int:
+        return self._totals.result()[1]
+
+    def done(self) -> bool:
+        return self._totals.done()
+
+    def _key(self) -> tuple[int, int, str]:
+        return self.count, self.nbytes, self.kind
+
+    def __eq__(self, other: object) -> bool:
+        return isinstance(other, WriteResult) and self._key() == other._key()
+
+    def __repr__(self) -> str:
+        return (
+            f"WriteResult(count={self.count}, nbytes={self.nbytes}, "
+            f"kind={self.kind!r})"
+        )
 
 
 def sum_results(results: list[WriteResult], kind: str | None = None) -> WriteResult:
@@ -64,7 +105,12 @@ def sum_results(results: list[WriteResult], kind: str | None = None) -> WriteRes
 
 
 class GraphSink(Protocol):
-    """Pluggable sink: Parquet graph export (offline) or Arrow Flight."""
+    """Pluggable sink: Parquet graph export (offline) or Arrow Flight.
+
+    ``write_nodes``/``write_edges`` may return before their write is done;
+    ``nodes_done``/``edges_done`` return only once every write of their
+    phase is, and raise if one failed.
+    """
 
     def start(self, graph: Graph) -> None:
         """≙ ``client.start()`` — create the server-side import
@@ -85,11 +131,17 @@ class PhasedGraphSink:
 
     ``start``, ``nodes_done`` and ``edges_done`` move the phase
     ``init → nodes → edges → done`` and raise ``RuntimeError`` when called
-    out of order; a hook that raises leaves the phase where it was. Element
-    writes may come from several driver threads: each claims its
-    ``{nodes,edges}/element_NNN`` name under the lock, then writes
-    unlocked. A write whose key columns hold nulls raises ``ValueError``
-    after the write.
+    out of order. ``write_nodes``/``write_edges`` claim the next
+    ``{nodes,edges}/element_NNN`` name under the lock, in call order, hand
+    the write and its key check to the sink's executor (created on the
+    first write; its threads keep the caller's Spark local properties,
+    such as the job group) and return a pending :class:`WriteResult`.
+
+    ``nodes_done``/``edges_done`` are the join point: each waits for every
+    write of its phase, raises the first failure in claim order, and only
+    then runs its hook. A write whose key columns hold nulls fails with
+    ``ValueError``. A failed write or a hook that raises leaves the phase
+    where it was.
 
     Subclasses implement ``_write(df, kind, element, sub)``, returning
     ``(count, nbytes, nulls)`` with ``nulls`` mapping each of
@@ -101,7 +153,9 @@ class PhasedGraphSink:
     def __init__(self) -> None:
         self._phase = "init"
         self._element_idx = 0
-        self._lock = threading.Lock()  # plans may submit elements from threads
+        self._lock = threading.Lock()
+        self._pool: ThreadPoolExecutor | None = None
+        self._pending: list[Future] = []  # the phase's writes, in claim order
 
     def _require(self, call: str, phase: str) -> None:
         if self._phase != phase:
@@ -111,8 +165,11 @@ class PhasedGraphSink:
     def _step(self, call: str, phase: str, then: str) -> Iterator[None]:
         with self._lock:
             self._require(call, phase)
+            wait(self._pending)
+            for write in self._pending:
+                write.result()
             yield
-            self._phase, self._element_idx = then, 0
+            self._phase, self._element_idx, self._pending = then, 0, []
 
     def start(self, graph: Graph) -> None:
         with self._step("start", "init", "nodes"):
@@ -126,6 +183,8 @@ class PhasedGraphSink:
     def edges_done(self) -> None:
         with self._step("edges_done", "edges", "done"):
             self._on_edges_done()
+        if self._pool is not None:
+            self._pool.shutdown()
 
     def _on_start(self) -> None:
         pass
@@ -147,6 +206,16 @@ class PhasedGraphSink:
             self._require(f"write_{kind}s", f"{kind}s")
             sub = f"{kind}s/element_{self._element_idx:03d}"
             self._element_idx += 1
+            if self._pool is None:
+                self._pool = ThreadPoolExecutor(thread_name_prefix="graph-sink")
+            write = inheritable_thread_target(df.sparkSession)(self._write_checked)
+            totals = self._pool.submit(write, df, kind, element, sub)
+            self._pending.append(totals)
+        return WriteResult(kind=kind, totals=totals)
+
+    def _write_checked(
+        self, df: DataFrame, kind: str, element: Any, sub: str
+    ) -> tuple[int, int]:
         count, nbytes, nulls = self._write(df, kind, element, sub)
         for key in KEYS[kind]:
             if nulls[key]:
@@ -154,7 +223,7 @@ class PhasedGraphSink:
                     f"{nulls[key]} non-numeric/null {key} values in {sub} "
                     "(GDS graph keys must be numeric)"
                 )
-        return WriteResult(count=int(count), nbytes=int(nbytes), kind=kind)
+        return int(count), int(nbytes)
 
     def _write(
         self, df: DataFrame, kind: str, element: Any, sub: str

@@ -1,6 +1,7 @@
 """End-to-end graph load: route → project → phase-ordered sink → telemetry."""
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -155,23 +156,133 @@ def test_coalesce_batches():
     assert sum(t.num_rows for t in tables) == 250
 
 
-def test_parallel_element_load_matches_serial(spark, sf_dir, tmp_path):
-    """Thread-submitted element jobs produce the same totals as serial."""
-    serial = GraphLoadPipeline(
-        spark, tpch_graph(), ParquetGraphSink(str(tmp_path / "ser"))
-    ).run(tpch_graph_sources(sf_dir))
-    parallel = GraphLoadPipeline(
-        spark, tpch_graph(), ParquetGraphSink(str(tmp_path / "par")),
-        max_parallel_elements=4,
-    ).run(tpch_graph_sources(sf_dir))
-    assert parallel.nodes.count == serial.nodes.count
-    assert parallel.edges.count == serial.edges.count
-    assert parallel.final.count == serial.final.count
-    # all element dirs written exactly once
-    import os
-    assert sorted(os.listdir(tmp_path / "par" / "nodes")) == [
-        f"element_{i:03d}" for i in range(4)
-    ]
+def _footer_rows(paths) -> int:
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
+
+
+def test_element_dirs_follow_model_order(spark, sf_dir, tmp_path, flight_server):
+    """The sink runs a phase's writes concurrently, but names them in call
+    order: ``{nodes,edges}/element_NNN`` holds the NNN-th model element of
+    its kind, and each Flight descriptor gets its element's rows."""
+    import glob
+    import re
+
+    g = tpch_graph()
+    sources = tpch_graph_sources(sf_dir)
+
+    def want(element) -> int:
+        return _footer_rows(p for p in sources if re.match(element.source, p))
+
+    out = str(tmp_path / "graph")
+    GraphLoadPipeline(spark, g, ParquetGraphSink(out)).run(sources)
+    for kind, elements in (("nodes", g.nodes), ("edges", g.edges)):
+        assert sorted(os.listdir(os.path.join(out, kind))) == [
+            f"element_{i:03d}" for i in range(len(elements))
+        ]
+        for i, element in enumerate(elements):
+            parts = glob.glob(f"{out}/{kind}/element_{i:03d}/*.parquet")
+            assert _footer_rows(parts) == want(element), (kind, i)
+
+    sink = FlightGraphSink(host="127.0.0.1", port=flight_server.port, tls=False)
+    GraphLoadPipeline(spark, g, sink).run(sources)
+    assert flight_server.rows == {
+        **{f"node/{n.source}": want(n) for n in g.nodes},
+        **{f"edge/{e.source}": want(e) for e in g.edges},
+    }
+
+
+def test_flight_load_keeps_callers_job_group(spark, sf_dir, flight_server):
+    """Planning and write threads inherit the caller's Spark local
+    properties: every job a load starts belongs to the caller's job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def probe(group: str) -> list[int]:
+        """Run a trivial action in ``group`` and return its job ids."""
+        sc.setJobGroup(group, group)
+        spark.range(1).count()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed async
+        return tracker.getJobIdsForGroup(group)
+
+    before = max(probe("job-group-before"))
+    sc.setJobGroup("graph-load", "graph load")
+    try:
+        sink = FlightGraphSink(host="127.0.0.1", port=flight_server.port, tls=False)
+        GraphLoadPipeline(spark, tpch_graph(), sink).run(tpch_graph_sources(sf_dir))
+        after = min(probe("job-group-after"))
+    finally:
+        sc.setJobGroup(None, None)
+    started = set(range(before + 1, after))
+    assert started
+    assert set(tracker.getJobIdsForGroup("graph-load")) == started
+
+
+def test_planning_error_raises_before_any_side_effect(spark, sf_dir, flight_server):
+    """Every element is planned before ``start``: an edge naming a missing
+    column fails the load before the server hears CREATE_GRAPH."""
+    import dataclasses
+
+    from pyspark.errors import AnalysisException
+
+    g = tpch_graph()
+    bad = dataclasses.replace(g.edges[-1], target_field="no_such_column")
+    g = dataclasses.replace(g, edges=(*g.edges[:-1], bad))
+    sink = FlightGraphSink(host="127.0.0.1", port=flight_server.port, tls=False)
+    with pytest.raises(AnalysisException, match="no_such_column"):
+        GraphLoadPipeline(spark, g, sink).run(tpch_graph_sources(sf_dir))
+    assert flight_server.protocol() == []
+    assert sink.action_log == []
+
+
+def test_concurrent_writers_claim_distinct_elements(spark):
+    """Writes submitted from more threads than cores, with a short switch
+    interval, each claim a distinct ``element_NNN``, and the phase barrier
+    joins every one of them."""
+    import sys
+    import threading
+
+    from dataflow_flex_pyarrow_to_gds_spark.sinks.base import PhasedGraphSink
+
+    class RecordingSink(PhasedGraphSink):
+        """Records each write's element name; runs no Spark job."""
+
+        def __init__(self):
+            super().__init__()
+            self.subs: list[str] = []
+
+        def _write(self, df, kind, element, sub):
+            self.subs.append(sub)
+            return 1, 0, {"nodeId": 0}
+
+    g = _bad_key_graph()
+    sink = RecordingSink()
+    sink.start(g)
+    df = spark.range(1)
+    n_threads, per_thread = 4 * (os.cpu_count() or 1), 5
+    results = []
+
+    def submit():
+        for _ in range(per_thread):
+            results.append(sink.write_nodes(df, g.nodes[0]))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=submit) for _ in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        sink.nodes_done()
+    finally:
+        sys.setswitchinterval(interval)
+    n = n_threads * per_thread
+    assert sorted(sink.subs) == [f"nodes/element_{i:03d}" for i in range(n)]
+    assert all(r.done() for r in results)
+    assert sum(r.count for r in results) == n
 
 
 def test_arrow_ipc_sink_roundtrip(spark, sf_dir, tmp_path):
@@ -269,27 +380,61 @@ def _bad_key_graph():
 
 @pytest.mark.parametrize(
     "make_sink",
-    [ParquetGraphSink, ArrowIPCGraphSink, lambda out: _dry_flight_sink()],
+    [
+        lambda out, server: ParquetGraphSink(out),
+        lambda out, server: ArrowIPCGraphSink(out),
+        lambda out, server: FlightGraphSink(
+            host="127.0.0.1", port=server.port, tls=False
+        ),
+    ],
     ids=["parquet", "ipc", "flight"],
 )
 @pytest.mark.parametrize("kind", ["node", "edge_target"])
-def test_sinks_reject_non_numeric_keys(spark, tmp_path, make_sink, kind):
+def test_sinks_reject_non_numeric_keys(spark, tmp_path, flight_server, make_sink, kind):
     """Every sink refuses a key that the projection's try_cast nulled —
     GDS graph keys must be numeric (reference README.md:169-170). Edges
-    check both endpoints; the bad value here is in the target."""
+    check both endpoints; the bad value here is in the target. The write
+    fails in the background and the phase barrier raises, after the
+    phase's slower healthy write has finished; the phase does not advance
+    and the Flight sink sends no phase-end action."""
     g = _bad_key_graph()
-    sink = make_sink(str(tmp_path / "out"))
+    sink = make_sink(str(tmp_path / "out"), flight_server)
     sink.start(g)
+    slow = F.udf(lambda v: time.sleep(1.5) or v, "string")
+    node, edge = g.nodes[0], g.edges[0]
+    edges = spark.createDataFrame(
+        [("1", "2"), ("2", "y"), ("3", "1")], "src string, dst string"
+    )
     if kind == "node":
-        node = g.nodes[0]
-        df = spark.createDataFrame([("1",), ("x",), ("3",)], "id string")
-        with pytest.raises(ValueError, match="must be numeric"):
-            sink.write_nodes(project_nodes(df, node), node)
+        bad = project_nodes(
+            spark.createDataFrame([("1",), ("x",), ("3",)], "id string"), node
+        )
+        good = project_nodes(
+            spark.createDataFrame([("4",)], "id string").select(slow("id").alias("id")),
+            node,
+        )
+        write, barrier, element = sink.write_nodes, sink.nodes_done, node
+        protocol = [ACTION_CREATE_GRAPH, "node"]
     else:
         sink.nodes_done()
-        edge = g.edges[0]
-        df = spark.createDataFrame(
-            [("1", "2"), ("2", "y"), ("3", "1")], "src string, dst string"
+        bad = project_edges(edges, edge)
+        good = project_edges(
+            spark.createDataFrame([("4", "5")], "src string, dst string").select(
+                "src", slow("dst").alias("dst")
+            ),
+            edge,
         )
-        with pytest.raises(ValueError, match="must be numeric"):
-            sink.write_edges(project_edges(df, edge), edge)
+        write, barrier, element = sink.write_edges, sink.edges_done, edge
+        protocol = [ACTION_CREATE_GRAPH, ACTION_NODES_DONE, "edge"]
+    write(bad, element)
+    sibling = write(good, element)
+    with pytest.raises(ValueError, match="must be numeric"):
+        barrier()
+    assert sibling.done() and sibling.count == 1
+    is_flight = isinstance(sink, FlightGraphSink)
+    assert flight_server.protocol() == (protocol if is_flight else [])
+    with pytest.raises(ValueError, match="must be numeric"):
+        barrier()  # the phase stayed put, so the barrier fails the same way
+    if kind == "node":
+        with pytest.raises(RuntimeError):
+            sink.write_edges(project_edges(edges, edge), edge)
