@@ -9,9 +9,11 @@ End-to-end lifecycle (≙ reference entry point A/B, ``pipeline.py:48-96,
    99-127``) — unmatched sources are skipped but reported,
 3. plan every element, nodes and edges, on driver threads: scan
    (projection pruned to the element's field list — Catalyst pushes it
-   into the Parquet footer read) → project/rename. The per-element schema
-   reads overlap, and a planning error (say, a missing column) raises
-   here, before the sink has sent anything,
+   into the Parquet read) → project/rename. A local Parquet source takes
+   its schema from the file footers, read once per path on the driver
+   (:mod:`~..sources.footer`), so planning starts no Spark job; other
+   sources fall back to Spark's inference. A planning error (say, a
+   missing column) raises here, before the sink has sent anything,
 4. ``sink.start()`` (≙ ``client.start()``, ``pipeline.py:56``), then
    ``sink.write_nodes`` for each node element in model order; the sink
    runs the writes concurrently, naming them ``element_NNN`` in call order,
@@ -25,10 +27,12 @@ End-to-end lifecycle (≙ reference entry point A/B, ``pipeline.py:48-96,
 
 Scale notes: each element's scan reads only matching files (plan-time
 routing = partition pruning at the file level; no rlike filter over rows)
-and only the model's columns (``ReadSchema`` in explain). Elements are
-independent Spark jobs, submitted together so the scheduler interleaves
-them; no shuffle exists anywhere in the node path (scan → narrow project
-→ write).
+and only the model's columns (``ReadSchema`` in explain). Each element is
+exactly one Spark job, its write: footer schemas replace the per-element
+inference job, and the Arrow sinks collect their per-partition tallies
+with the write. Elements are submitted together so the scheduler
+interleaves them; no shuffle exists anywhere in the node path (scan →
+narrow project → write).
 """
 
 from __future__ import annotations
@@ -44,6 +48,7 @@ from pyspark.util import inheritable_thread_target
 from ..model import Graph
 from ..operators.graph import project_edges, project_nodes, route_paths
 from ..sinks.base import GraphSink, WriteResult, sum_results
+from ..sources.footer import FooterSchemas
 
 log = logging.getLogger(__name__)
 
@@ -88,13 +93,17 @@ class GraphLoadPipeline:
         self.source_format = source_format
         self.source_options = dict(source_options or {})
 
-    def _read_paths(self, paths: list[str], fields: list[str]) -> DataFrame:
-        return (
-            self.spark.read.format(self.source_format)
-            .options(**self.source_options)
-            .load(paths)
-            .select(*fields)
+    def _read_paths(
+        self, paths: list[str], fields: list[str], footers: FooterSchemas | None
+    ) -> DataFrame:
+        """Scan ``paths`` and select ``fields``. With ``footers`` the scan
+        takes its schema from the Parquet footers where they settle it."""
+        reader = self.spark.read.format(self.source_format).options(
+            **self.source_options
         )
+        if footers is not None:
+            reader = footers.apply(reader, paths, fields)
+        return reader.load(paths).select(*fields)
 
     def _plan(self, node_jobs: list, edge_jobs: list) -> tuple[list, list]:
         """Build every ``[(element, read)]`` job's projected frame, on
@@ -151,10 +160,14 @@ class GraphLoadPipeline:
         node_map, edge_map, unmatched = route_paths(sources, self.graph)
         for src in unmatched:
             log.warning("source %s matched no model element — skipped", src)
+        footers = None
+        if self.source_format == "parquet" and not self.source_options:
+            footers = FooterSchemas(self.spark)
+        read = partial(self._read_paths, footers=footers)
         return self._load(
-            [(n, partial(self._read_paths, node_map[n]))
+            [(n, partial(read, node_map[n]))
              for n in self.graph.nodes if n in node_map],
-            [(e, partial(self._read_paths, edge_map[e]))
+            [(e, partial(read, edge_map[e]))
              for e in self.graph.edges if e in edge_map],
             GraphLoadReport(unmatched_sources=unmatched),
         )

@@ -27,7 +27,6 @@ from typing import Any, Protocol
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from ..model import Edge, Graph, Node
@@ -141,7 +140,8 @@ class PhasedGraphSink:
     write of its phase, raises the first failure in claim order, and only
     then runs its hook. A write whose key columns hold nulls fails with
     ``ValueError``. A failed write or a hook that raises leaves the phase
-    where it was.
+    where it was, and calling the barrier again raises the same failure.
+    Every barrier, failed or not, shuts the executor down.
 
     Subclasses implement ``_write(df, kind, element, sub)``, returning
     ``(count, nbytes, nulls)`` with ``nulls`` mapping each of
@@ -165,11 +165,21 @@ class PhasedGraphSink:
     def _step(self, call: str, phase: str, then: str) -> Iterator[None]:
         with self._lock:
             self._require(call, phase)
-            wait(self._pending)
-            for write in self._pending:
-                write.result()
-            yield
+            try:
+                wait(self._pending)
+                for write in self._pending:
+                    write.result()
+                yield
+            finally:
+                self._close_pool()
             self._phase, self._element_idx, self._pending = then, 0, []
+
+    def _close_pool(self) -> None:
+        """Stop the write threads once a barrier has joined every write;
+        the next write starts a new pool."""
+        if self._pool is not None:
+            self._pool.shutdown()
+            self._pool = None
 
     def start(self, graph: Graph) -> None:
         with self._step("start", "init", "nodes"):
@@ -183,8 +193,6 @@ class PhasedGraphSink:
     def edges_done(self) -> None:
         with self._step("edges_done", "edges", "done"):
             self._on_edges_done()
-        if self._pool is not None:
-            self._pool.shutdown()
 
     def _on_start(self) -> None:
         pass
@@ -293,10 +301,10 @@ def write_arrow_partitions(
     ``open_writer`` runs on the executor, once per partition, and yields
     the ``write(table)`` callable; it must open its connection or file
     there, since closures must not capture live connections (reference
-    ``_dofn.py:58``). Each partition returns one ``RESULT_SCHEMA`` row and
-    a single built-in aggregate sums them (≙ ``CombineGlobally``), so the
-    write and its telemetry take one action. Returns ``(count, nbytes,
-    nulls per key)``.
+    ``_dofn.py:58``). Each partition returns one ``RESULT_SCHEMA`` row;
+    the rows are collected and summed on the driver (≙ ``CombineGlobally``),
+    so the write and its telemetry take one Spark job. Returns ``(count,
+    nbytes, nulls per key)``.
     """
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -306,13 +314,6 @@ def write_arrow_partitions(
             {c: pa.array([tally.get(c, 0)], pa.int64()) for c in RESULT_COLUMNS}
         )
 
-    stats = (
-        df.mapInArrow(fn, RESULT_SCHEMA)
-        .agg(*(F.sum(c).alias(c) for c in RESULT_COLUMNS))
-        .first()
-    )
-    return (
-        stats["count"] or 0,
-        stats["nbytes"] or 0,
-        {k: stats[k] or 0 for k in keys},
-    )
+    rows = df.mapInArrow(fn, RESULT_SCHEMA).collect()
+    stats = {c: sum(r[c] for r in rows) for c in RESULT_COLUMNS}
+    return stats["count"], stats["nbytes"], {k: stats[k] for k in keys}

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .footer import FooterSchemas
 from .parquet import SOURCE_COL
 
 
@@ -58,7 +59,9 @@ class ParquetBackedBigQuerySource:
     """Offline stand-in: maps table names to Parquet paths.
 
     Keeps the same contract (projection + origin tagging) so the graph-load
-    plan is source-agnostic; used by tests and the local CLI.
+    plan is source-agnostic; used by tests and the local CLI. Like a
+    BigQuery read session, it learns the table's schema without a compute
+    job: from the Parquet footer, where that settles it.
     """
 
     def __init__(
@@ -72,9 +75,12 @@ class ParquetBackedBigQuerySource:
         self.source_col = source_col
 
     def table(self, name: str, fields: list[str] | None = None) -> DataFrame:
-        df = self.spark.read.parquet(self.tables[name])
+        path = self.tables[name]
         if fields:
-            df = df.select(*fields)
+            reader = FooterSchemas(self.spark).apply(self.spark.read, [path], fields)
+            df = reader.parquet(path).select(*fields)
+        else:
+            df = self.spark.read.parquet(path)
         return df.withColumn(self.source_col, F.lit(name))
 
     def table_names(self) -> list[str]:

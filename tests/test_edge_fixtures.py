@@ -3,6 +3,7 @@ unmatched sources — through the full pipeline."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from dataflow_flex_pyarrow_to_gds_spark.model import Edge, Graph, Node
@@ -149,3 +150,143 @@ def test_json_source_through_pipeline(spark, tmp_path):
         source_format="json",
     ).run([src])
     assert report.edges.count == 2
+
+
+def _plain_and_odd_table():
+    """One row group holding every footer-schema type Spark infers the
+    same whatever the session conf, plus a timestamp, an unsigned int and
+    a mixed-case name."""
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+
+    return pa.table({
+        "id": pa.array([1, 2, 3], pa.int64()),
+        "i8": pa.array([1, -2, None], pa.int8()),
+        "i16": pa.array([300, None, -3], pa.int16()),
+        "i32": pa.array([None, 7, 8], pa.int32()),
+        "f32": pa.array([1.5, None, 2.5], pa.float32()),
+        "flag": pa.array([True, False, None]),
+        "name": pa.array(["a", None, "c"]),
+        "big": pa.array(["x", "y", None], pa.large_string()),
+        "raw": pa.array([b"\x00", None, b"\xff"]),
+        "day": pa.array([datetime.date(2020, 1, 1), None, datetime.date(1999, 12, 31)]),
+        "price": pa.array(
+            [decimal.Decimal("1.25"), None, decimal.Decimal("-3.50")], pa.decimal128(9, 2)
+        ),
+        "ts": pa.array([datetime.datetime(2021, 5, 6, 7, 8, 9), None, None],
+                       pa.timestamp("us")),
+        "n": pa.array([1, 2**32 - 1, None], pa.uint32()),
+        "Score": pa.array([0.5, 1.5, None], pa.float64()),
+    })
+
+
+PLAIN = {c: c for c in ("i8", "i16", "i32", "f32", "flag", "name", "big", "raw",
+                        "day", "price", "Score")}
+
+
+@pytest.mark.parametrize(
+    "properties, footer",
+    [
+        (PLAIN, True),
+        ({"ts": "ts"}, False),  # timestamp: NTZ inference depends on a conf
+        ({"n": "n"}, False),  # unsigned
+        ({"score": "score"}, False),  # the footer spells it "Score"
+    ],
+    ids=["plain", "timestamp", "uint32", "case_mismatch"],
+)
+def test_footer_schema_load_equals_inferred(spark, tmp_path, properties, footer):
+    """A Parquet source loads the same rows and types whether its schema
+    comes from the footer or, where the footer cannot settle it, from
+    Spark's inference."""
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "typed.parquet")
+    pq.write_table(_plain_and_odd_table(), src)
+    _assert_load_equals_inferred(spark, tmp_path, [src], properties, footer)
+
+
+@pytest.mark.parametrize("shape", ["glob", "directory"])
+def test_glob_and_directory_sources_fall_back(spark, tmp_path, shape):
+    """A glob or a directory names files the driver does not list: the
+    load leaves the schema to Spark and still gets every row."""
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "many"
+    src.mkdir()
+    table = _plain_and_odd_table()
+    for i in range(2):
+        pq.write_table(table, str(src / f"part-{i}.parquet"))
+    path = str(src / "part-*.parquet") if shape == "glob" else str(src)
+    _assert_load_equals_inferred(spark, tmp_path, [path], PLAIN, footer=False)
+
+
+def _assert_load_equals_inferred(spark, tmp_path, sources, properties, footer):
+    from dataflow_flex_pyarrow_to_gds_spark.operators.graph import project_nodes
+    from dataflow_flex_pyarrow_to_gds_spark.sources.footer import FooterSchemas
+
+    node = Node(source=".*", key_field="id", properties=properties)
+    fields = node.fields()
+    out = str(tmp_path / "out")
+    pipe = GraphLoadPipeline(
+        spark, Graph(name="g", nodes=(node,)), ParquetGraphSink(out)
+    )
+    footers = FooterSchemas(spark)
+    assert (footers.schema(sources, fields) is not None) == footer
+    planned = pipe._read_paths(sources, fields, footers)
+    inferred = spark.read.parquet(*sources).select(*fields)
+    assert planned.schema == inferred.schema
+    assert sorted(map(str, planned.collect())) == sorted(map(str, inferred.collect()))
+
+    report = pipe.run(sources)
+    want = project_nodes(inferred, node)
+    assert report.nodes.count == want.count()
+    got = spark.read.parquet(f"{out}/nodes/element_000")
+    assert [f.dataType for f in got.schema] == [f.dataType for f in want.schema]
+    assert sorted(map(str, got.collect())) == sorted(map(str, want.collect()))
+
+
+def test_footer_schema_needs_agreeing_local_parquet(spark, tmp_path):
+    """The footer settles a schema only when every path is a readable
+    local Parquet file and all of them agree on the selected fields."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dataflow_flex_pyarrow_to_gds_spark.sources.footer import FooterSchemas
+
+    a, b, c = (str(tmp_path / f"{x}.parquet") for x in "abc")
+    pq.write_table(pa.table({"id": pa.array([1], pa.int64()), "x": ["s"]}), a)
+    pq.write_table(pa.table({"id": pa.array([2], pa.int64()), "x": [1.5]}), b)
+    pq.write_table(pa.table({"id": pa.array([3], pa.int32()), "x": ["t"]}), c)
+    text = tmp_path / "not.parquet"
+    text.write_text("id,x\n1,s\n")
+    dup = str(tmp_path / "dup.parquet")
+    pq.write_table(pa.table({"id": [1], "ID": [2]}), dup)
+
+    footers = FooterSchemas(spark)
+    assert footers.schema([a, b], ["id"]).simpleString() == "struct<id:bigint>"
+    assert footers.schema([a, b], ["id", "x"]) is None  # x: string vs double
+    assert footers.schema([a, c], ["id"]) is None  # id: bigint vs int
+    assert footers.schema([a], ["x", "id"]).simpleString() == "struct<x:string,id:bigint>"
+    assert footers.schema([str(tmp_path / "gone.parquet")], ["id"]) is None
+    assert footers.schema([str(text)], ["id"]) is None  # pyarrow cannot read it
+    assert footers.schema([dup], ["id"]) is None  # Spark rejects id vs ID
+    assert footers.schema([], ["id"]) is None
+
+    raw = str(tmp_path / "raw.parquet")
+    pq.write_table(pa.table({"id": [1], "r": [b"x"]}), raw)
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        assert FooterSchemas(spark).schema([raw], ["r"]) is None
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert FooterSchemas(spark).schema([raw], ["r"]).simpleString() == "struct<r:binary>"
+
+    hadoop = spark.sparkContext._jsc.hadoopConfiguration()
+    default_fs = hadoop.get("fs.defaultFS")
+    hadoop.set("fs.defaultFS", "hdfs://namenode:8020")  # schemeless paths leave the host
+    try:
+        assert FooterSchemas(spark).schema([a], ["id"]) is None
+    finally:
+        hadoop.set("fs.defaultFS", default_fs)

@@ -22,6 +22,7 @@ from dataflow_flex_pyarrow_to_gds_spark.sinks import (
     FlightGraphSink,
     ParquetGraphSink,
 )
+from dataflow_flex_pyarrow_to_gds_spark.sinks.base import WriteResult
 from dataflow_flex_pyarrow_to_gds_spark.sinks.flight_sink import (
     ACTION_CREATE_GRAPH,
     ACTION_EDGES_DONE,
@@ -193,9 +194,9 @@ def test_element_dirs_follow_model_order(spark, sf_dir, tmp_path, flight_server)
     }
 
 
-def test_flight_load_keeps_callers_job_group(spark, sf_dir, flight_server):
-    """Planning and write threads inherit the caller's Spark local
-    properties: every job a load starts belongs to the caller's job group."""
+def _jobs_started(spark, group: str, run) -> set[int]:
+    """The ids of every Spark job started while ``run()`` ran in job group
+    ``group``, whichever group the job ended up in."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
@@ -206,17 +207,102 @@ def test_flight_load_keeps_callers_job_group(spark, sf_dir, flight_server):
         sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed async
         return tracker.getJobIdsForGroup(group)
 
-    before = max(probe("job-group-before"))
-    sc.setJobGroup("graph-load", "graph load")
+    before = max(probe(f"{group}-before"))
+    sc.setJobGroup(group, group)
     try:
-        sink = FlightGraphSink(host="127.0.0.1", port=flight_server.port, tls=False)
-        GraphLoadPipeline(spark, tpch_graph(), sink).run(tpch_graph_sources(sf_dir))
-        after = min(probe("job-group-after"))
+        run()
+        after = min(probe(f"{group}-after"))
     finally:
         sc.setJobGroup(None, None)
-    started = set(range(before + 1, after))
+    return set(range(before + 1, after))
+
+
+def test_flight_load_keeps_callers_job_group(spark, sf_dir, flight_server):
+    """Planning and write threads inherit the caller's Spark local
+    properties: every job a load starts belongs to the caller's job group."""
+    sink = FlightGraphSink(host="127.0.0.1", port=flight_server.port, tls=False)
+    started = _jobs_started(
+        spark,
+        "graph-load",
+        lambda: GraphLoadPipeline(spark, tpch_graph(), sink).run(
+            tpch_graph_sources(sf_dir)
+        ),
+    )
     assert started
+    tracker = spark.sparkContext.statusTracker()
     assert set(tracker.getJobIdsForGroup("graph-load")) == started
+
+
+@pytest.mark.parametrize("sink_kind", ["flight", "parquet"])
+def test_load_runs_one_job_per_element(spark, sf_dir, tmp_path, flight_server, sink_kind):
+    """A load's Spark jobs are its element writes and nothing else: the
+    schemas come from the Parquet footers, and an Arrow write collects
+    its tally with the write, not in a second job."""
+    from dataflow_flex_pyarrow_to_gds_spark.sources.bigquery import (
+        ParquetBackedBigQuerySource,
+    )
+
+    def make_sink(out: str):
+        if sink_kind == "flight":
+            return FlightGraphSink(host="127.0.0.1", port=flight_server.port, tls=False)
+        return ParquetGraphSink(str(tmp_path / out))
+
+    g = tpch_graph()
+    started = _jobs_started(
+        spark,
+        f"census-{sink_kind}",
+        lambda: GraphLoadPipeline(spark, g, make_sink("paths")).run(
+            tpch_graph_sources(sf_dir)
+        ),
+    )
+    assert len(started) == len(g.nodes) + len(g.edges) == 6
+
+    source = ParquetBackedBigQuerySource(
+        spark, {t: f"{sf_dir}/{t}.parquet" for t in ("customer", "orders")}
+    )
+    started = _jobs_started(
+        spark,
+        f"census-tables-{sink_kind}",
+        lambda: GraphLoadPipeline(spark, _table_graph(), make_sink("tables")).run_tables(
+            source, node_tables=["customer"], edge_tables=["orders"]
+        ),
+    )
+    assert len(started) == 2
+
+
+def test_footer_schemas_match_inference(spark, sf_dir, monkeypatch):
+    """Every tpch_graph element's scan, planned from the Parquet footers,
+    has the schema and rows of Spark's inferred read; a load reads each
+    distinct source footer once, though orders backs two elements."""
+    import pyarrow.parquet as pq
+
+    from dataflow_flex_pyarrow_to_gds_spark.operators.graph import route_paths
+    from dataflow_flex_pyarrow_to_gds_spark.sources import footer
+    from dataflow_flex_pyarrow_to_gds_spark.sources.footer import FooterSchemas
+
+    g = tpch_graph()
+    node_map, edge_map, _ = route_paths(tpch_graph_sources(sf_dir), g)
+    pipe = GraphLoadPipeline(spark, g, _dry_flight_sink())
+    footers = FooterSchemas(spark)
+    for element, paths in [*node_map.items(), *edge_map.items()]:
+        fields = element.fields()
+        assert footers.schema(paths, fields) is not None, element.source
+        planned = pipe._read_paths(paths, fields, footers)
+        inferred = spark.read.parquet(*paths).select(*fields)
+        assert planned.schema == inferred.schema, element.source
+        assert sorted(planned.collect()) == sorted(inferred.collect())
+
+    reads: list[str] = []
+    real_read_schema = pq.read_schema
+
+    def read_schema(path):
+        reads.append(path)
+        return real_read_schema(path)
+
+    monkeypatch.setattr(footer.pq, "read_schema", read_schema)
+    pipe.run(tpch_graph_sources(sf_dir))
+    routed = {p for ps in [*node_map.values(), *edge_map.values()] for p in ps}
+    assert sorted(reads) == sorted(routed)
 
 
 def test_planning_error_raises_before_any_side_effect(spark, sf_dir, flight_server):
@@ -310,18 +396,11 @@ def test_arrow_ipc_sink_roundtrip(spark, sf_dir, tmp_path):
     assert total == report.nodes.count
 
 
-def test_run_tables_with_bq_fake_source(spark, sf_dir, tmp_path, flight_server):
-    """Table-name mode (≙ --mode bigquery) through the FULL pipeline:
-    ParquetBackedBigQuerySource → per-table model lookup + projection →
-    phase-ordered sink writes; unmatched tables reported, not fatal. The
-    same load through FlightGraphSink reaches a live server in protocol
-    order."""
+def _table_graph():
+    """A one-node, one-edge model over table names (``--mode bigquery``)."""
     from dataflow_flex_pyarrow_to_gds_spark.model import Edge as E, Graph as G, Node as N
-    from dataflow_flex_pyarrow_to_gds_spark.sources.bigquery import (
-        ParquetBackedBigQuerySource,
-    )
 
-    g = G(
+    return G(
         name="bqfake",
         db="neo4j",
         nodes=(
@@ -333,6 +412,19 @@ def test_run_tables_with_bq_fake_source(spark, sf_dir, tmp_path, flight_server):
               target_field="o_orderkey"),
         ),
     )
+
+
+def test_run_tables_with_bq_fake_source(spark, sf_dir, tmp_path, flight_server):
+    """Table-name mode (≙ --mode bigquery) through the FULL pipeline:
+    ParquetBackedBigQuerySource → per-table model lookup + projection →
+    phase-ordered sink writes; unmatched tables reported, not fatal. The
+    same load through FlightGraphSink reaches a live server in protocol
+    order."""
+    from dataflow_flex_pyarrow_to_gds_spark.sources.bigquery import (
+        ParquetBackedBigQuerySource,
+    )
+
+    g = _table_graph()
     src = ParquetBackedBigQuerySource(
         spark,
         {t: f"{sf_dir}/{t}.parquet" for t in ("customer", "orders", "nation")},
@@ -438,3 +530,73 @@ def test_sinks_reject_non_numeric_keys(spark, tmp_path, flight_server, make_sink
     if kind == "node":
         with pytest.raises(RuntimeError):
             sink.write_edges(project_edges(edges, edge), edge)
+
+
+def _sink_threads() -> set:
+    import threading
+
+    return {t for t in threading.enumerate() if t.name.startswith("graph-sink")}
+
+
+@pytest.mark.parametrize("phase", ["nodes", "edges"])
+def test_failed_barrier_stops_sink_threads(spark, sf_dir, tmp_path, phase):
+    """A load whose barrier fails leaves no sink write thread behind, and
+    calling the barrier again raises the same failure."""
+    import dataclasses
+
+    g = tpch_graph()
+    if phase == "nodes":  # a string key column: the node barrier fails
+        g = dataclasses.replace(
+            g, nodes=(dataclasses.replace(g.nodes[0], key_field="c_name"),
+                      *g.nodes[1:]),
+        )
+    else:
+        g = dataclasses.replace(
+            g, edges=(dataclasses.replace(g.edges[0], source_field="o_orderstatus"),
+                      *g.edges[1:]),
+        )
+    before = _sink_threads()
+    sink = ArrowIPCGraphSink(str(tmp_path / "ipc"))
+    with pytest.raises(ValueError, match="must be numeric") as failed:
+        GraphLoadPipeline(spark, g, sink).run(tpch_graph_sources(sf_dir))
+    assert _sink_threads() <= before
+    barrier = sink.nodes_done if phase == "nodes" else sink.edges_done
+    with pytest.raises(ValueError) as again:
+        barrier()
+    assert again.value is failed.value
+    assert _sink_threads() <= before
+
+
+@pytest.mark.parametrize("partitions", [0, 2])
+@pytest.mark.parametrize("sink_kind", ["ipc", "flight"])
+def test_arrow_sinks_write_zero_rows(spark, tmp_path, flight_server, sink_kind, partitions):
+    """An empty element writes ``WriteResult(0, 0, kind)`` and passes its
+    barrier, whether it has no partition (nothing to collect) or only
+    empty ones."""
+    g = _bad_key_graph()
+    if sink_kind == "ipc":
+        sink = ArrowIPCGraphSink(str(tmp_path / "ipc"))
+    else:
+        sink = FlightGraphSink(host="127.0.0.1", port=flight_server.port, tls=False)
+    if partitions:
+        df = spark.range(0, 4, 1, partitions).where("id > 9").selectExpr(
+            "cast(id as string) as id", "cast(id as string) as src",
+            "cast(id as string) as dst",
+        )
+    else:
+        df = spark.createDataFrame(
+            spark.sparkContext.emptyRDD(), "id string, src string, dst string"
+        )
+    assert df.rdd.getNumPartitions() == partitions
+    sink.start(g)
+    nodes = sink.write_nodes(project_nodes(df, g.nodes[0]), g.nodes[0])
+    sink.nodes_done()
+    edges = sink.write_edges(project_edges(df, g.edges[0]), g.edges[0])
+    sink.edges_done()
+    assert nodes == WriteResult(0, 0, "node")
+    assert edges == WriteResult(0, 0, "edge")
+    if sink_kind == "flight":
+        assert flight_server.rows == {}
+        assert flight_server.protocol() == [
+            ACTION_CREATE_GRAPH, ACTION_NODES_DONE, ACTION_EDGES_DONE,
+        ]
