@@ -15,7 +15,8 @@ Neo4j GDS — see ``/root/reference/pipeline.py``), rebuilt Spark-first:
   ``pipeline.py:68-87``) is the sink's phase barrier: a phase's element
   writes run concurrently and ``nodes_done``/``edges_done`` join them;
 - sinks are pluggable: GDS-ready Parquet graph export (offline-testable)
-  and an Arrow Flight writer skeleton.
+  and the Arrow Flight sink, which PUTs each element to GDS and sends the
+  lifecycle actions in protocol order.
 
 Beyond reference parity, the engine adds large-scale training-data pipeline
 operators: deduplication (exact / MinHash-LSH / SimHash / n-gram Jaccard /

@@ -16,7 +16,10 @@ deliberate:
 - the Flex-template parameter regexes (``metadata_*.json:4-82``) reduce to
   ``.+``/``[0-9]+``/``gs://.+`` — argparse's ``type=int``/``required``
   subsume the first two, and the gs:// restriction is deliberately NOT
-  reproduced (local/any-FS paths are first-class here).
+  reproduced (local/any-FS paths are first-class here);
+- ``--neo4j_user``, ``--neo4j_password`` and ``--neo4j_concurrency`` are
+  not accepted: the Flight sink sends no credentials and sets no
+  server-side concurrency, so the flags would be silently ignored.
 
 Run: ``python -m dataflow_flex_pyarrow_to_gds_spark.cli --mode gcs
 --graph_json model.json --node_pattern 'data/nodes*.parquet'
@@ -37,6 +40,14 @@ from .sinks.parquet_sink import ParquetGraphSink
 from .sources.bigquery import ParquetBackedBigQuerySource
 
 
+def _key_value(text: str) -> tuple[str, str]:
+    """Parse one ``K=V`` option; a malformed one is a usage error."""
+    key, sep, value = text.partition("=")
+    if not sep or not key:
+        raise argparse.ArgumentTypeError(f"expected K=V, got {text!r}")
+    return key, value
+
+
 def build_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(description="Graph loader (PySpark)")
     # general params (≙ pipeline.py:186-207)
@@ -47,17 +58,15 @@ def build_parser() -> argparse.ArgumentParser:
     parser.add_argument("--neo4j_host", default="localhost")
     parser.add_argument("--neo4j_port", default=8491, type=int)
     parser.add_argument("--neo4j_use_tls", default="True", type=strtobool)
-    parser.add_argument("--neo4j_user", default="neo4j")
-    parser.add_argument("--neo4j_password", default="")
     parser.add_argument("--neo4j_database", default="neo4j")
-    parser.add_argument("--neo4j_concurrency", default=4, type=int)
     # gcs params (≙ pipeline.py:241-260): parquet globs
     parser.add_argument("--node_pattern", action="append", default=[])
     parser.add_argument("--edge_pattern", action="append", default=[])
     parser.add_argument("--source_format", default="parquet",
                         choices=["parquet", "orc", "csv", "json"])
     parser.add_argument("--source_option", action="append", default=[],
-                        metavar="K=V", help="reader option, repeatable")
+                        type=_key_value, metavar="K=V",
+                        help="reader option, repeatable")
     # bigquery params (≙ pipeline.py:261-291)
     parser.add_argument("--bq_project", default="")
     parser.add_argument("--bq_dataset", default="")
@@ -98,10 +107,10 @@ def main(argv: list[str] | None = None) -> int:
         print(f"error: invalid graph model: {exc}", file=sys.stderr)
         return 2
     spark = get_spark(app_name=f"graph-load-{graph.name}")
-    opts = dict(kv.split("=", 1) for kv in args.source_option)
     pipe = GraphLoadPipeline(
         spark, graph, make_sink(args),
-        source_format=args.source_format, source_options=opts,
+        source_format=args.source_format,
+        source_options=dict(args.source_option),
     )
 
     if args.mode == "gcs":

@@ -29,7 +29,7 @@ Scale notes: each element's scan reads only matching files (plan-time
 routing = partition pruning at the file level; no rlike filter over rows)
 and only the model's columns (``ReadSchema`` in explain). Each element is
 exactly one Spark job, its write: footer schemas replace the per-element
-inference job, and the Arrow sinks collect their per-partition tallies
+inference job, and the Flight sink collects its per-partition tallies
 with the write. Elements are submitted together so the scheduler
 interleaves them; no shuffle exists anywhere in the node path (scan →
 narrow project → write).

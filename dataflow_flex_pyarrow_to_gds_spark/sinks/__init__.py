@@ -1,6 +1,5 @@
 from .base import GraphSink, WriteResult, sum_results
 from .parquet_sink import ParquetGraphSink
-from .arrow_ipc_sink import ArrowIPCGraphSink
 from .flight_sink import FlightGraphSink
 
 __all__ = [
@@ -8,6 +7,5 @@ __all__ = [
     "WriteResult",
     "sum_results",
     "ParquetGraphSink",
-    "ArrowIPCGraphSink",
     "FlightGraphSink",
 ]

@@ -1,4 +1,5 @@
-"""Sink protocol, the phase-ordered load core, and the Arrow write path.
+"""Sink protocol, the phase-ordered load core, and the Flight sink's
+Arrow write path.
 
 Mirrors the reference's sink lifecycle and result model:
 
@@ -13,12 +14,14 @@ Mirrors the reference's sink lifecycle and result model:
 :class:`PhasedGraphSink` owns everything the sinks share: the phase
 checks, the ``{nodes,edges}/element_NNN`` naming, the write executor and
 the numeric-key check (reference ``README.md:169-170``). A concrete sink
-supplies only its lifecycle hooks and one ``_write``.
+supplies only its lifecycle hooks and one ``_write``. There are two:
+:class:`~.parquet_sink.ParquetGraphSink`, the offline export, and
+:class:`~.flight_sink.FlightGraphSink`, which streams through
+:func:`write_arrow_partitions`.
 """
 
 from __future__ import annotations
 
-import os
 import threading
 from collections.abc import Callable, Iterator
 from concurrent.futures import Future, ThreadPoolExecutor, wait
@@ -239,13 +242,6 @@ class PhasedGraphSink:
         raise NotImplementedError
 
 
-def write_model(out_dir: str, graph: Graph) -> None:
-    """Create an export directory holding the graph model as ``model.json``."""
-    os.makedirs(out_dir, exist_ok=True)
-    with open(os.path.join(out_dir, "model.json"), "w") as f:
-        f.write(graph.to_json())
-
-
 def coalesce_batches(
     batches: Iterator[pa.RecordBatch], chunk_rows: int = DEFAULT_CHUNK_ROWS
 ) -> Iterator[pa.Table]:
@@ -266,52 +262,37 @@ def coalesce_batches(
         yield pa.Table.from_batches(buf)
 
 
-def write_tables(
-    batches: Iterator[pa.RecordBatch],
-    chunk_rows: int,
-    write: Callable[[pa.Table], None],
-    keys: tuple[str, ...] = (),
-) -> dict[str, int]:
-    """Coalesce ``batches`` into ≥chunk_rows tables and ``write`` each.
-
-    Returns the totals ``count`` (rows), ``nbytes`` (Arrow bytes),
-    ``writes`` (tables written) and, per column in ``keys``, its null
-    count — read from Arrow's ``null_count``, so the key check costs no
-    extra pass.
-    """
-    tally = dict.fromkeys(("count", "nbytes", "writes", *keys), 0)
-    for table in coalesce_batches(batches, chunk_rows):
-        write(table)
-        tally["count"] += table.num_rows
-        tally["nbytes"] += table.nbytes
-        tally["writes"] += 1
-        for k in keys:
-            tally[k] += table.column(k).null_count
-    return tally
-
-
 def write_arrow_partitions(
     df: DataFrame,
     keys: tuple[str, ...],
     chunk_rows: int,
     open_writer: Callable[[], AbstractContextManager[Callable[[pa.Table], None]]],
 ) -> tuple[int, int, dict[str, int]]:
-    """Write every partition of ``df`` as coalesced Arrow tables.
+    """Write every partition of ``df`` as coalesced Arrow tables (the
+    Flight sink's data path).
 
     ``open_writer`` runs on the executor, once per partition, and yields
-    the ``write(table)`` callable; it must open its connection or file
-    there, since closures must not capture live connections (reference
-    ``_dofn.py:58``). Each partition returns one ``RESULT_SCHEMA`` row;
-    the rows are collected and summed on the driver (≙ ``CombineGlobally``),
-    so the write and its telemetry take one Spark job. Returns ``(count,
-    nbytes, nulls per key)``.
+    the ``write(table)`` callable; it must open its connection there,
+    since closures must not capture live connections (reference
+    ``_dofn.py:58``). Each partition returns one ``RESULT_SCHEMA`` row:
+    its rows, Arrow bytes and the null count of each column in ``keys``,
+    read from Arrow's ``null_count`` so the key check costs no extra
+    pass. The rows are collected and summed on the driver
+    (≙ ``CombineGlobally``), so the write and its telemetry take one Spark
+    job. Returns ``(count, nbytes, nulls per key)``.
     """
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        tally = dict.fromkeys(RESULT_COLUMNS, 0)
         with open_writer() as write:
-            tally = write_tables(batches, chunk_rows, write, keys)
+            for table in coalesce_batches(batches, chunk_rows):
+                write(table)
+                tally["count"] += table.num_rows
+                tally["nbytes"] += table.nbytes
+                for k in keys:
+                    tally[k] += table.column(k).null_count
         yield pa.RecordBatch.from_pydict(
-            {c: pa.array([tally.get(c, 0)], pa.int64()) for c in RESULT_COLUMNS}
+            {c: pa.array([n], pa.int64()) for c, n in tally.items()}
         )
 
     rows = df.mapInArrow(fn, RESULT_SCHEMA).collect()

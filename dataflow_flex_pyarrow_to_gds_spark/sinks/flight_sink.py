@@ -7,7 +7,7 @@ custom executor-side operator the reference surface requires (SURVEY §4):
 
 - the driver sends the three GDS lifecycle actions (CREATE_GRAPH,
   NODE_LOAD_DONE, RELATIONSHIP_LOAD_DONE) as ``do_action`` RPCs;
-- each element streams through the shared Arrow write path
+- each element streams through the Arrow write path
   (:func:`~.base.write_arrow_partitions`): every partition opens its own
   Flight client on the executor (closures must not capture live
   connections — the same discipline as the reference's ``client.copy()``

@@ -21,7 +21,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .base import KEYS, PhasedGraphSink, write_model
+from .base import KEYS, PhasedGraphSink
 
 
 def _dir_bytes(path: str) -> int:
@@ -39,7 +39,9 @@ class ParquetGraphSink(PhasedGraphSink):
         self.out_dir = out_dir
 
     def _on_start(self) -> None:
-        write_model(self.out_dir, self.graph)
+        os.makedirs(self.out_dir, exist_ok=True)
+        with open(os.path.join(self.out_dir, "model.json"), "w") as f:
+            f.write(self.graph.to_json())
 
     def _write(self, df: DataFrame, kind: str, element: Any, sub: str):
         path = os.path.join(self.out_dir, sub)

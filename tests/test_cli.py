@@ -22,13 +22,13 @@ def _restore_session_conf(spark):
             spark.conf.set(k, v)
 
 
-def _write_model(tmp_path):
+def _model_file(tmp_path):
     p = tmp_path / "model.json"
     p.write_text(tpch_graph().to_json())
     return str(p)
 
 
-def _write_table_model(tmp_path):
+def _table_model_file(tmp_path):
     model = {
         "name": "tbl",
         "db": "neo4j",
@@ -51,7 +51,7 @@ def test_cli_gcs_mode(spark, sf_dir, tmp_path, capsys):
     rc = main(
         [
             "--mode", "gcs",
-            "--graph_json", _write_model(tmp_path),
+            "--graph_json", _model_file(tmp_path),
             "--node_pattern", f"{sf_dir}/customer.parquet",
             "--node_pattern", f"{sf_dir}/orders.parquet",
             "--edge_pattern", f"{sf_dir}/lineitem.parquet",
@@ -78,7 +78,7 @@ def test_cli_flight_sink_delivers_to_server(
     rc = main(
         [
             "--mode", "gcs",
-            "--graph_json", _write_model(tmp_path),
+            "--graph_json", _model_file(tmp_path),
             "--node_pattern", f"{sf_dir}/customer.parquet",
             "--node_pattern", f"{sf_dir}/orders.parquet",
             "--edge_pattern", f"{sf_dir}/lineitem.parquet",
@@ -111,7 +111,7 @@ def test_cli_bigquery_fake_mode(spark, sf_dir, tmp_path, capsys):
     rc = main(
         [
             "--mode", "bigquery",
-            "--graph_json", _write_table_model(tmp_path),
+            "--graph_json", _table_model_file(tmp_path),
             "--node_tables", "customer",
             "--edge_tables", "orders",
             "--bq_fake_dataset", sf_dir,
@@ -126,6 +126,43 @@ def test_cli_bigquery_fake_mode(spark, sf_dir, tmp_path, capsys):
 
 
 def test_cli_missing_patterns_is_usage_error(tmp_path, capsys):
-    rc = main(["--mode", "gcs", "--graph_json", _write_model(tmp_path)])
+    rc = main(["--mode", "gcs", "--graph_json", _model_file(tmp_path)])
     assert rc == 2
     assert "node_pattern" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        ["--source_option", "header"],
+        ["--source_option", "=true"],
+        ["--neo4j_user", "neo4j"],
+        ["--neo4j_password", "secret"],
+        ["--neo4j_concurrency", "4"],
+    ],
+    ids=["option_no_eq", "option_no_key", "neo4j_user", "neo4j_password",
+         "neo4j_concurrency"],
+)
+def test_cli_bad_flag_is_usage_error_before_spark(
+    sf_dir, tmp_path, capsys, monkeypatch, bad
+):
+    """A malformed ``--source_option`` or a removed flag exits 2 from
+    argparse, before any Spark session is asked for."""
+    from dataflow_flex_pyarrow_to_gds_spark import cli
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("get_spark() called for a bad command line")
+
+    monkeypatch.setattr(cli, "get_spark", no_spark)
+    with pytest.raises(SystemExit) as exit_:
+        main(
+            [
+                "--graph_json", _model_file(tmp_path),
+                "--node_pattern", f"{sf_dir}/customer.parquet",
+                "--output_dir", str(tmp_path / "out"),
+                *bad,
+            ]
+        )
+    assert exit_.value.code == 2
+    err = capsys.readouterr().err
+    assert bad[0] in err

@@ -6,7 +6,6 @@ import threading
 
 import pyarrow as pa
 import pyarrow.flight as flight
-import pytest
 
 from dataflow_flex_pyarrow_to_gds_spark.examples import tpch_graph
 from dataflow_flex_pyarrow_to_gds_spark.operators.graph import project_nodes
@@ -92,100 +91,6 @@ def test_flight_chunking_respects_chunk_rows(spark, sf_dir, flight_server):
     sink.nodes_done()
     sink.edges_done()
     assert res.count == spark.read.parquet(src).count()
-
-
-def test_flight_python_datasource_writer(spark, sf_dir, flight_server):
-    """df.write.format('gds_flight') — the PySpark 4 Python DataSource
-    writer streams partitions to the live server (same wire behavior as
-    FlightGraphSink, exposed through the idiomatic V2 API)."""
-    from dataflow_flex_pyarrow_to_gds_spark.sinks.flight_datasource import (
-        GDSFlightDataSource,
-    )
-
-    location = f"grpc://127.0.0.1:{flight_server.port}"
-    spark.dataSource.register(GDSFlightDataSource)
-    df = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    (
-        df.write.format("gds_flight")
-        .option("location", location)
-        .option("path", "node/customer_ds")
-        .option("chunk_rows", "500")
-        .mode("append")
-        .save()
-    )
-    assert flight_server.rows.get("node/customer_ds") == df.count()
-
-    with pytest.raises(Exception, match="append"):
-        (
-            df.write.format("gds_flight")
-            .option("location", location)
-            .mode("overwrite")
-            .save()
-        )
-
-
-class ServingFlightServer(flight.FlightServerBase):
-    """Serves a pyarrow Table split into N endpoints (tickets = row
-    ranges) — exercises the reader's endpoint→partition planning."""
-
-    def __init__(self, table: pa.Table, n_endpoints: int = 4):
-        super().__init__("grpc://127.0.0.1:0")
-        self.table = table
-        self.n = n_endpoints
-
-    def _ranges(self):
-        total = self.table.num_rows
-        step = (total + self.n - 1) // self.n
-        return [(i, min(step, total - i)) for i in range(0, total, step)]
-
-    def get_flight_info(self, context, descriptor):
-        import json
-
-        endpoints = [
-            flight.FlightEndpoint(
-                json.dumps([start, length]).encode(),
-                [f"grpc://127.0.0.1:{self.port}"],
-            )
-            for start, length in self._ranges()
-        ]
-        return flight.FlightInfo(
-            self.table.schema, descriptor, endpoints, self.table.num_rows, -1
-        )
-
-    def do_get(self, context, ticket):
-        import json
-
-        start, length = json.loads(ticket.ticket.decode())
-        return flight.RecordBatchStream(self.table.slice(start, length))
-
-
-def test_flight_python_datasource_reader_roundtrip(spark, sf_dir):
-    """spark.read.format('gds_flight'): schema from get_flight_info, one
-    Spark partition per Flight endpoint, values identical to the source."""
-    from dataflow_flex_pyarrow_to_gds_spark.sinks.flight_datasource import (
-        GDSFlightDataSource,
-    )
-
-    src = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    table = pa.Table.from_pandas(src.toPandas())
-    server = ServingFlightServer(table, n_endpoints=4)
-    t = threading.Thread(target=server.serve, daemon=True)
-    t.start()
-    try:
-        spark.dataSource.register(GDSFlightDataSource)
-        got = (
-            spark.read.format("gds_flight")
-            .option("location", f"grpc://127.0.0.1:{server.port}")
-            .option("path", "nation")
-            .load()
-        )
-        assert got.rdd.getNumPartitions() == 4  # endpoint → partition
-        assert sorted(got.columns) == sorted(src.columns)
-        a = {tuple(r) for r in got.collect()}
-        b = {tuple(r) for r in src.collect()}
-        assert a == b
-    finally:
-        server.shutdown()
 
 
 class RetainingFlightServer(flight.FlightServerBase):

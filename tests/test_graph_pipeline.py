@@ -17,11 +17,7 @@ from dataflow_flex_pyarrow_to_gds_spark.operators.edge_resolution import (
     resolve_edges,
 )
 from dataflow_flex_pyarrow_to_gds_spark.plans import GraphLoadPipeline
-from dataflow_flex_pyarrow_to_gds_spark.sinks import (
-    ArrowIPCGraphSink,
-    FlightGraphSink,
-    ParquetGraphSink,
-)
+from dataflow_flex_pyarrow_to_gds_spark.sinks import FlightGraphSink, ParquetGraphSink
 from dataflow_flex_pyarrow_to_gds_spark.sinks.base import WriteResult
 from dataflow_flex_pyarrow_to_gds_spark.sinks.flight_sink import (
     ACTION_CREATE_GRAPH,
@@ -371,31 +367,6 @@ def test_concurrent_writers_claim_distinct_elements(spark):
     assert sum(r.count for r in results) == n
 
 
-def test_arrow_ipc_sink_roundtrip(spark, sf_dir, tmp_path):
-    """Arrow IPC export: batches stream to .arrows files on executors and
-    read back with pyarrow, columnar end-to-end."""
-    import glob
-
-    import pyarrow as pa
-
-    out = str(tmp_path / "ipc")
-    report = GraphLoadPipeline(
-        spark, tpch_graph(), ArrowIPCGraphSink(out, chunk_rows=500)
-    ).run(tpch_graph_sources(sf_dir))
-    n_customer = spark.read.parquet(f"{sf_dir}/customer.parquet").count()
-    assert report.nodes.count > n_customer  # all 4 node elements written
-
-    total = 0
-    files = glob.glob(f"{out}/nodes/*/part-*.arrows")
-    assert files
-    for f in files:
-        with pa.ipc.open_stream(f) as reader:
-            t = reader.read_all()
-            total += t.num_rows
-            assert "nodeId" in t.schema.names
-    assert total == report.nodes.count
-
-
 def _table_graph():
     """A one-node, one-edge model over table names (``--mode bigquery``)."""
     from dataflow_flex_pyarrow_to_gds_spark.model import Edge as E, Graph as G, Node as N
@@ -474,12 +445,11 @@ def _bad_key_graph():
     "make_sink",
     [
         lambda out, server: ParquetGraphSink(out),
-        lambda out, server: ArrowIPCGraphSink(out),
         lambda out, server: FlightGraphSink(
             host="127.0.0.1", port=server.port, tls=False
         ),
     ],
-    ids=["parquet", "ipc", "flight"],
+    ids=["parquet", "flight"],
 )
 @pytest.mark.parametrize("kind", ["node", "edge_target"])
 def test_sinks_reject_non_numeric_keys(spark, tmp_path, flight_server, make_sink, kind):
@@ -539,7 +509,7 @@ def _sink_threads() -> set:
 
 
 @pytest.mark.parametrize("phase", ["nodes", "edges"])
-def test_failed_barrier_stops_sink_threads(spark, sf_dir, tmp_path, phase):
+def test_failed_barrier_stops_sink_threads(spark, sf_dir, flight_server, phase):
     """A load whose barrier fails leaves no sink write thread behind, and
     calling the barrier again raises the same failure."""
     import dataclasses
@@ -556,7 +526,7 @@ def test_failed_barrier_stops_sink_threads(spark, sf_dir, tmp_path, phase):
                       *g.edges[1:]),
         )
     before = _sink_threads()
-    sink = ArrowIPCGraphSink(str(tmp_path / "ipc"))
+    sink = FlightGraphSink(host="127.0.0.1", port=flight_server.port, tls=False)
     with pytest.raises(ValueError, match="must be numeric") as failed:
         GraphLoadPipeline(spark, g, sink).run(tpch_graph_sources(sf_dir))
     assert _sink_threads() <= before
@@ -568,16 +538,12 @@ def test_failed_barrier_stops_sink_threads(spark, sf_dir, tmp_path, phase):
 
 
 @pytest.mark.parametrize("partitions", [0, 2])
-@pytest.mark.parametrize("sink_kind", ["ipc", "flight"])
-def test_arrow_sinks_write_zero_rows(spark, tmp_path, flight_server, sink_kind, partitions):
+def test_flight_sink_writes_zero_rows(spark, flight_server, partitions):
     """An empty element writes ``WriteResult(0, 0, kind)`` and passes its
     barrier, whether it has no partition (nothing to collect) or only
-    empty ones."""
+    empty ones; the server sees the actions and no PUT."""
     g = _bad_key_graph()
-    if sink_kind == "ipc":
-        sink = ArrowIPCGraphSink(str(tmp_path / "ipc"))
-    else:
-        sink = FlightGraphSink(host="127.0.0.1", port=flight_server.port, tls=False)
+    sink = FlightGraphSink(host="127.0.0.1", port=flight_server.port, tls=False)
     if partitions:
         df = spark.range(0, 4, 1, partitions).where("id > 9").selectExpr(
             "cast(id as string) as id", "cast(id as string) as src",
@@ -595,8 +561,7 @@ def test_arrow_sinks_write_zero_rows(spark, tmp_path, flight_server, sink_kind, 
     sink.edges_done()
     assert nodes == WriteResult(0, 0, "node")
     assert edges == WriteResult(0, 0, "edge")
-    if sink_kind == "flight":
-        assert flight_server.rows == {}
-        assert flight_server.protocol() == [
-            ACTION_CREATE_GRAPH, ACTION_NODES_DONE, ACTION_EDGES_DONE,
-        ]
+    assert flight_server.rows == {}
+    assert flight_server.protocol() == [
+        ACTION_CREATE_GRAPH, ACTION_NODES_DONE, ACTION_EDGES_DONE,
+    ]
