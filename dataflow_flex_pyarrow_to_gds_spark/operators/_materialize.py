@@ -32,29 +32,47 @@ default disable auto-broadcast equally; every deliberate broadcast in
 this repo is an explicit ``F.broadcast`` hint, which stats never
 override.
 
+:func:`materialize_count` makes the materializing action a ``count()``
+and returns it; with ``where=`` it returns instead the number of rows
+matching a predicate, read from a ``df.observe`` metric of that same
+job (``queryExecution().observedMetrics()``). That is how a fixpoint
+loop learns how many rows changed (or are still open) without a probe
+job of its own.
+
 ``internalCreateDataFrame`` is ``private[sql]`` in Scala, which
 compiles to a public JVM method — reachable from py4j, but a Spark
 upgrade could move it, so the helper degrades LOUDLY-BUT-SOFTLY: one
 ``warnings.warn`` per process and plain localCheckpoint behavior
-(correct, just re-exposed to the compounding pathology).
+(correct, just re-exposed to the compounding pathology; a ``where=``
+count then costs a ``filter(where).count()`` job).
 """
 
 from __future__ import annotations
 
+import uuid
 import warnings
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 _WARNED = False
 
 
-def _checkpoint(df: DataFrame, count: bool) -> tuple[DataFrame, int | None]:
+def _checkpoint(
+    df: DataFrame, count: bool, where: Column | None = None
+) -> tuple[DataFrame, int | None]:
     """The one private-API block behind :func:`materialize` and
     :func:`materialize_count`: localCheckpoint ``df`` (eagerly, unless a
     ``count()`` is to be the materializing action) and re-wrap the
     checkpointed RDD in a fresh, stats-free ``LogicalRDD``. Returns the
-    frame and the row count (None unless ``count``)."""
+    frame and the row count (None unless ``count``) — or, given
+    ``where``, the count of rows matching it, observed inside the same
+    job."""
     global _WARNED
+    name = None
+    if where is not None:
+        name = f"materialize_count_{uuid.uuid4().hex}"  # unique per plan
+        df = df.observe(name, F.count_if(where))
     # eager=False: Dataset.localCheckpoint row-COPIES the internal RDD
     # (UnsafeRows are buffer-reused per partition — caching them
     # un-copied aliases every row in a partition to the last one) and
@@ -66,6 +84,11 @@ def _checkpoint(df: DataFrame, count: bool) -> tuple[DataFrame, int | None]:
         spark = ck.sparkSession
         jrdd = jdf.queryExecution().toRdd()
         n = int(jrdd.count()) if count else None  # count for free
+        if name is not None:
+            # the count job ran the observed plan, so its CollectMetrics
+            # accumulator holds the final count_if(where)
+            metrics = df._jdf.queryExecution().observedMetrics()
+            n = int(metrics.apply(name).getLong(0))
         fresh = spark._jsparkSession.internalCreateDataFrame(
             jrdd, jdf.schema(), False
         )
@@ -86,10 +109,12 @@ def _checkpoint(df: DataFrame, count: bool) -> tuple[DataFrame, int | None]:
         if not count:
             return ck, None
         ck = df.localCheckpoint(eager=True)
-        return ck, ck.count()
+        return ck, (ck if where is None else ck.filter(where)).count()
 
 
-def materialize_count(df: DataFrame) -> tuple[DataFrame, int]:
+def materialize_count(
+    df: DataFrame, where: Column | None = None
+) -> tuple[DataFrame, int]:
     """:func:`materialize`, but the action that materializes the
     checkpoint IS a ``count()`` whose value is returned — ONE Spark job
     for checkpoint + row count instead of the two an iterative loop
@@ -98,10 +123,17 @@ def materialize_count(df: DataFrame) -> tuple[DataFrame, int]:
     round, and in local mode per-job overhead is the floor cost of
     every iterative operator).
 
+    Given ``where`` (a boolean Column over ``df``), the returned count
+    is the number of rows matching it instead — ``count_if(where)``
+    observed (``df.observe``) inside that same job, so a fixpoint loop
+    learns "how many rows changed / are still open" from its checkpoint
+    job rather than from a ``filter(flag).limit(1).count()`` probe of
+    one or two more jobs per round.
+
     Same stats/lineage truncation contract as :func:`materialize`; the
     loud-but-soft fallback pays the extra count job but stays correct.
     """
-    return _checkpoint(df, count=True)
+    return _checkpoint(df, count=True, where=where)
 
 
 def materialize(df: DataFrame) -> DataFrame:

@@ -73,11 +73,12 @@ def connected_components(
 
     # r15 round shape (guide §2.4 — the old round spent 5 exchanges +
     # a separate join-probe job per round; this one spends 3 exchanges
-    # and probes a checkpointed change flag): contributions = own label
-    # (own=1) ∪ neighbor labels (own=0), ONE join + ONE partial-agg
-    # groupBy taking min over the closed neighborhood — identical to
-    # least(own, min(neighbors)) — while max(own-row label) recovers
-    # the previous label so the change flag rides the same aggregate.
+    # and counts a change flag inside its checkpoint job): contributions
+    # = own label (own=1) ∪ neighbor labels (own=0), ONE join + ONE
+    # partial-agg groupBy taking min over the closed neighborhood —
+    # identical to least(own, min(neighbors)) — while max(own-row
+    # label) recovers the previous label so the change flag rides the
+    # same aggregate.
     # ... plus a label-SHORTCUT per round (pointer doubling through the
     # previous round's checkpointed mapping: component ← prev[component]
     # after the neighborhood min) — labels stay component-member ids and
@@ -114,10 +115,8 @@ def connected_components(
             F.least("_c1", "_c2").alias("component"),
             (F.least("_c1", "_c2") < F.col("_old")).alias("_chg"),
         )
-        # checkpoint + count in ONE job; the count doubles as a sanity
-        # floor (every node keeps a row via its own=1 contribution)
-        new_comp, _ = materialize_count(new_comp)
-        changed = new_comp.filter("_chg").limit(1).count()
+        # checkpoint + changed-row count in ONE job
+        new_comp, changed = materialize_count(new_comp, where=F.col("_chg"))
         comp = new_comp.select(NODE_ID, "component")
         if changed == 0:
             return comp
@@ -525,8 +524,9 @@ def dag_longest_path(
 
     Scale shape: state is one 16-byte (node, level) row per node; per
     round ONE edge-keyed equi-join of the skinny state + one
-    partial-aggregated max groupBy + a changed-row existence probe
-    (``limit(1)`` — never a full count), lineage checkpointed.
+    partial-aggregated max groupBy, lineage checkpointed; the changed-
+    row count is observed inside the checkpoint job (``checkpoint=False``
+    probes the flag with ``limit(1)`` instead).
     Rounds = depth: the right regime for the shallow-and-wide DAGs
     data pipelines actually have. A frontier/delta variant was
     MEASURED WORSE here (327 s vs 18 s at sf0.1): longest-path levels
@@ -573,8 +573,10 @@ def dag_longest_path(
             )
         )
         if checkpoint:
-            nxt, _ = materialize_count(nxt)
-        still = nxt.filter("_chg").limit(1).count() > 0
+            nxt, n_chg = materialize_count(nxt, where=F.col("_chg"))
+            still = n_chg > 0
+        else:
+            still = nxt.filter("_chg").limit(1).count() > 0
         levels = nxt.select(NODE_ID, "level")
         if not still:
             converged = True
@@ -2609,8 +2611,7 @@ def shortest_paths(
                 ).alias("_chg"),
             )
         )
-        new_dist, _ = materialize_count(new_dist)
-        improved = new_dist.filter("_chg").limit(1).count()
+        new_dist, improved = materialize_count(new_dist, where=F.col("_chg"))
         dist = new_dist.select(NODE_ID, "dist")
         if improved == 0:
             return dist
@@ -2719,7 +2720,7 @@ def k_shortest_path_lengths(
         # r15: provenance rides the dedup — collapsing (node, dist)
         # duplicates with max(_own) both dedups AND marks whether the
         # cost existed in the previous state, so the fixpoint probe is
-        # a cheap flag filter on the checkpoint instead of a separate
+        # a flag count inside the checkpoint job instead of a separate
         # anti-join job per round
         new_state = (
             state.select(NODE_ID, "dist", F.lit(1).alias("_own"))
@@ -2731,12 +2732,14 @@ def k_shortest_path_lengths(
             .filter(F.col("_rn") <= k)
             .drop("_rn")
         )
-        new_state, _ = materialize_count(new_state)
         # monotone under the sorted-set order: a row leaves the state
         # only when a strictly smaller candidate evicts it, so
         # new \ old = ∅  ⟺  new = old (fixpoint) — and new \ old is
         # exactly the surviving rows whose cost no prior state row had
-        changed = new_state.filter(F.col("_own") == 0).limit(1).count() > 0
+        new_state, n_new = materialize_count(
+            new_state, where=F.col("_own") == 0
+        )
+        changed = n_new > 0
         state = new_state.select(NODE_ID, "dist")
         if not changed:
             break
@@ -3102,109 +3105,138 @@ def k1_coloring(
     look proper and mean nothing). Self-loops are dropped (a
     self-adjacent node is uncolorable), edges deduped canonically.
 
-    Scale shape, per round: winners come from ONE partial-aggregated
-    ``max(struct(h, id))`` over the active adjacency + a join-back
-    (never a per-source window); the mex is computed WINDOWLESS —
-    distinct (node, neighbor-color) pairs collapse hub fan-in to
-    ≤ palette-size rows per node, then ``aggregate(array_sort(
-    collect_set(color)), 0, acc,x -> if(x=acc, acc+1, acc))`` folds
-    the sorted palette to the first gap in one codegen HOF (state
-    bounded by colors-so-far ≤ Δ+1, not by degree). Colored/uncolored
-    state is 16-byte rows, checkpointed per round.
+    Scale shape, per round (a Pregel superstep — one vertex ⋈ message
+    join plus one group-by): the checkpointed adjacency carries one
+    self row ``(n, n)`` per node, so ONE join of the adjacency with the
+    state on the neighbor side feeds ONE partial-aggregated groupBy per
+    node that yields the node's own ``(h, color)``, its strongest
+    uncolored rival ``max(struct(h, id))`` and its colored-neighbor
+    palette ``collect_set(color)`` together — no join back to the
+    state, never a per-source window. The mex is computed WINDOWLESS:
+    ``aggregate(array_sort(palette), 0, acc,x -> if(x=acc, acc+1,
+    acc))`` folds the sorted palette to the first gap in one codegen
+    HOF (state bounded by colors-so-far ≤ Δ+1, not by degree). The
+    round's Columns are built once per call, and the "anyone left
+    uncolored?" probe is a ``count_if`` observed inside the round's
+    checkpoint job (:func:`materialize_count` ``where=``) — no
+    separate probe job.
     """
     from .dedup import portable_hash64_col
 
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("_u"),
-            F.greatest(F.col(src), F.col(dst)).alias("_v"),
-        )
-        .filter(F.col("_u") != F.col("_v"))
-        .distinct()
+    sym = _k1_adjacency(edges, src, dst).transform(materialize)
+    # ONE carried frame ``st = (n, h, color-or-NULL)``, checkpointed per
+    # round; the initial state reads the self rows (no extra shuffle)
+    st = sym.filter(F.col("_u") == F.col("_v")).select(
+        F.col("_u").alias("_n"),
+        portable_hash64_col(
+            F.concat_ws("#", F.col("_u").cast("string"), F.lit(str(seed)))
+        ).alias("_h"),
+        F.lit(None).cast("long").alias("color"),
     )
-    sym = e.unionByName(
-        e.select(F.col("_v").alias("_u"), F.col("_u").alias("_v"))
-    ).transform(materialize)
-
-    def _prio(col: Column) -> Column:
-        return portable_hash64_col(
-            F.concat_ws("#", col.cast("string"), F.lit(str(seed)))
-        )
-
-    # r15 single-state loop (guide §1.2/§2.4): ONE carried frame
-    # ``st = (n, h, color-or-NULL)`` materialized once per round. The
-    # pre-r15 loop checkpointed ``colored`` AND ``uncolored``
-    # separately, and each checkpoint re-executed the round's winner
-    # join from scratch — the whole Jones–Plassmann round ran TWICE per
-    # round plus a third job for the emptiness probe; this shape runs
-    # it once and probes a checkpointed NULL flag.
-    st = (
-        sym.select(F.col("_u").alias("_n"))
-        .distinct()
-        .select(
-            "_n",
-            _prio(F.col("_n")).alias("_h"),
-            F.lit(None).cast("long").alias("color"),
-        )
-        .transform(materialize)
-    )
+    uncolored = F.col("color").isNull()
+    cols = _k1_round_columns()
+    st, left = materialize_count(st, where=uncolored)
     for _ in range(max_iter):
-        if st.filter(F.col("color").isNull()).limit(1).count() == 0:
-            return st.select(F.col("_n").alias(NODE_ID), "color")
-        st = _k1_round_state(sym, st).transform(materialize)
-    if st.filter(F.col("color").isNull()).limit(1).count() == 0:
-        return st.select(F.col("_n").alias(NODE_ID), "color")
-    raise RuntimeError(
-        f"k1_coloring: nodes still uncolored after {max_iter} rounds — "
-        "raise max_iter (rounds are O(log n) expected; a silent partial "
-        "coloring would look proper and mean nothing)"
+        if left == 0:
+            break
+        st, left = materialize_count(
+            _k1_round_state(sym, st, cols), where=uncolored
+        )
+    if left:
+        raise RuntimeError(
+            f"k1_coloring: nodes still uncolored after {max_iter} rounds — "
+            "raise max_iter (rounds are O(log n) expected; a silent partial "
+            "coloring would look proper and mean nothing)"
+        )
+    return st.select(F.col("_n").alias(NODE_ID), "color")
+
+
+def _k1_adjacency(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The :func:`k1_coloring` adjacency ``(_u, _v)``: every undirected
+    edge in both directions plus one self row ``(n, n)`` per node, which
+    carries the node's own state through the round's single neighbor
+    join. Self-loops are dropped and duplicates collapse in one
+    distinct (one shuffle)."""
+    a, b = F.col(src), F.col(dst)
+
+    def row(u: Column, v: Column) -> Column:
+        return F.struct(u.alias("_u"), v.alias("_v"))
+
+    return (
+        edges.filter(a != b)
+        .select(F.inline(F.array(row(a, b), row(b, a), row(a, a), row(b, b))))
+        .distinct()
     )
 
 
-def _k1_round_state(sym: DataFrame, st: DataFrame) -> DataFrame:
-    """One Jones–Plassmann round over the single carried state
-    ``st = (_n, _h, color-or-NULL)`` (the :func:`k1_coloring` loop
-    body, factored out so the plan audit can pin its shape) → the next
-    state. r15 one-scan shape (guide §2.4 — the pre-r15 round scanned
-    the adjacency twice and ran ~10 exchanges; this one runs 5): ONE
-    join attaches each neighbor's (hash, color) state to the
-    adjacency, ONE partial-aggregated groupBy per node collects BOTH
-    the strongest uncolored rival ``max(struct(h, n))`` AND the
-    distinct colored-neighbor palette ``collect_set(color)`` (bounded
-    by colors-so-far ≤ Δ+1, never by degree), and ONE left join back
-    to the state decides winners — uncolored, own ``(h, n)`` beats
-    every uncolored neighbor — and writes their mex (first gap of the
-    sorted palette, folded in one codegen HOF) as the round's color."""
-    nbr = sym.join(
-        st.select(
-            F.col("_n").alias("_v"),
-            F.col("_h").alias("_hv"),
-            F.col("color").alias("_cv"),
-        ),
-        "_v",
-    )
-    agg = nbr.groupBy(F.col("_u").alias("_n")).agg(
+def _k1_round_columns() -> tuple[list[Column], list[Column], list[Column]]:
+    """The Columns of one :func:`_k1_round_state` round — the neighbor
+    view of the state, the per-node aggregates and the output select —
+    built once per :func:`k1_coloring` call instead of once per round."""
+    own_row = F.col("_u") == F.col("_v")
+    nbr = [
+        F.col("_n").alias("_v"),
+        F.col("_h").alias("_hv"),
+        F.col("color").alias("_cv"),
+    ]
+    aggs = [
+        F.max(F.when(own_row, F.col("_hv"))).alias("_h"),
+        F.max(F.when(own_row, F.col("_cv"))).alias("color"),
         F.max(
             F.when(
-                F.col("_cv").isNull(),
+                ~own_row & F.col("_cv").isNull(),
                 F.struct(F.col("_hv").alias("h"), F.col("_v").alias("n")),
             )
         ).alias("_rival"),
-        F.collect_set("_cv").alias("_palette"),
-    )
+        F.collect_set(F.when(~own_row, F.col("_cv"))).alias("_palette"),
+    ]
     own = F.struct(F.col("_h").alias("h"), F.col("_n").alias("n"))
     win = F.col("color").isNull() & (
         F.col("_rival").isNull() | (own > F.col("_rival"))
     )
     mex = F.aggregate(
-        F.array_sort(F.coalesce("_palette", F.array().cast("array<long>"))),
+        F.array_sort("_palette"),
         F.lit(0).cast("long"),
         lambda acc, x: F.when(x == acc, acc + 1).otherwise(acc),
     )
-    return st.join(agg, "_n", "left_outer").select(
+    out = [
         "_n",
         "_h",
         F.coalesce(F.col("color"), F.when(win, mex)).alias("color"),
+    ]
+    return nbr, aggs, out
+
+
+def _k1_round_state(
+    sym: DataFrame,
+    st: DataFrame,
+    cols: tuple[list[Column], list[Column], list[Column]] | None = None,
+) -> DataFrame:
+    """One Jones–Plassmann round over the single carried state
+    ``st = (_n, _h, color-or-NULL)`` (the :func:`k1_coloring` loop
+    body, factored out so the plan audit can pin its shape) → the next
+    state. ``sym`` is the :func:`_k1_adjacency` with its self rows.
+
+    Scale shape: ONE join attaches each neighbor's (hash, color) state
+    to the adjacency — the self row attaches the node's own — and ONE
+    partial-aggregated groupBy per node reads, in one pass, the node's
+    own ``(h, color)``, the strongest uncolored rival ``max(struct(h,
+    n))`` and the distinct colored-neighbor palette ``collect_set``
+    (bounded by colors-so-far ≤ Δ+1, never by degree). Winners —
+    uncolored, own ``(h, n)`` beats every uncolored neighbor — take the
+    mex of the palette (first gap of the sorted palette, folded in one
+    codegen HOF) in the select on top of the aggregate: there is no
+    join back to the state. ``cols`` are :func:`_k1_round_columns`,
+    built here when not passed."""
+    nbr, aggs, out = cols or _k1_round_columns()
+    # shuffle_hash: a hash table of the state's partition per task. Left
+    # to itself, AQE turns a small state into a broadcast join after
+    # both shuffles ran — one more job per round to collect it
+    return (
+        sym.join(st.select(*nbr).hint("shuffle_hash"), "_v")
+        .groupBy(F.col("_u").alias("_n"))
+        .agg(*aggs)
+        .select(*out)
     )
 
 

@@ -239,17 +239,18 @@ def minimum_spanning_forest(
                 F.col("_c").alias("_rc"), F.col("_p").alias("_pp")
             )
             # r15: the doubling join already sees BOTH p and p(p) —
-            # the change flag rides it, and the probe is a flag filter
-            # on the checkpoint instead of a separate join job per jump
-            nxt, _ = materialize_count(
+            # the change flag rides it, and is counted inside the
+            # checkpoint job instead of a separate job per jump
+            nxt, n_chg = materialize_count(
                 parent.join(rgt, parent["_p"] == rgt["_rc"])
                 .select(
                     parent["_c"],
                     rgt["_pp"].alias("_p"),
                     (rgt["_pp"] != parent["_p"]).alias("_chg"),
-                )
+                ),
+                where=F.col("_chg"),
             )
-            still = nxt.filter("_chg").limit(1).count() > 0
+            still = n_chg > 0
             parent = nxt.select("_c", "_p")
             if not still:
                 break

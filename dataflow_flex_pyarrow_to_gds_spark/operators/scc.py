@@ -52,8 +52,8 @@ garbage).
 
 Scale shape: state is one 16-byte (node, color) row per node; every
 round is one skinny equi-join + partial-agg min (map-side combined)
-plus a ``limit(1)`` change probe — never a full count, never a
-cartesian; lineage is localCheckpoint-materialized per round (the
+whose changed-row count rides the checkpoint job — no probe job,
+never a cartesian; lineage is localCheckpoint-materialized per round (the
 iterative-operator discipline everywhere in this repo). The backward
 mark is frontier-based (only newly marked nodes join each round).
 Rounds scale with component diameter and condensation depth, the
@@ -235,8 +235,8 @@ def strongly_connected_components(
                     (F.least("_c1", "_c2") < F.col("_old")).alias("_chg"),
                 )
             )
-            nxt, _ = materialize_count(nxt)
-            still = nxt.filter("_chg").limit(1).count() > 0
+            nxt, n_chg = materialize_count(nxt, where=F.col("_chg"))
+            still = n_chg > 0
             color = nxt.select(NODE_ID, "_color")
             if not still:
                 converged = True

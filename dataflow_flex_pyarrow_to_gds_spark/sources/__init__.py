@@ -1,10 +1,8 @@
-from .parquet import read_parquet_tagged, read_table, read_tables
+from .parquet import read_parquet_tagged
 from .bigquery import BigQuerySource, ParquetBackedBigQuerySource
 
 __all__ = [
     "read_parquet_tagged",
-    "read_table",
-    "read_tables",
     "BigQuerySource",
     "ParquetBackedBigQuerySource",
 ]

@@ -34,11 +34,3 @@ def read_parquet_tagged(
     paths = pattern if isinstance(pattern, list) else [pattern]
     return spark.read.parquet(*paths).withColumn(source_col, F.input_file_name())
 
-
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table: ``{sf_dir}/{name}.parquet``."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def read_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in names}

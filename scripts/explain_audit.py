@@ -940,13 +940,15 @@ CHECKS: list[tuple[str, str, object]] = [
     ),
     (
         "@k1_round_plan",
-        "K-1 coloring round: ONE adjacency scan — a single groupBy "
-        "partial-aggregates BOTH the strongest uncolored rival "
-        "max(struct) and the distinct colored-neighbor palette "
-        "(collect_set, bounded by the palette, never the degree); no "
-        "per-source window anywhere, mex folds the sorted palette in "
-        "a codegen HOF, no cartesian, no Python eval",
-        lambda p: "CartesianProduct" not in p
+        "K-1 coloring round: ONE join (self-row adjacency ⋈ state) feeds "
+        "ONE groupBy that partial-aggregates the node's own state, the "
+        "strongest uncolored rival max(struct) and the distinct "
+        "colored-neighbor palette (collect_set, bounded by the palette, "
+        "never the degree) — no join back to the state; no per-source "
+        "window anywhere, mex folds the sorted palette in a codegen HOF, "
+        "no cartesian, no Python eval",
+        lambda p: len(re.findall(r"^\(\d+\) \w+Join\b", p, re.M)) == 1
+        and "CartesianProduct" not in p
         and "partial_max" in p
         and "partial_collect_set" in p
         and "windowspecdefinition" not in p
@@ -1697,31 +1699,22 @@ def _k1_round_plan(spark, sf: str):
         portable_hash64_col,
     )
     from dataflow_flex_pyarrow_to_gds_spark.operators.graph_algo import (
+        _k1_adjacency,
         _k1_round_state,
     )
     from dataflow_flex_pyarrow_to_gds_spark.queries import _co_order_edges
 
-    e = _co_order_edges(spark, sf, min_qty=43)
-    ee = (
-        e.select(
-            F.least("sourceNodeId", "targetNodeId").alias("_u"),
-            F.greatest("sourceNodeId", "targetNodeId").alias("_v"),
-        )
-        .filter(F.col("_u") != F.col("_v"))
-        .distinct()
+    sym = _k1_adjacency(
+        _co_order_edges(spark, sf, min_qty=43), "sourceNodeId", "targetNodeId"
     )
-    sym = ee.unionByName(
-        ee.select(F.col("_v").alias("_u"), F.col("_u").alias("_v"))
-    )
-    nodes = sym.select(F.col("_u").alias("_n")).distinct()
     # half-colored state so both the winner aggregate and the mex
     # palette path are live in the audited plan
-    st = nodes.select(
-        "_n",
+    st = sym.filter(F.col("_u") == F.col("_v")).select(
+        F.col("_u").alias("_n"),
         portable_hash64_col(
-            F.concat_ws("#", F.col("_n").cast("string"), F.lit("0"))
+            F.concat_ws("#", F.col("_u").cast("string"), F.lit("0"))
         ).alias("_h"),
-        F.when(F.col("_n") % 2 == 1, (F.col("_n") % 3))
+        F.when(F.col("_u") % 2 == 1, (F.col("_u") % 3))
         .cast("long")
         .alias("color"),
     )

@@ -2227,6 +2227,11 @@ def test_topological_order_matches_python_on_random_dag(spark):
 def _k1_py(pairs, seed=0):
     """Python twin of k1_coloring: deterministic Jones–Plassmann with
     (md5-hash, id) priorities and mex color assignment."""
+    return _k1_py_rounds(pairs, seed)[0]
+
+
+def _k1_py_rounds(pairs, seed=0):
+    """:func:`_k1_py` → (colors, number of Jones–Plassmann rounds)."""
     import hashlib
 
     def h(n):
@@ -2244,7 +2249,9 @@ def _k1_py(pairs, seed=0):
         adj.setdefault(b, set()).add(a)
     uncolored = set(adj)
     colors: dict[int, int] = {}
+    rounds = 0
     while uncolored:
+        rounds += 1
         winners = [
             v
             for v in uncolored
@@ -2263,7 +2270,7 @@ def _k1_py(pairs, seed=0):
                     mex += 1
             colors[v] = mex
         uncolored -= set(winners)
-    return colors
+    return colors, rounds
 
 
 def test_k1_coloring_proper_and_python_replay(spark):
@@ -2334,6 +2341,43 @@ def test_k1_coloring_structures(spark):
     assert max(got.values()) <= 2  # Δ + 1
     with pytest.raises(RuntimeError, match="max_iter|uncolored"):
         k1_coloring(tri, max_iter=1)
+
+
+def test_k1_coloring_job_census(spark):
+    """A Jones–Plassmann round is one Pregel superstep: the adjacency and
+    state shuffles, the one group-by and the checkpoint job that also
+    counts the nodes left uncolored — at most 4 Spark jobs per round
+    (AQE books each shuffle stage as its own job). On top: the
+    adjacency checkpoint (2), the initial state (1) and the collect (1).
+    A join back to the state or a separate emptiness probe per round
+    breaks the bound."""
+    from dataflow_flex_pyarrow_to_gds_spark.operators.graph_algo import (
+        k1_coloring,
+    )
+
+    rng = __import__("random").Random(11)
+    pairs = sorted(
+        {
+            tuple(sorted(rng.sample(range(1, 31), 2)))
+            for _ in range(70)
+        }
+    )
+    want, rounds = _k1_py_rounds(pairs)
+    edges = spark.createDataFrame(
+        pairs, "sourceNodeId long, targetNodeId long"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("k1-census", "k1 job census")
+    try:
+        got = {
+            r["nodeId"]: r["color"] for r in k1_coloring(edges).collect()
+        }
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed async
+    jobs = len(sc.statusTracker().getJobIdsForGroup("k1-census"))
+    assert got == want
+    assert jobs <= 4 + 4 * rounds, (jobs, rounds)
 
 
 def test_articlerank_python_replay_and_degree_damping(spark):

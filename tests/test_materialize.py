@@ -12,6 +12,9 @@ then died with "BigInteger would overflow supported range".
 
 from __future__ import annotations
 
+import warnings
+
+import pytest
 from pyspark.sql import functions as F
 
 from dataflow_flex_pyarrow_to_gds_spark.operators._materialize import (
@@ -108,3 +111,64 @@ def test_materialize_count_rows_and_values(spark):
         cur, n2 = materialize_count(_self_join_round(cur))
         assert n2 == 100
         assert _digits(cur) <= 20
+
+
+class _NoInternalCreate:
+    """A JVM session handle whose private ``internalCreateDataFrame`` is
+    gone, as after a Spark upgrade that moved it."""
+
+    def __init__(self, jsession):
+        self._jsession = jsession
+
+    def __getattr__(self, name):
+        if name == "internalCreateDataFrame":
+            raise AttributeError(name)
+        return getattr(self._jsession, name)
+
+
+def test_materialize_count_where_counts_in_one_job(spark, monkeypatch):
+    # the where= count is observed inside the checkpoint job: the same
+    # number a filter(where).count() gives, the same rows, one job
+    from dataflow_flex_pyarrow_to_gds_spark.operators import _materialize
+    from dataflow_flex_pyarrow_to_gds_spark.operators._materialize import (
+        materialize_count,
+    )
+
+    monkeypatch.setattr(_materialize, "_WARNED", False)
+    sc = spark.sparkContext
+    df = spark.range(1000).select(
+        F.col("id").alias("a"), (F.col("id") % 7).alias("b")
+    )
+    where = F.col("b") == 3
+    sc.setJobGroup("materialize-where", "fused count census")
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", RuntimeWarning)
+            m, n = materialize_count(df, where=where)
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed async
+    assert len(sc.statusTracker().getJobIdsForGroup("materialize-where")) == 1
+    assert n == df.filter(where).count() == 143
+    assert sorted((r["a"], r["b"]) for r in m.collect()) == [
+        (i, i % 7) for i in range(1000)
+    ]
+
+    empty = df.filter(F.col("a") < 0)
+    no_partitions = spark.createDataFrame(sc.emptyRDD(), df.schema)
+    assert no_partitions.rdd.getNumPartitions() == 0
+    for frame in (empty, no_partitions):
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", RuntimeWarning)
+            m, n = materialize_count(frame, where=where)
+        assert n == 0
+        assert m.count() == 0
+
+    # private-API drift: the fallback checkpoint still returns the count
+    monkeypatch.setattr(
+        spark, "_jsparkSession", _NoInternalCreate(spark._jsparkSession)
+    )
+    with pytest.warns(RuntimeWarning, match="falling back"):
+        m, n = materialize_count(df, where=where)
+    assert n == 143
+    assert m.count() == 1000
