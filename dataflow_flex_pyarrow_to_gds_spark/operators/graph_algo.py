@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .graph import NODE_ID, SOURCE_ID, TARGET_ID
@@ -292,17 +292,111 @@ def write_bucketed_edges(
     return spark.table(table)
 
 
+#: The rank family's damping factor — 0.85, GDS's default — as the exact
+#: fraction the int64 floor arithmetic (and the DuckDB twins) unroll.
+_DAMP_NUM, _DAMP_DEN = 85, 100
+
+
+def _out_degree(edges: DataFrame) -> DataFrame:
+    """``(nodeId, _od)``: the out-degree divisor table of the unweighted
+    rank family (one partial-aggregated groupBy on the source id)."""
+    return edges.groupBy(F.col(SOURCE_ID).alias(NODE_ID)).agg(
+        F.count(F.lit(1)).alias("_od")
+    )
+
+
+def _teleport_base(scale: int, n: int) -> int:
+    """``(15 · scale div 100) div n``: the teleport mass each of ``n``
+    nodes receives per round (15/100 = 1 − the damping fraction)."""
+    return (_DAMP_DEN - _DAMP_NUM) * scale // _DAMP_DEN // n
+
+
+def _uniform_start(
+    nodes: DataFrame, scale: int
+) -> tuple[DataFrame, int, DataFrame, Column]:
+    """The node universe of a global rank (PageRank, weighted PageRank,
+    ArticleRank), checkpointed once with its count N riding the same
+    job, and the start of the recurrence on it → ``(nodes, N, ranks,
+    teleport)``: every node starts at ``scale div N`` and teleports
+    ``base = (15 · scale div 100) div N`` per round. The checkpoint
+    keeps every round's job from re-deriving the node list from the
+    source plan."""
+    nodes, n = materialize_count(nodes.select(NODE_ID))
+    n = max(n, 1)  # an empty universe has no rows to rank whatever N is
+    ranks = nodes.select(
+        NODE_ID, F.lit(scale // n).cast("long").alias("rank_fp")
+    )
+    return nodes, n, ranks, F.lit(_teleport_base(scale, n))
+
+
+def _rank_round(
+    nodes: DataFrame,
+    edges: DataFrame,
+    norm: DataFrame,
+    ranks: DataFrame,
+    contrib: Column,
+    teleport: Column,
+) -> DataFrame:
+    """One superstep of the exact-integer rank family → the next
+    ``(nodeId, rank_fp)``::
+
+        r(v) ← teleport(v) + (85 · Σ_{u→v} contrib(u, v)) div 100
+
+    ``edges`` (source, target, any edge columns) ⋈ ``ranks`` ⋈ the
+    per-source divisor table ``norm`` (keyed ``nodeId``) on the source
+    id; ``contrib`` is the per-edge floor-division contribution over
+    those columns (``rank_fp``, the divisor, the edge's own), summed by
+    target; ``nodes`` ⟕ the sums carries every node, and ``teleport``
+    is a Column over ``nodes``. Every step is int64 (or DECIMAL, cast
+    back) floor arithmetic — no float sum anywhere — so the ranks are
+    bit-exact on any engine, partitioning and aggregation order.
+
+    Scale shape (a Pregel superstep — one vertex ⋈ message dataflow):
+    ONE edge-keyed join of the skinny rank table, one partial-
+    aggregated groupBy on the target id, one join back onto the node
+    table. The edge table is the only big operand; it moves at most
+    in its join shuffle, and not at all when it is a bucketed scan
+    hinted ``merge`` (:func:`write_bucketed_edges`)."""
+    sums = (
+        edges.join(ranks.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
+        .join(norm.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
+        .select(F.col(TARGET_ID).alias(NODE_ID), contrib.alias("_c"))
+        .groupBy(NODE_ID)
+        .agg(F.sum("_c").alias("_s"))
+    )
+    damped = F.expr(f"({_DAMP_NUM} * coalesce(_s, 0L)) div {_DAMP_DEN}")
+    return nodes.join(sums, NODE_ID, "left_outer").select(
+        NODE_ID, (teleport + damped).cast("long").alias("rank_fp")
+    )
+
+
+def _rank_rounds(
+    iters: int,
+    nodes: DataFrame,
+    edges: DataFrame,
+    norm: DataFrame,
+    ranks: DataFrame,
+    contrib: Column,
+    teleport: Column,
+) -> DataFrame:
+    """``iters`` :func:`_rank_round` supersteps, each checkpointed to
+    truncate lineage — the loop every rank operator ends in."""
+    if iters < 1:
+        raise ValueError(f"rank operators: iters must be >= 1, got {iters}")
+    for _ in range(iters):
+        ranks = _rank_round(
+            nodes, edges, norm, ranks, contrib, teleport
+        ).transform(materialize)
+    return ranks
+
+
 def pagerank_fixedpoint(
     nodes: DataFrame,
     edges: DataFrame,
     *,
     iters: int = 4,
     scale: int = 10**12,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    n_nodes: int | None = None,
     merge_edge_joins: bool = False,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """PageRank in integer micro-units → ``(nodeId, rank_fp)`` where
     ``rank_fp`` ≈ rank · ``scale`` as a BIGINT.
@@ -311,24 +405,25 @@ def pagerank_fixedpoint(
     summation anywhere — so the result is bit-exact on any engine, any
     partitioning, any aggregation order (float PageRank can't be
     hash-checked across engines because Σ contributions picks up
-    order-dependent rounding dust). Per iteration::
+    order-dependent rounding dust). Per iteration (damping 0.85, GDS's
+    default, as the exact fraction 85/100)::
 
-        r(v) ← base + (damping_num · Σ_{u→v} (r(u) div outdeg(u)))
-                      div damping_den
-        base  = ((damping_den − damping_num) · scale div damping_den)
-                div N
+        r(v) ← base + (85 · Σ_{u→v} (r(u) div outdeg(u))) div 100
+        base  = (15 · scale div 100) div N
 
-    Fixed ``iters`` (power-iteration truncation is part of the operator
-    contract — the oracle unrolls the same count); dangling nodes leak
-    their mass (the simplified variant; the floor divisions leak
-    < N · iters micro-units more, negligible at scale 10¹²).
+    Fixed ``iters`` ≥ 1 (power-iteration truncation is part of the
+    operator contract — the oracle unrolls the same count); dangling
+    nodes leak their mass (the simplified variant; the floor divisions
+    leak < N · iters micro-units more, negligible at scale 10¹²).
 
     Scale shape: per iteration ONE edge-keyed join of the skinny rank
-    table + one partially-aggregated groupBy on the target id, the CC
-    checkpoint pattern truncating lineage per round. Degrees and ranks
-    never exceed 8-byte rows; the edge table is the only big operand
-    and it never moves beyond its join shuffle (bucket it by source id
-    to delete even that — tests/test_bucketing.py pattern).
+    table + one partially-aggregated groupBy on the target id
+    (:func:`_rank_round`), checkpointed per round. The node list, edge
+    pairs and out-degrees are fixed once, so no round re-derives them
+    from the source plan. Degrees and ranks never exceed 8-byte rows;
+    the edge table is the only big operand and it never moves beyond
+    its join shuffle (bucket it by source id to delete even that —
+    tests/test_bucketing.py pattern).
 
     ``merge_edge_joins=True`` is the bucketed-edge mode: pass edges
     read from a :func:`write_bucketed_edges` table and the per-
@@ -341,66 +436,22 @@ def pagerank_fixedpoint(
     only the skinny rank/contribution streams move per round
     (asserted on the physical plan by scripts/explain_audit.py).
     """
-    nodes = nodes.select(NODE_ID)
+    nodes, _, ranks, teleport = _uniform_start(nodes, scale)
     edge_pairs = edges.select(SOURCE_ID, TARGET_ID)
-    if checkpoint:
-        # r15 (guide §2.4/§5): every iteration's job used to re-derive
-        # the node list and out-degree table from the SOURCE plan —
-        # iters× recompute of the graph build. Fix the skinny operands
-        # once; the node count rides the checkpoint job for free.
-        nodes, n_seen = materialize_count(nodes)
-        if n_nodes is None:
-            n_nodes = n_seen
-        if not merge_edge_joins:
-            edge_pairs = edge_pairs.transform(materialize)
-    if n_nodes is None:
-        n_nodes = nodes.count()
-    if n_nodes == 0:
-        return nodes.select(NODE_ID, F.lit(0).cast("long").alias("rank_fp"))
-    base = ((damping_den - damping_num) * scale // damping_den) // n_nodes
-    r0 = scale // n_nodes
-    outdeg = edge_pairs.groupBy(F.col(SOURCE_ID).alias(NODE_ID)).agg(
-        F.count(F.lit(1)).alias("_od")
-    )
-    if checkpoint and not merge_edge_joins:
-        outdeg = outdeg.transform(materialize)
-    ranks = nodes.select(NODE_ID, F.lit(r0).cast("long").alias("rank_fp"))
     if merge_edge_joins:
         # bucketed mode: edge_pairs MUST stay the bucketed scan (a
         # checkpoint would orphan the on-disk bucket distribution and
         # re-introduce the per-iteration edge Exchange this mode
         # deletes); the hint pins the per-iteration join to sort-merge
+        outdeg = _out_degree(edge_pairs)
         edge_pairs = edge_pairs.hint("merge")
-    for _ in range(iters):
-        contrib = (
-            edge_pairs
-            .join(ranks.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
-            .join(outdeg.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
-            .select(
-                F.col(TARGET_ID).alias(NODE_ID),
-                F.expr("rank_fp div _od").alias("_c"),
-            )
-        )
-        sums = contrib.groupBy(NODE_ID).agg(F.sum("_c").alias("_s"))
-        ranks = (
-            nodes.join(sums, NODE_ID, "left_outer")
-            .select(
-                NODE_ID,
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"({damping_num} * coalesce(_s, 0L))"
-                        f" div {damping_den}"
-                    )
-                ).cast("long").alias("rank_fp"),
-            )
-        )
-        if checkpoint:
-            # truncate lineage per round; checkpoint=False exists for
-            # plan inspection (explain_audit) — the checkpointed frame
-            # explains as an opaque RDD scan
-            ranks = ranks.transform(materialize)
-    return ranks
+    else:
+        edge_pairs = edge_pairs.transform(materialize)
+        outdeg = _out_degree(edge_pairs).transform(materialize)
+    return _rank_rounds(
+        iters, nodes, edge_pairs, outdeg, ranks,
+        F.expr("rank_fp div _od"), teleport,
+    )
 
 
 def pagerank_weighted(
@@ -410,10 +461,6 @@ def pagerank_weighted(
     *,
     iters: int = 4,
     scale: int = 10**12,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    n_nodes: int | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Weighted PageRank — GDS ``gds.pageRank`` with
     ``relationshipWeightProperty`` parity (r12) in the
@@ -421,8 +468,7 @@ def pagerank_weighted(
     ``(nodeId, rank_fp)``: rank mass leaves each node ∝ edge weight
     instead of 1/outdeg. Per iteration::
 
-        r(v) ← base + (damping_num · Σ_{u→v} ((r(u) · w_uv) div W_u))
-                      div damping_den
+        r(v) ← base + (85 · Σ_{u→v} ((r(u) · w_uv) div W_u)) div 100
         W_u   = Σ_{u→x} w_ux      (per-source out-weight total)
 
     Weights must be POSITIVE int64 (GDS casts float weights; integer
@@ -440,67 +486,29 @@ def pagerank_weighted(
     weight column rides the SAME edge join that carries the rank (no
     extra shuffle vs unweighted), W_u is one partial-aggregated
     groupBy computed once, per round one skinny join + one
-    partial-agg groupBy, lineage checkpointed.
+    partial-agg groupBy, lineage checkpointed. The derived weighted
+    edge list is fixed once (for the co-order catalog row it is a
+    lineitem self-join that every round would otherwise re-run).
     """
-    if iters < 1:
-        raise ValueError("pagerank_weighted: iters must be >= 1")
-    nodes = nodes.select(NODE_ID)
+    nodes, _, ranks, teleport = _uniform_start(nodes, scale)
     e = edges.select(
         SOURCE_ID, TARGET_ID, F.col(weight_col).cast("long").alias("_w")
+    ).transform(materialize)
+    wsum = (
+        e.groupBy(F.col(SOURCE_ID).alias(NODE_ID))
+        .agg(F.sum("_w").alias("_wt"))
+        .transform(materialize)
     )
-    if checkpoint:
-        # r15 (guide §2.4/§5): fix the derived weighted edge list, the
-        # out-weight totals and the node list ONCE — un-materialized,
-        # every iteration's job re-ran the whole graph build (for the
-        # co-order catalog row that was a lineitem self-join per round)
-        nodes, n_seen = materialize_count(nodes)
-        if n_nodes is None:
-            n_nodes = n_seen
-        e = e.transform(materialize)
-    if n_nodes is None:
-        n_nodes = nodes.count()
-    if n_nodes == 0:
-        return nodes.select(NODE_ID, F.lit(0).cast("long").alias("rank_fp"))
-    base = ((damping_den - damping_num) * scale // damping_den) // n_nodes
-    r0 = scale // n_nodes
-    wsum = e.groupBy(F.col(SOURCE_ID).alias(NODE_ID)).agg(
-        F.sum("_w").alias("_wt")
+    contrib = F.expr("(CAST(rank_fp AS DECIMAL(25,0)) * _w) div _wt")
+    return _rank_rounds(
+        iters, nodes, e, wsum, ranks, contrib.cast("long"), teleport
     )
-    if checkpoint:
-        wsum = wsum.transform(materialize)
-    ranks = nodes.select(NODE_ID, F.lit(r0).cast("long").alias("rank_fp"))
-    for _ in range(iters):
-        contrib = (
-            e.join(ranks.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
-            .join(wsum.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
-            .select(
-                F.col(TARGET_ID).alias(NODE_ID),
-                F.expr(
-                    "(CAST(rank_fp AS DECIMAL(25,0)) * _w) div _wt"
-                ).cast("long").alias("_c"),
-            )
-        )
-        sums = contrib.groupBy(NODE_ID).agg(F.sum("_c").alias("_s"))
-        ranks = nodes.join(sums, NODE_ID, "left_outer").select(
-            NODE_ID,
-            (
-                F.lit(base)
-                + F.expr(
-                    f"({damping_num} * coalesce(_s, 0L))"
-                    f" div {damping_den}"
-                )
-            ).cast("long").alias("rank_fp"),
-        )
-        if checkpoint:
-            ranks = ranks.transform(materialize)
-    return ranks
 
 
 def dag_longest_path(
     edges: DataFrame,
     *,
     max_iter: int = 64,
-    checkpoint: bool = True,
     src: str = SOURCE_ID,
     dst: str = TARGET_ID,
 ) -> DataFrame:
@@ -525,8 +533,7 @@ def dag_longest_path(
     Scale shape: state is one 16-byte (node, level) row per node; per
     round ONE edge-keyed equi-join of the skinny state + one
     partial-aggregated max groupBy, lineage checkpointed; the changed-
-    row count is observed inside the checkpoint job (``checkpoint=False``
-    probes the flag with ``limit(1)`` instead).
+    row count is observed inside the checkpoint job.
     Rounds = depth: the right regime for the shallow-and-wide DAGs
     data pipelines actually have. A frontier/delta variant was
     MEASURED WORSE here (327 s vs 18 s at sf0.1): longest-path levels
@@ -546,7 +553,6 @@ def dag_longest_path(
     )
     e = e.transform(materialize)
     levels = nodes.select(NODE_ID, F.lit(0).cast("long").alias("level"))
-    converged = False
     for _ in range(max_iter):
         cand = (
             e.join(
@@ -572,23 +578,16 @@ def dag_longest_path(
                 ).alias("_chg"),
             )
         )
-        if checkpoint:
-            nxt, n_chg = materialize_count(nxt, where=F.col("_chg"))
-            still = n_chg > 0
-        else:
-            still = nxt.filter("_chg").limit(1).count() > 0
+        nxt, n_chg = materialize_count(nxt, where=F.col("_chg"))
         levels = nxt.select(NODE_ID, "level")
-        if not still:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"dag_longest_path: levels still changing after {max_iter} "
-            "rounds — the input has a cycle (or raise max_iter for a "
-            "deeper DAG); a truncated result would silently understate "
-            "depths"
-        )
-    return levels
+        if n_chg == 0:
+            return levels
+    raise RuntimeError(
+        f"dag_longest_path: levels still changing after {max_iter} "
+        "rounds — the input has a cycle (or raise max_iter for a "
+        "deeper DAG); a truncated result would silently understate "
+        "depths"
+    )
 
 
 def personalized_pagerank_fixedpoint(
@@ -597,9 +596,6 @@ def personalized_pagerank_fixedpoint(
     *,
     iters: int = 4,
     scale: int = 10**12,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart to ``seeds``) in
     the same exact-integer fixed-point contract as
@@ -611,29 +607,27 @@ def personalized_pagerank_fixedpoint(
     at", the weighted cousin of :func:`bfs_hop_distance`)::
 
         r(v) ← is_seed(v) · base
-               + (num · Σ_{u→v} (r(u) div outdeg(u))) div den
-        base  = ((den − num) · scale div den) div |seeds|
+               + (85 · Σ_{u→v} (r(u) div outdeg(u))) div 100
+        base  = (15 · scale div 100) div |seeds|
 
     Every step is int64 floor arithmetic — hash-exact on any engine,
     any partitioning (the oracle unrolls the same iterations).
     Dangling mass leaks as in the simplified global variant. Node
     universe = edge endpoints ∪ seeds; non-seed nodes start (and may
-    stay) at 0.
+    stay) at 0. Seeding every node is :func:`pagerank_fixedpoint`
+    bit-for-bit.
 
     Scale shape: identical to :func:`pagerank_fixedpoint` — per
     iteration one edge-keyed join of the skinny rank table + one
     partial-aggregated groupBy; the seed flag is one extra 9-byte
-    column on the rank table, and the hubs-only checkpoint rule
+    column on the node table, and the hubs-only checkpoint rule
     (:func:`hits_fixedpoint`) does not apply — there is one table, so
     it checkpoints each round.
     """
-    if iters < 1:
-        raise ValueError("personalized_pagerank_fixedpoint: iters >= 1")
     s = seeds.select(F.col(NODE_ID)).distinct()
     n_seeds = s.count()
     if n_seeds == 0:
         raise ValueError("personalized_pagerank_fixedpoint: empty seeds")
-    base = ((damping_den - damping_num) * scale // damping_den) // n_seeds
     # Fix the edge list once: unlike pagerank_fixedpoint's catalog graph
     # (a cheap column projection), PPR inputs are often DERIVED edge
     # sets (the catalog row's co-order self-join) that would otherwise
@@ -645,45 +639,19 @@ def personalized_pagerank_fixedpoint(
         .unionByName(s)
         .distinct()
         .join(s.withColumn("_seed", F.lit(1)), NODE_ID, "left_outer")
-        .select(
-            NODE_ID, F.coalesce("_seed", F.lit(0)).alias("_seed")
-        )
+        .select(NODE_ID, F.coalesce("_seed", F.lit(0)).alias("_seed"))
         .transform(materialize)  # reused every round
     )
-    outdeg = e.groupBy(F.col(SOURCE_ID).alias(NODE_ID)).agg(
-        F.count(F.lit(1)).alias("_od")
-    )
-    r0 = scale // n_seeds
+    seed = F.col("_seed")
     ranks = nodes.select(
         NODE_ID,
-        (F.col("_seed") * F.lit(r0)).cast("long").alias("rank_fp"),
+        (seed * F.lit(scale // n_seeds)).cast("long").alias("rank_fp"),
     )
-    for _ in range(iters):
-        contrib = (
-            e.join(ranks.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
-            .join(outdeg.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
-            .select(
-                F.col(TARGET_ID).alias(NODE_ID),
-                F.expr("rank_fp div _od").alias("_c"),
-            )
-        )
-        sums = contrib.groupBy(NODE_ID).agg(F.sum("_c").alias("_s"))
-        ranks = (
-            nodes.join(sums, NODE_ID, "left_outer")
-            .select(
-                NODE_ID,
-                (
-                    F.col("_seed") * F.lit(base)
-                    + F.expr(
-                        f"({damping_num} * coalesce(_s, 0L))"
-                        f" div {damping_den}"
-                    )
-                ).cast("long").alias("rank_fp"),
-            )
-        )
-        if checkpoint:
-            ranks = ranks.transform(materialize)
-    return ranks
+    teleport = seed * F.lit(_teleport_base(scale, n_seeds))
+    return _rank_rounds(
+        iters, nodes, e, _out_degree(e), ranks,
+        F.expr("rank_fp div _od"), teleport,
+    )
 
 
 def triangle_count(edges: DataFrame, src: str = SOURCE_ID, dst: str = TARGET_ID) -> DataFrame:
@@ -3246,19 +3214,13 @@ def articlerank_fixedpoint(
     *,
     iters: int = 4,
     scale: int = 10**12,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    n_nodes: int | None = None,
-    n_edges: int | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """GDS ``gds.articleRank`` parity (r12) in the
     :func:`pagerank_fixedpoint` exact-integer contract →
     ``(nodeId, rank_fp)``. ArticleRank dampens low-degree influence by
     adding the graph's MEAN out-degree to every divisor::
 
-        r(v) ← base + (d_num · Σ_{u→v} r(u)·N div (od_u·N + m))
-                      div d_den
+        r(v) ← base + (85 · Σ_{u→v} r(u)·N div (od_u·N + m)) div 100
 
     — the textbook ``r(u)/(od_u + m/N)`` cleared of its rational
     denominator (multiply through by N), so every step stays integer
@@ -3270,64 +3232,19 @@ def articlerank_fixedpoint(
     Same simplified dangling treatment, fixed-iteration contract, and
     per-round shape as pagerank: ONE edge-keyed join + one
     partial-aggregated sum, checkpointed — the weight/divisor change
-    adds ZERO exchanges (the pagerank_weighted precedent).
+    adds ZERO exchanges (the pagerank_weighted precedent). N and m
+    ride the checkpoint jobs that fix the node and edge lists once.
     """
-    nodes = nodes.select(NODE_ID)
-    edge_pairs = edges.select(SOURCE_ID, TARGET_ID)
-    if checkpoint:
-        # r15: fix nodes/edges/degrees once (guide §2.4/§5) — both
-        # loop counts ride the checkpoint jobs for free
-        nodes, n_seen = materialize_count(nodes)
-        if n_nodes is None:
-            n_nodes = n_seen
-        edge_pairs, e_seen = materialize_count(edge_pairs)
-        if n_edges is None:
-            n_edges = e_seen
-    if n_nodes is None:
-        n_nodes = nodes.count()
-    if n_nodes == 0:
-        return nodes.select(NODE_ID, F.lit(0).cast("long").alias("rank_fp"))
-    if n_edges is None:
-        n_edges = edge_pairs.count()
-    base = ((damping_den - damping_num) * scale // damping_den) // n_nodes
-    r0 = scale // n_nodes
-    outdeg = edge_pairs.groupBy(F.col(SOURCE_ID).alias(NODE_ID)).agg(
-        F.count(F.lit(1)).alias("_od")
+    nodes, n, ranks, teleport = _uniform_start(nodes, scale)
+    edge_pairs, m = materialize_count(edges.select(SOURCE_ID, TARGET_ID))
+    outdeg = _out_degree(edge_pairs).transform(materialize)
+    contrib = F.expr(
+        f"CAST((CAST(rank_fp AS DECIMAL(38,0)) * {n})"
+        f" div (CAST(_od AS DECIMAL(38,0)) * {n} + {m}) AS LONG)"
     )
-    if checkpoint:
-        outdeg = outdeg.transform(materialize)
-    ranks = nodes.select(NODE_ID, F.lit(r0).cast("long").alias("rank_fp"))
-    for _ in range(iters):
-        contrib = (
-            edge_pairs
-            .join(ranks.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
-            .join(outdeg.withColumnRenamed(NODE_ID, SOURCE_ID), SOURCE_ID)
-            .select(
-                F.col(TARGET_ID).alias(NODE_ID),
-                F.expr(
-                    f"CAST((CAST(rank_fp AS DECIMAL(38,0)) * {n_nodes})"
-                    f" div (CAST(_od AS DECIMAL(38,0)) * {n_nodes}"
-                    f"      + {n_edges}) AS LONG)"
-                ).alias("_c"),
-            )
-        )
-        sums = contrib.groupBy(NODE_ID).agg(F.sum("_c").alias("_s"))
-        ranks = (
-            nodes.join(sums, NODE_ID, "left_outer")
-            .select(
-                NODE_ID,
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"({damping_num} * coalesce(_s, 0L))"
-                        f" div {damping_den}"
-                    )
-                ).cast("long").alias("rank_fp"),
-            )
-        )
-        if checkpoint:
-            ranks = ranks.transform(materialize)
-    return ranks
+    return _rank_rounds(
+        iters, nodes, edge_pairs, outdeg, ranks, contrib, teleport
+    )
 
 
 def louvain_local_move(

@@ -1480,15 +1480,29 @@ def _no_exchange_between_scan_and_smj(p: str) -> bool:
     return False
 
 
-def _pagerank_bucketed_iter(spark, sf: str):
-    """One un-checkpointed iteration of the bucketed-PageRank plan (the
-    catalog query checkpoints per round, which explains as an opaque
-    RDD scan — this rebuilds the same iteration with checkpoint=False
-    so the edge-side join plan is visible)."""
+def _rank_round_plan(nodes, edges, norm, contrib):
+    """One rank-family superstep (``graph_algo._rank_round``) over
+    un-checkpointed inputs: uniform start ranks, a literal teleport.
+    The operators checkpoint every round, which explains as an opaque
+    RDD scan; the bare round keeps the edge-side join plan visible."""
     from pyspark.sql import functions as F
 
     from dataflow_flex_pyarrow_to_gds_spark.operators.graph_algo import (
-        pagerank_fixedpoint,
+        _rank_round,
+    )
+
+    ranks = nodes.select("nodeId", F.lit(10**6).cast("long").alias("rank_fp"))
+    return _rank_round(nodes, edges, norm, ranks, contrib, F.lit(10**5))
+
+
+def _pagerank_bucketed_iter(spark, sf: str):
+    """One bucketed-PageRank round: the edges are the bucketed scan
+    hinted to sort-merge, the out-degrees aggregate the same scan (the
+    ``merge_edge_joins=True`` inputs of ``pagerank_fixedpoint``)."""
+    from pyspark.sql import functions as F
+
+    from dataflow_flex_pyarrow_to_gds_spark.operators.graph_algo import (
+        _out_degree,
         write_bucketed_edges,
     )
     from dataflow_flex_pyarrow_to_gds_spark.queries import _orders_edges
@@ -1503,8 +1517,9 @@ def _pagerank_bucketed_iter(spark, sf: str):
         .unionByName(b.select(F.col("targetNodeId").alias("nodeId")))
         .distinct()
     )
-    return pagerank_fixedpoint(
-        nodes, b, iters=1, merge_edge_joins=True, checkpoint=False
+    b = b.select("sourceNodeId", "targetNodeId")
+    return _rank_round_plan(
+        nodes, b.hint("merge"), _out_degree(b), F.expr("rank_fp div _od")
     )
 
 
@@ -1594,14 +1609,10 @@ def _no_unbucketed_target_window(p: str) -> bool:
 
 
 def _prw_iter(spark, sf: str):
-    """One un-checkpointed weighted-PageRank iteration over the
-    multiplicity-weighted co-order edges (same reveal trick as the
-    other iterative builders)."""
+    """One weighted-PageRank round over the multiplicity-weighted
+    co-order edges: per-edge ``(r · w) div W_u`` with W_u one groupBy
+    (the ``pagerank_weighted`` inputs, un-checkpointed)."""
     from pyspark.sql import functions as F
-
-    from dataflow_flex_pyarrow_to_gds_spark.operators.graph_algo import (
-        pagerank_weighted,
-    )
 
     li = (
         spark.read.parquet(f"{sf}/lineitem.parquet")
@@ -1633,7 +1644,14 @@ def _prw_iter(spark, sf: str):
         )
     )
     nodes = edges.select(F.col("sourceNodeId").alias("nodeId")).distinct()
-    return pagerank_weighted(nodes, edges, "w", iters=1, checkpoint=False)
+    e = edges.select(
+        "sourceNodeId", "targetNodeId", F.col("w").cast("long").alias("_w")
+    )
+    wsum = e.groupBy(F.col("sourceNodeId").alias("nodeId")).agg(
+        F.sum("_w").alias("_wt")
+    )
+    contrib = F.expr("(CAST(rank_fp AS DECIMAL(25,0)) * _w) div _wt")
+    return _rank_round_plan(nodes, e, wsum, contrib.cast("long"))
 
 
 def _eigen_iter(spark, sf: str):
@@ -1722,12 +1740,14 @@ def _k1_round_plan(spark, sf: str):
 
 
 def _ar_iter(spark, sf: str):
-    """One un-checkpointed ArticleRank iteration over the namespaced
-    customer→order edges (the pagerank-family reveal trick)."""
+    """One ArticleRank round over the namespaced customer→order edges:
+    the out-degree divisor shifted by literal N and m (the
+    ``articlerank_fixedpoint`` inputs, un-checkpointed; the literals'
+    values do not shape the plan)."""
     from pyspark.sql import functions as F
 
     from dataflow_flex_pyarrow_to_gds_spark.operators.graph_algo import (
-        articlerank_fixedpoint,
+        _out_degree,
     )
 
     orders = spark.read.parquet(f"{sf}/orders.parquet")
@@ -1740,7 +1760,12 @@ def _ar_iter(spark, sf: str):
         .unionByName(edges.select(F.col("targetNodeId").alias("nodeId")))
         .distinct()
     )
-    return articlerank_fixedpoint(nodes, edges, iters=1, checkpoint=False)
+    n, m = 1000, 1500
+    contrib = F.expr(
+        f"CAST((CAST(rank_fp AS DECIMAL(38,0)) * {n})"
+        f" div (CAST(_od AS DECIMAL(38,0)) * {n} + {m}) AS LONG)"
+    )
+    return _rank_round_plan(nodes, edges, _out_degree(edges), contrib)
 
 
 def _louvain_sweep(spark, sf: str):

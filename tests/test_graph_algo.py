@@ -1,5 +1,6 @@
 """Graph analytics over exported node/edge layouts."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from dataflow_flex_pyarrow_to_gds_spark.operators.graph_algo import (
@@ -224,12 +225,16 @@ def test_pagerank_bucketed_matches_and_skips_edge_shuffle(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from dataflow_flex_pyarrow_to_gds_spark.operators.graph_algo import (
+        _out_degree,
         pagerank_fixedpoint,
         write_bucketed_edges,
     )
 
     sys.path.insert(0, "/root/repo/scripts")
-    from explain_audit import _no_exchange_between_scan_and_smj
+    from explain_audit import (
+        _no_exchange_between_scan_and_smj,
+        _rank_round_plan,
+    )
 
     edges = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -266,21 +271,20 @@ def test_pagerank_bucketed_matches_and_skips_edge_shuffle(spark, sf_dir):
             df.explain("formatted")
         return buf.getvalue()
 
-    p_bucketed = plan_of(
-        pagerank_fixedpoint(
-            nodes, b, iters=1, merge_edge_joins=True, checkpoint=False
+    def round_of(e):
+        # one un-checkpointed superstep over the merge_edge_joins=True
+        # inputs (a checkpointed round explains as an opaque RDD scan)
+        return _rank_round_plan(
+            nodes, e.hint("merge"), _out_degree(e), F.expr("rank_fp div _od")
         )
-    )
+
+    p_bucketed = plan_of(round_of(b))
     assert "Bucketed: true" in p_bucketed
     assert _no_exchange_between_scan_and_smj(p_bucketed)
 
     # control: same SMJ-pinned iteration over raw parquet DOES exchange
     # the edge side
-    p_raw = plan_of(
-        pagerank_fixedpoint(
-            nodes, edges, iters=1, merge_edge_joins=True, checkpoint=False
-        )
-    )
+    p_raw = plan_of(round_of(edges))
     assert not _no_exchange_between_scan_and_smj(p_raw)
     spark.sql("DROP TABLE IF EXISTS test_pr_edges_b")
 
@@ -1834,28 +1838,90 @@ def test_pagerank_weighted_reference(spark):
     assert got[2] > got[1]  # 1 sends 3/4 of its mass to 2
 
 
-def test_pagerank_weighted_uniform_equals_unweighted(spark):
-    """Constant weights are bit-identical to the unweighted form:
-    floor(r·c / (c·d)) == floor(r/d) — the quotient is the same
-    rational, so the floor can't differ."""
-    from dataflow_flex_pyarrow_to_gds_spark.operators.graph_algo import (
-        pagerank_fixedpoint,
-        pagerank_weighted,
-    )
-    from pyspark.sql import functions as F
-
+def _rank_graph(spark):
+    """The 41-node, 40-edge directed graph of the rank-family tests."""
     pairs = [(i, (i * 7) % 23 + 1) for i in range(1, 41)]
     edges = spark.createDataFrame(
         pairs, "sourceNodeId long, targetNodeId long"
     )
     nodes = spark.createDataFrame([(i,) for i in range(1, 42)], "nodeId long")
-    weighted = pagerank_weighted(
-        nodes, edges.withColumn("w", F.lit(9)), "w", iters=3
-    )
-    plain = pagerank_fixedpoint(nodes, edges, iters=3)
+    return nodes, edges
+
+
+def _rank_op(name):
+    """``(nodes, edges, iters) → ranks`` for one rank-family operator;
+    weighted PageRank gets constant weights, personalized PageRank
+    seeds every node."""
+    from dataflow_flex_pyarrow_to_gds_spark.operators import graph_algo as g
+
+    return {
+        "pagerank": g.pagerank_fixedpoint,
+        "weighted": lambda n, e, iters: g.pagerank_weighted(
+            n, e.withColumn("w", F.lit(9)), "w", iters=iters
+        ),
+        "personalized": g.personalized_pagerank_fixedpoint,
+        "articlerank": g.articlerank_fixedpoint,
+    }[name]
+
+
+def test_pagerank_weighted_uniform_equals_unweighted(spark):
+    """Constant weights are bit-identical to the unweighted form:
+    floor(r·c / (c·d)) == floor(r/d) — the quotient is the same
+    rational, so the floor can't differ."""
+    nodes, edges = _rank_graph(spark)
+    weighted = _rank_op("weighted")(nodes, edges, iters=3)
+    plain = _rank_op("pagerank")(nodes, edges, iters=3)
     assert sorted(map(tuple, weighted.collect())) == sorted(
         map(tuple, plain.collect())
     )
+
+
+def test_ppr_seeded_everywhere_equals_pagerank(spark):
+    """With every node a seed, personalized PageRank's start ranks and
+    teleport mass are PageRank's ``scale div N`` and ``base``: the two
+    operators agree bit-for-bit."""
+    nodes, edges = _rank_graph(spark)
+    ppr = _rank_op("personalized")(nodes, edges, iters=3)
+    plain = _rank_op("pagerank")(nodes, edges, iters=3)
+    assert sorted(map(tuple, ppr.collect())) == sorted(
+        map(tuple, plain.collect())
+    )
+
+
+@pytest.mark.parametrize(
+    "op", ["pagerank", "weighted", "personalized", "articlerank"]
+)
+def test_rank_operators_reject_zero_iters(spark, op):
+    """GDS requires maxIterations >= 1. With iters=0 a rank operator
+    would hand back its start ranks as if they were a result."""
+    nodes, edges = _rank_graph(spark)
+    with pytest.raises(ValueError, match="iters"):
+        _rank_op(op)(nodes, edges, iters=0)
+
+
+@pytest.mark.parametrize("op", ["pagerank", "personalized"])
+def test_rank_job_census(spark, op):
+    """A rank round is one Pregel superstep — the edge ⋈ rank ⋈ divisor
+    join, the contribution sum by target, the join back onto the nodes
+    and the round's checkpoint — measured at 9 Spark jobs (AQE books
+    each shuffle stage as its own job). Two more rounds may add at most
+    18 jobs; a per-round count, probe or re-derived operand breaks the
+    bound."""
+    nodes, edges = _rank_graph(spark)
+    sc = spark.sparkContext
+
+    def jobs(iters):
+        group = f"rank-census-{op}-{iters}"
+        sc.setJobGroup(group, "rank job census")
+        try:
+            _rank_op(op)(nodes, edges, iters=iters).collect()
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # fed async
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one, three = jobs(1), jobs(3)
+    assert three - one <= 18, (one, three)
 
 
 def test_dag_longest_path_reference(spark):
