@@ -39,6 +39,11 @@ job (``queryExecution().observedMetrics()``). That is how a fixpoint
 loop learns how many rows changed (or are still open) without a probe
 job of its own.
 
+:func:`fixpoint` is the one round loop over :func:`materialize_count`
+for the graph loops that stop on such a count, and
+:class:`NoFixpointError` is what every one of them raises when its
+round budget runs out.
+
 ``internalCreateDataFrame`` is ``private[sql]`` in Scala, which
 compiles to a public JVM method — reachable from py4j, but a Spark
 upgrade could move it, so the helper degrades LOUDLY-BUT-SOFTLY: one
@@ -51,6 +56,7 @@ from __future__ import annotations
 
 import uuid
 import warnings
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -142,3 +148,62 @@ def materialize(df: DataFrame) -> DataFrame:
     statistics. Drop-in for ``.localCheckpoint(eager=True)`` in
     iterative loops — chain as ``.transform(materialize)``."""
     return _checkpoint(df, count=False)[0]
+
+
+class NoFixpointError(RuntimeError):
+    """A :func:`fixpoint` loop ran out of its round budget: ``budget``
+    state-changing rounds ran and ``still_changing`` rows were still
+    changing (or still open) after them. A truncated state would look
+    like an answer, so the loop raises instead."""
+
+    def __init__(
+        self, operator: str, budget: int, still_changing: int, reason: str
+    ):
+        super().__init__(
+            f"{operator}: no fixpoint in {budget} rounds "
+            f"({still_changing} rows unsettled) — {reason}"
+        )
+        self.operator = operator
+        self.budget = budget
+        self.still_changing = still_changing
+
+
+def fixpoint(
+    operator: str,
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    flag: Column | None,
+    budget: int,
+    reason: str,
+    *,
+    open_rows: bool = False,
+) -> tuple[DataFrame, int]:
+    """Run ``state = materialize_count(step(state), where=flag)`` until
+    the count is zero → ``(state, rounds run)``. Each round is one
+    checkpoint job that also counts ``flag`` (every row when ``flag``
+    is None); the state a round hands on is that checkpoint, flag
+    columns included.
+
+    ``budget`` bounds the rounds that change the state: a loop whose
+    answer needs exactly ``budget`` such rounds returns it, one that
+    needs ``budget + 1`` raises :class:`NoFixpointError`. What a zero
+    count means sets the rest:
+
+    - a change flag (the default): the round changed nothing, so the
+      round that proves the fixpoint is one past the last change and
+      may run beyond the budget;
+    - ``open_rows=True``: nothing is left open (k1's uncolored
+      nodes), so ``state`` is counted first and no confirming round
+      runs.
+    """
+    if budget < 0:
+        raise ValueError(f"{operator}: round budget must be >= 0, got {budget}")
+    n, rounds = None, 0
+    if open_rows:
+        state, n = materialize_count(state, where=flag)
+    while n != 0:
+        if rounds == budget + (not open_rows):
+            raise NoFixpointError(operator, budget, n, reason)
+        state, n = materialize_count(step(state), where=flag)
+        rounds += 1
+    return state, rounds

@@ -1315,7 +1315,11 @@ def deduplicate_near(
 ) -> DataFrame:
     """Corpus minus non-keeper near-duplicates: every row whose id is not
     a dropped member of a near-dup group (anti join on the skinny drop
-    list — rows untouched by any pair pass through without shuffling)."""
+    list — rows untouched by any pair pass through without shuffling).
+
+    Kept without a catalog caller: the one-call form of near-duplicate
+    removal (the groups plus the keeper anti-join) for library callers;
+    catalog rows stop at the groups."""
     drops = near_dup_groups(pairs, max_iter=max_iter).filter(
         F.col("doc_id") != F.col("keep_id")
     )

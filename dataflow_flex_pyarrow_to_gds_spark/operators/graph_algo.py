@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .graph import NODE_ID, SOURCE_ID, TARGET_ID
-from ._materialize import materialize, materialize_count
+from ._materialize import fixpoint, materialize, materialize_count
 
 
 def node_degrees(edges: DataFrame) -> DataFrame:
@@ -85,8 +85,7 @@ def connected_components(
     # only decrease, so every fixpoint is still the min-id labeling, but
     # the reach radius doubles per round: O(log diameter) rounds instead
     # of O(diameter).
-    comp = nodes.select(NODE_ID, F.col(NODE_ID).alias("component"))
-    for _ in range(max_iter):
+    def step(comp: DataFrame) -> DataFrame:
         contrib = (
             comp.join(sym, comp[NODE_ID] == sym["a"])
             .select(
@@ -104,7 +103,7 @@ def connected_components(
                 "_old"
             ),
         )
-        new_comp = nbr_min.join(
+        return nbr_min.join(
             comp.select(
                 F.col(NODE_ID).alias("_c1"),
                 F.col("component").alias("_c2"),
@@ -115,12 +114,14 @@ def connected_components(
             F.least("_c1", "_c2").alias("component"),
             (F.least("_c1", "_c2") < F.col("_old")).alias("_chg"),
         )
-        # checkpoint + changed-row count in ONE job
-        new_comp, changed = materialize_count(new_comp, where=F.col("_chg"))
-        comp = new_comp.select(NODE_ID, "component")
-        if changed == 0:
-            return comp
-    raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+
+    comp, _ = fixpoint(
+        "connected_components",
+        nodes.select(NODE_ID, F.col(NODE_ID).alias("component")),
+        step, F.col("_chg"), max_iter,
+        "raise max_iter; a truncated labeling would split components",
+    )
+    return comp.select(NODE_ID, "component")
 
 
 def _sym(pairs: DataFrame) -> DataFrame:
@@ -552,8 +553,8 @@ def dag_longest_path(
         .transform(materialize)
     )
     e = e.transform(materialize)
-    levels = nodes.select(NODE_ID, F.lit(0).cast("long").alias("level"))
-    for _ in range(max_iter):
+
+    def step(levels: DataFrame) -> DataFrame:
         cand = (
             e.join(
                 levels.withColumnRenamed(NODE_ID, "_s"), "_s"
@@ -565,29 +566,22 @@ def dag_longest_path(
         # next level table (levels grow monotonically, so changed ⟺
         # strictly greater) — the old probe re-joined the two level
         # tables in a separate job per round
-        nxt = (
-            levels.join(cand, NODE_ID, "left_outer")
-            .select(
-                NODE_ID,
-                F.greatest(F.col("level"), F.coalesce("_nl", F.lit(0)))
-                .cast("long")
-                .alias("level"),
-                (
-                    F.greatest(F.col("level"), F.coalesce("_nl", F.lit(0)))
-                    > F.col("level")
-                ).alias("_chg"),
-            )
+        level = F.greatest(F.col("level"), F.coalesce("_nl", F.lit(0)))
+        return levels.join(cand, NODE_ID, "left_outer").select(
+            NODE_ID,
+            level.cast("long").alias("level"),
+            (level > F.col("level")).alias("_chg"),
         )
-        nxt, n_chg = materialize_count(nxt, where=F.col("_chg"))
-        levels = nxt.select(NODE_ID, "level")
-        if n_chg == 0:
-            return levels
-    raise RuntimeError(
-        f"dag_longest_path: levels still changing after {max_iter} "
-        "rounds — the input has a cycle (or raise max_iter for a "
-        "deeper DAG); a truncated result would silently understate "
-        "depths"
+
+    levels, _ = fixpoint(
+        "dag_longest_path",
+        nodes.select(NODE_ID, F.lit(0).cast("long").alias("level")),
+        step, F.col("_chg"), max_iter,
+        "levels still changing: the input has a cycle (or raise max_iter "
+        "for a deeper DAG); a truncated result would silently understate "
+        "depths",
     )
+    return levels.select(NODE_ID, "level")
 
 
 def personalized_pagerank_fixedpoint(
@@ -619,38 +613,43 @@ def personalized_pagerank_fixedpoint(
 
     Scale shape: identical to :func:`pagerank_fixedpoint` — per
     iteration one edge-keyed join of the skinny rank table + one
-    partial-aggregated groupBy; the seed flag is one extra 9-byte
-    column on the node table, and the hubs-only checkpoint rule
+    partial-aggregated groupBy; the node table carries the seed flag
+    and the out-degree (one groupBy, checkpointed once — it is also
+    the round's divisor table), and the hubs-only checkpoint rule
     (:func:`hits_fixedpoint`) does not apply — there is one table, so
     it checkpoints each round.
     """
-    s = seeds.select(F.col(NODE_ID)).distinct()
-    n_seeds = s.count()
-    if n_seeds == 0:
-        raise ValueError("personalized_pagerank_fixedpoint: empty seeds")
     # Fix the edge list once: unlike pagerank_fixedpoint's catalog graph
     # (a cheap column projection), PPR inputs are often DERIVED edge
     # sets (the catalog row's co-order self-join) that would otherwise
     # recompute inside every iteration's join.
     e = edges.select(SOURCE_ID, TARGET_ID).transform(materialize)
-    nodes = (
-        e.select(F.col(SOURCE_ID).alias(NODE_ID))
-        .unionByName(e.select(F.col(TARGET_ID).alias(NODE_ID)))
-        .unionByName(s)
-        .distinct()
-        .join(s.withColumn("_seed", F.lit(1)), NODE_ID, "left_outer")
-        .select(NODE_ID, F.coalesce("_seed", F.lit(0)).alias("_seed"))
-        .transform(materialize)  # reused every round
-    )
     seed = F.col("_seed")
+
+    def rows(node: Column, od: int, is_seed: int) -> list[Column]:
+        return [node.alias(NODE_ID), F.lit(od).alias("_od"),
+                F.lit(is_seed).alias("_seed")]
+
+    # ONE groupBy builds the node table (endpoints ∪ seeds, with the
+    # seed flag) and the out-degree divisor together; the table is
+    # checkpointed once and the seed count rides that job
+    nodes, n_seeds = materialize_count(
+        e.select(*rows(F.col(SOURCE_ID), 1, 0))
+        .unionByName(e.select(*rows(F.col(TARGET_ID), 0, 0)))
+        .unionByName(seeds.select(*rows(F.col(NODE_ID), 0, 1)))
+        .groupBy(NODE_ID)
+        .agg(F.sum("_od").alias("_od"), F.max("_seed").alias("_seed")),
+        where=seed == 1,
+    )
+    if n_seeds == 0:
+        raise ValueError("personalized_pagerank_fixedpoint: empty seeds")
     ranks = nodes.select(
         NODE_ID,
         (seed * F.lit(scale // n_seeds)).cast("long").alias("rank_fp"),
     )
     teleport = seed * F.lit(_teleport_base(scale, n_seeds))
     return _rank_rounds(
-        iters, nodes, e, _out_degree(e), ranks,
-        F.expr("rank_fp div _od"), teleport,
+        iters, nodes, e, nodes, ranks, F.expr("rank_fp div _od"), teleport
     )
 
 
@@ -2481,6 +2480,57 @@ def fastrp_embeddings(
     )
 
 
+def _relaxation_operands(
+    op: str, seeds: DataFrame, edges: DataFrame, weight_col: str, directed: bool
+) -> tuple[DataFrame, DataFrame]:
+    """The static operands of the relaxation loops (:func:`shortest_paths`,
+    :func:`k_shortest_path_lengths`) → ``(sym, start)``: the checkpointed
+    ``(_u, _v, _w)`` edge list (both directions unless ``directed``) and
+    the checkpointed seed state ``(nodeId, dist = 0)``.
+
+    Weights must be non-negative integers (ADVICE r10): int64 costs stay
+    exact and hash-checkable, where a fractional weight would be silently
+    truncated by the long cast — a non-integer type raises ``TypeError``
+    at plan time. A negative weight raises ``ValueError`` after one cheap
+    ``min`` agg on the checkpointed edges: relaxation toward a negative
+    cycle never reaches a fixpoint, and failing fast names the contract
+    violation instead of a late budget error."""
+    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+
+    wtype = edges.schema[weight_col].dataType
+    if not isinstance(wtype, (ByteType, ShortType, IntegerType, LongType)):
+        raise TypeError(
+            f"{op}: weight column {weight_col!r} must be an integer type, "
+            f"got {wtype.simpleString()} (int64 costs stay exact and "
+            "hash-checkable)"
+        )
+    sym = edges.select(
+        F.col(SOURCE_ID).alias("_u"),
+        F.col(TARGET_ID).alias("_v"),
+        F.col(weight_col).cast("long").alias("_w"),
+    )
+    if not directed:
+        sym = sym.unionByName(
+            sym.select(F.col("_v").alias("_u"), F.col("_u").alias("_v"), "_w")
+        )
+    sym = sym.transform(materialize)
+    min_w = sym.agg(F.min("_w").alias("m")).first()["m"]
+    if min_w is not None and min_w < 0:
+        raise ValueError(
+            f"{op}: negative weight {min_w} — weights must be non-negative "
+            "(relaxation toward a negative cycle never reaches a fixpoint)"
+        )
+    start = seeds.select(F.col(NODE_ID), F.lit(0).cast("long").alias("dist"))
+    return sym, start.distinct().transform(materialize)
+
+
+def _relax(state: DataFrame, sym: DataFrame) -> DataFrame:
+    """Every ``(nodeId, dist)`` state row carried across every edge."""
+    return state.join(sym, state[NODE_ID] == sym["_u"]).select(
+        F.col("_v").alias(NODE_ID), (F.col("dist") + F.col("_w")).alias("dist")
+    )
+
+
 def shortest_paths(
     seeds: DataFrame,
     edges: DataFrame,
@@ -2509,60 +2559,18 @@ def shortest_paths(
     returning partially-relaxed distances. Relaxation is idempotent
     past the fixpoint — the property the unrolled SQL oracle leans on.
     """
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    wtype = edges.schema[weight_col].dataType
-    if not isinstance(wtype, (ByteType, ShortType, IntegerType, LongType)):
-        # a fractional double would be silently truncated by the long
-        # cast and relax toward wrong distances — refuse, don't round
-        raise TypeError(
-            f"shortest_paths: weight column {weight_col!r} must be an "
-            f"integer type, got {wtype.simpleString()} (ADVICE r10: "
-            "int64 distances stay exact and hash-checkable)"
-        )
-    sym = edges.select(
-        F.col(SOURCE_ID).alias("_u"),
-        F.col(TARGET_ID).alias("_v"),
-        F.col(weight_col).cast("long").alias("_w"),
+    sym, start = _relaxation_operands(
+        "shortest_paths", seeds, edges, weight_col, directed
     )
-    if not directed:
-        sym = sym.unionByName(
-            sym.select(
-                F.col("_v").alias("_u"),
-                F.col("_u").alias("_v"),
-                "_w",
-            )
-        )
-    sym = sym.transform(materialize)
-    min_w = sym.agg(F.min("_w").alias("m")).first()["m"]
-    if min_w is not None and min_w < 0:
-        # Bellman-Ford would "work" until a negative cycle turns the
-        # fixpoint loop into a late max_iter RuntimeError — fail fast
-        # with the actual contract violation instead (ADVICE r10)
-        raise ValueError(
-            f"shortest_paths: negative weight {min_w} — weights must be "
-            "non-negative (relaxation toward a negative cycle never "
-            "reaches a fixpoint)"
-        )
 
-    dist = seeds.select(
-        F.col(NODE_ID), F.lit(0).cast("long").alias("dist")
-    ).distinct().transform(materialize)
-    for _ in range(max_iter):
-        relaxed = (
-            dist.join(sym, dist[NODE_ID] == sym["_u"])
-            .select(
-                F.col("_v").alias(NODE_ID),
-                (F.col("dist") + F.col("_w")).alias("dist"),
-            )
-        )
+    def step(dist: DataFrame) -> DataFrame:
         # r15: the improvement flag rides the SAME union+min aggregate
         # (own rows marked; improved ⟺ newly reached, or strictly
         # smaller than the own-row minimum) — the old probe re-joined
         # the two distance tables in a separate job per round
-        new_dist = (
+        return (
             dist.select(NODE_ID, "dist", F.lit(1).alias("_own"))
-            .unionByName(relaxed.withColumn("_own", F.lit(0)))
+            .unionByName(_relax(dist, sym).withColumn("_own", F.lit(0)))
             .groupBy(NODE_ID)
             .agg(
                 F.min("dist").alias("dist"),
@@ -2579,11 +2587,12 @@ def shortest_paths(
                 ).alias("_chg"),
             )
         )
-        new_dist, improved = materialize_count(new_dist, where=F.col("_chg"))
-        dist = new_dist.select(NODE_ID, "dist")
-        if improved == 0:
-            return dist
-    raise RuntimeError(f"shortest_paths: no fixpoint in {max_iter} rounds")
+
+    dist, _ = fixpoint(
+        "shortest_paths", start, step, F.col("_chg"), max_iter,
+        "raise max_iter; partially relaxed distances would overstate costs",
+    )
+    return dist.select(NODE_ID, "dist")
 
 
 def k_shortest_path_lengths(
@@ -2620,16 +2629,14 @@ def k_shortest_path_lengths(
     the edge list, one repartition-by-node, a hash-dedup on
     (node, dist) and a node-partitioned ``row_number`` top-k (sort-
     based, no per-group memory blowup — hub in-degrees never build a
-    ``collect_set``), then an anti-join changed-row probe; lineage
-    localCheckpoint-materialized per round. Rounds = hop count of the
+    ``collect_set``); the count of new costs rides the round's
+    checkpoint job. Rounds = hop count of the
     longest walk REALIZING a kept cost; raises loudly at ``max_iter``
     instead of returning partially-relaxed sets. Weights must be
     non-negative integers, enforced exactly like :func:`shortest_paths`
     (int64 costs stay exact and hash-checkable; a negative weight
     makes "k smallest walk costs" −∞-divergent).
     """
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
     if k < 1:
         raise ValueError(
             f"k_shortest_path_lengths: k must be >= 1, got {k}"
@@ -2639,49 +2646,12 @@ def k_shortest_path_lengths(
             f"k_shortest_path_lengths: max_iter must be >= 1, "
             f"got {max_iter}"
         )
-    wtype = edges.schema[weight_col].dataType
-    if not isinstance(wtype, (ByteType, ShortType, IntegerType, LongType)):
-        raise TypeError(
-            f"k_shortest_path_lengths: weight column {weight_col!r} "
-            f"must be an integer type, got {wtype.simpleString()} "
-            "(int64 costs stay exact and hash-checkable)"
-        )
-    sym = edges.select(
-        F.col(SOURCE_ID).alias("_u"),
-        F.col(TARGET_ID).alias("_v"),
-        F.col(weight_col).cast("long").alias("_w"),
-    )
-    if not directed:
-        sym = sym.unionByName(
-            sym.select(
-                F.col("_v").alias("_u"), F.col("_u").alias("_v"), "_w"
-            )
-        )
-    sym = sym.transform(materialize)
-    min_w = sym.agg(F.min("_w").alias("m")).first()["m"]
-    if min_w is not None and min_w < 0:
-        raise ValueError(
-            f"k_shortest_path_lengths: negative weight {min_w} — any "
-            "cycle reachable from a seed would make the k-th smallest "
-            "walk cost unbounded below"
-        )
-
-    state = (
-        seeds.select(F.col(NODE_ID), F.lit(0).cast("long").alias("dist"))
-        .distinct()
-        .transform(materialize)
+    sym, start = _relaxation_operands(
+        "k_shortest_path_lengths", seeds, edges, weight_col, directed
     )
     topk = Window.partitionBy(NODE_ID).orderBy("dist")
-    # range(max_iter + 1): the change probe needs one iteration BEYOND
-    # the last productive relaxation to observe the fixpoint, so sets
-    # finishing in exactly max_iter rounds must not trip the for/else
-    # raise (the repo's recurring exactly-at-budget class — scc
-    # backward mark r13, mst merge/doubling r14).
-    for _ in range(max_iter + 1):
-        relaxed = state.join(sym, state[NODE_ID] == sym["_u"]).select(
-            F.col("_v").alias(NODE_ID),
-            (F.col("dist") + F.col("_w")).alias("dist"),
-        )
+
+    def step(state: DataFrame) -> DataFrame:
         # repartition by node ONCE: hash(node) satisfies the clustered
         # distribution of BOTH the (node, dist) dedup and the window,
         # so the dedup + top-k pipeline runs in a single exchange
@@ -2690,9 +2660,9 @@ def k_shortest_path_lengths(
         # cost existed in the previous state, so the fixpoint probe is
         # a flag count inside the checkpoint job instead of a separate
         # anti-join job per round
-        new_state = (
+        return (
             state.select(NODE_ID, "dist", F.lit(1).alias("_own"))
-            .unionByName(relaxed.withColumn("_own", F.lit(0)))
+            .unionByName(_relax(state, sym).withColumn("_own", F.lit(0)))
             .repartition(NODE_ID)
             .groupBy(NODE_ID, "dist")
             .agg(F.max("_own").alias("_own"))
@@ -2700,23 +2670,17 @@ def k_shortest_path_lengths(
             .filter(F.col("_rn") <= k)
             .drop("_rn")
         )
-        # monotone under the sorted-set order: a row leaves the state
-        # only when a strictly smaller candidate evicts it, so
-        # new \ old = ∅  ⟺  new = old (fixpoint) — and new \ old is
-        # exactly the surviving rows whose cost no prior state row had
-        new_state, n_new = materialize_count(
-            new_state, where=F.col("_own") == 0
-        )
-        changed = n_new > 0
-        state = new_state.select(NODE_ID, "dist")
-        if not changed:
-            break
-    else:
-        raise RuntimeError(
-            "k_shortest_path_lengths: sets still improving after "
-            f"{max_iter} rounds — raise max_iter; truncated sets would "
-            "silently under-report the k-th cost"
-        )
+
+    # monotone under the sorted-set order: a row leaves the state only
+    # when a strictly smaller candidate evicts it, so new \ old = ∅  ⟺
+    # new = old (fixpoint) — and new \ old is exactly the surviving
+    # rows whose cost no prior state row had
+    state, _ = fixpoint(
+        "k_shortest_path_lengths", start, step, F.col("_own") == 0,
+        max_iter,
+        "sets still improving: raise max_iter; truncated sets would "
+        "silently under-report the k-th cost",
+    )
     return state.select(
         NODE_ID,
         F.row_number().over(topk).alias("k_rank"),
@@ -3068,7 +3032,7 @@ def k1_coloring(
     neighbors takes the smallest color unused by its already-colored
     neighbors (the mex); two adjacent nodes can never win the same
     round, so properness is structural. Rounds = O(log n) expected
-    with hash priorities; LOUD RuntimeError at ``max_iter`` (the
+    with hash priorities; LOUD NoFixpointError past ``max_iter`` (the
     fixed-unroll oracle contract — a silent partial coloring would
     look proper and mean nothing). Self-loops are dropped (a
     self-adjacent node is uncolorable), edges deduped canonically.
@@ -3101,21 +3065,15 @@ def k1_coloring(
         ).alias("_h"),
         F.lit(None).cast("long").alias("color"),
     )
-    uncolored = F.col("color").isNull()
     cols = _k1_round_columns()
-    st, left = materialize_count(st, where=uncolored)
-    for _ in range(max_iter):
-        if left == 0:
-            break
-        st, left = materialize_count(
-            _k1_round_state(sym, st, cols), where=uncolored
-        )
-    if left:
-        raise RuntimeError(
-            f"k1_coloring: nodes still uncolored after {max_iter} rounds — "
-            "raise max_iter (rounds are O(log n) expected; a silent partial "
-            "coloring would look proper and mean nothing)"
-        )
+    st, _ = fixpoint(
+        "k1_coloring", st, lambda st: _k1_round_state(sym, st, cols),
+        F.col("color").isNull(), max_iter,
+        "nodes still uncolored: raise max_iter (rounds are O(log n) "
+        "expected; a silent partial coloring would look proper and mean "
+        "nothing)",
+        open_rows=True,
+    )
     return st.select(F.col("_n").alias(NODE_ID), "color")
 
 

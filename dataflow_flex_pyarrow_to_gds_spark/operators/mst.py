@@ -43,7 +43,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .graph import SOURCE_ID, TARGET_ID
-from ._materialize import materialize, materialize_count
+from ._materialize import fixpoint, materialize, materialize_count
+
+
+def _double(parent: DataFrame) -> DataFrame:
+    """One pointer-doubling jump ``p ← p(p)`` over ``(_c, _p)``. The
+    doubling join already sees BOTH p and p(p), so the change flag
+    ``_chg`` rides it."""
+    rgt = parent.select(F.col("_c").alias("_rc"), F.col("_p").alias("_pp"))
+    return parent.join(rgt, parent["_p"] == rgt["_rc"]).select(
+        parent["_c"],
+        rgt["_pp"].alias("_p"),
+        (rgt["_pp"] != parent["_p"]).alias("_chg"),
+    )
 
 
 def minimum_spanning_forest(
@@ -143,12 +155,8 @@ def minimum_spanning_forest(
         .transform(materialize)
     )
     chosen_parts: list[DataFrame] = []
-    # range(max_rounds + 1): the top-of-loop emptiness probe needs one
-    # iteration BEYOND the last merge round to observe completion, so a
-    # forest finishing in exactly max_rounds merges must not trip the
-    # for/else raise (the scc.py backward-mark off-by-one, ADVICE r13 —
-    # caught again here by the r14 review). The budget semantics stay
-    # "at most max_rounds MERGE rounds".
+    # max_rounds bounds the MERGE rounds; the round that finds no
+    # crossing edge only confirms (the fixpoint driver's budget rule)
     for _ in range(max_rounds + 1):
         # label endpoints with their component
         # r15: checkpoint + emptiness probe fused into ONE job
@@ -229,37 +237,13 @@ def minimum_spanning_forest(
             )
             .transform(materialize)
         )
-        # pointer doubling to the root: p ← p(p), ≤ ⌈log₂ V⌉ steps.
-        # range(max_jumps + 1): `still` is change-detection, so
-        # convergence in exactly max_jumps productive doublings needs
-        # one extra confirming iteration to break (same off-by-one
-        # class as the merge loop above).
-        for _j in range(max_jumps + 1):
-            rgt = parent.select(
-                F.col("_c").alias("_rc"), F.col("_p").alias("_pp")
-            )
-            # r15: the doubling join already sees BOTH p and p(p) —
-            # the change flag rides it, and is counted inside the
-            # checkpoint job instead of a separate job per jump
-            nxt, n_chg = materialize_count(
-                parent.join(rgt, parent["_p"] == rgt["_rc"])
-                .select(
-                    parent["_c"],
-                    rgt["_pp"].alias("_p"),
-                    (rgt["_pp"] != parent["_p"]).alias("_chg"),
-                ),
-                where=F.col("_chg"),
-            )
-            still = n_chg > 0
-            parent = nxt.select("_c", "_p")
-            if not still:
-                break
-        else:
-            raise RuntimeError(
-                "minimum_spanning_forest: pointer doubling still "
-                f"moving after {max_jumps} jumps — raise max_jumps; a "
-                "truncated contraction would mislabel components"
-            )
+        # pointer doubling to the root: p ← p(p), ≤ ⌈log₂ V⌉ jumps
+        parent, _ = fixpoint(
+            "minimum_spanning_forest", parent, _double, F.col("_chg"),
+            max_jumps,
+            "pointer doubling still moving: raise max_jumps; a "
+            "truncated contraction would mislabel components",
+        )
         # relabel through freshly-aliased parent columns: parent's _c
         # descends from comp's _c (same exprId), so a direct
         # comp._c == parent._c join trips Spark's ambiguous-self-join

@@ -1,7 +1,7 @@
 """Multimodal binary columns: typed media handling over Spark.
 
 Media (image/audio/video) are opaque ``binary`` columns plus a typed
-metadata struct; compute-heavy per-item work (decode, resize, feature
+metadata struct; compute-heavy per-item work (decode, feature
 extraction, frame sampling) runs as Arrow-batched ``mapInPandas``
 operators. The Spark-side plumbing here — schemas, batch iteration,
 partition sizing, UDF signatures — is real and tested. The default
@@ -282,7 +282,10 @@ def sample_frames(
     the stream's own rate/scale, and emitted as raw HWC RGB bytes.
     Anything else keeps the deterministic pseudo-frame stub (compressed
     video needs ffmpeg; the honest-stub contract) at a fixed
-    ``every_ms`` cadence."""
+    ``every_ms`` cadence.
+
+    Kept without a catalog caller: the Spark surface of the video
+    decoders (``avi.py``); no catalog row reads video."""
     from .avi import AVI_SIGNATURE, avi_decode
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -364,49 +367,3 @@ def video_frame_stats(
     if partitions:
         src = src.repartition(partitions)
     return src.mapInPandas(_run, VIDEO_FRAME_STATS_SCHEMA)
-
-
-RESIZED_SCHEMA = "media_id long, width int, height int, channels int, pixels binary"
-
-
-def nn_resize(img: np.ndarray, target: tuple[int, int]) -> np.ndarray:
-    """Nearest-neighbor resample of an HWC array to (height, width) —
-    pure numpy (integer index gather), no codec dependency. Pixel-center
-    sampling: source index = floor((i + 0.5) * src/dst)."""
-    th, tw = target
-    h, w = img.shape[:2]
-    rows = np.minimum(((np.arange(th) + 0.5) * h / th).astype(np.int64), h - 1)
-    cols = np.minimum(((np.arange(tw) + 0.5) * w / tw).astype(np.int64), w - 1)
-    return img[rows][:, cols]
-
-
-def resize_images(
-    df: DataFrame,
-    *,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    target: tuple[int, int] = (224, 224),
-    decode_fn: DecodeFn = smart_decode,
-) -> DataFrame:
-    """Decode → nearest-neighbor resize to ``target`` (height, width) →
-    raw HWC uint8 bytes + dims. The resampler is pure numpy (no codec);
-    only ``decode_fn`` is environment-dependent, same contract as
-    :func:`image_features`. Arrow-batched mapInPandas; bytes stay in the
-    executor plane."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                img = decode_fn(bytes(payload) if payload is not None else b"")
-                resized = np.ascontiguousarray(nn_resize(img, target))
-                h, w = resized.shape[:2]
-                c = resized.shape[2] if resized.ndim == 3 else 1
-                out.append((mid, w, h, c, resized.tobytes()))
-            yield pd.DataFrame(
-                out, columns=["media_id", "width", "height", "channels", "pixels"]
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        _run, RESIZED_SCHEMA
-    )

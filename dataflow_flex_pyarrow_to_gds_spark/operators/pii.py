@@ -137,7 +137,11 @@ def redact_card_numbers(
     which is exactly the false-positive discipline a naive regex
     redactor lacks. The replace folds the validated candidate list
     over the text with literal (non-regex) substitution — still one
-    narrow JVM pass."""
+    narrow JVM pass.
+
+    Kept without a catalog caller: the rewriting half of the card-number
+    pair whose counting half (:func:`scan_card_numbers`) the catalog
+    runs."""
     cands = F.regexp_extract_all(
         F.col(text_col), F.lit(CARD_CANDIDATE_PATTERN), 0
     )

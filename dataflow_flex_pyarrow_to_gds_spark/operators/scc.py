@@ -69,9 +69,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .graph import NODE_ID, SOURCE_ID, TARGET_ID
-from ._materialize import materialize, materialize_count
+from ._materialize import fixpoint, materialize, materialize_count
 
 import threading
+from functools import reduce
 
 #: Thread-local holder for the most recent
 #: :func:`strongly_connected_components` call's round counters (no
@@ -88,6 +89,55 @@ def last_run_stats() -> dict:
     :func:`strongly_connected_components` call ON THIS THREAD (a copy;
     empty dict if none has run here)."""
     return dict(getattr(_RUN_STATS_TLS, "stats", {}))
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, parts)
+
+
+def _color_round(e: DataFrame, color: DataFrame) -> DataFrame:
+    """One forward min-label round over the remaining edges ``e``
+    → ``(nodeId, _color, _chg)``.
+
+    The change flag rides the same left join (labels only decrease, so
+    changed ⟺ strictly smaller), and a label SHORTCUT through the
+    previous round's checkpointed mapping doubles the reach per round
+    — valid for DIRECTED reachability because "label reaches node" is
+    transitive (color(v)=u means u→v; color(u)=w means w→u, hence
+    w→v), so labels stay reacher-ids, stay monotone, and every fixpoint
+    is still the min-reacher coloring; rounds O(depth) → O(log depth).
+    """
+    cand = (
+        e.join(
+            color.select(
+                F.col(NODE_ID).alias("_s"), F.col("_color").alias("_cs")
+            ),
+            "_s",
+        )
+        .groupBy(F.col("_t").alias(NODE_ID))
+        .agg(F.min("_cs").alias("_cin"))
+    )
+    return (
+        color.join(cand, NODE_ID, "left_outer")
+        .select(
+            NODE_ID,
+            F.least(
+                F.col("_color"), F.coalesce("_cin", F.col("_color"))
+            ).alias("_c1"),
+            F.col("_color").alias("_old"),
+        )
+        .join(
+            color.select(
+                F.col(NODE_ID).alias("_c1"), F.col("_color").alias("_c2")
+            ),
+            "_c1",
+        )
+        .select(
+            NODE_ID,
+            F.least("_c1", "_c2").alias("_color"),
+            (F.least("_c1", "_c2") < F.col("_old")).alias("_chg"),
+        )
+    )
 
 
 def strongly_connected_components(
@@ -186,69 +236,17 @@ def strongly_connected_components(
             .transform(materialize)
         )
         # -- phase 1: forward min-label fixpoint ------------------------
-        color = remaining.select(
-            NODE_ID, F.col(NODE_ID).alias("_color")
-        ).transform(materialize)
-        converged = False
-        color_rounds = 0
-        # r15 round shape: the change flag rides the same left join
-        # (labels only decrease, so changed ⟺ strictly smaller) and a
-        # label SHORTCUT through the previous round's checkpointed
-        # mapping doubles the reach per round — valid for DIRECTED
-        # reachability because "label reaches node" is transitive
-        # (color(v)=u means u→v; color(u)=w means w→u, hence w→v), so
-        # labels stay reacher-ids, stay monotone, and every fixpoint is
-        # still the min-reacher coloring; rounds O(depth) → O(log depth)
-        for _ in range(max_rounds):
-            color_rounds += 1
-            cand = (
-                e.join(
-                    color.select(
-                        F.col(NODE_ID).alias("_s"),
-                        F.col("_color").alias("_cs"),
-                    ),
-                    "_s",
-                )
-                .groupBy(F.col("_t").alias(NODE_ID))
-                .agg(F.min("_cs").alias("_cin"))
-            )
-            nxt = (
-                color.join(cand, NODE_ID, "left_outer")
-                .select(
-                    NODE_ID,
-                    F.least(
-                        F.col("_color"),
-                        F.coalesce("_cin", F.col("_color")),
-                    ).alias("_c1"),
-                    F.col("_color").alias("_old"),
-                )
-                .join(
-                    color.select(
-                        F.col(NODE_ID).alias("_c1"),
-                        F.col("_color").alias("_c2"),
-                    ),
-                    "_c1",
-                )
-                .select(
-                    NODE_ID,
-                    F.least("_c1", "_c2").alias("_color"),
-                    (F.least("_c1", "_c2") < F.col("_old")).alias("_chg"),
-                )
-            )
-            nxt, n_chg = materialize_count(nxt, where=F.col("_chg"))
-            still = n_chg > 0
-            color = nxt.select(NODE_ID, "_color")
-            if not still:
-                converged = True
-                break
+        color, color_rounds = fixpoint(
+            "strongly_connected_components",
+            remaining.select(
+                NODE_ID, F.col(NODE_ID).alias("_color")
+            ).transform(materialize),
+            lambda color: _color_round(e, color), F.col("_chg"), max_rounds,
+            "color fixpoint still changing: raise max_rounds for a deeper "
+            "graph; a truncated coloring would silently merge components",
+        )
+        color = color.drop("_chg")
         stats["color_rounds"].append(color_rounds)
-        if not converged:
-            raise RuntimeError(
-                "strongly_connected_components: color fixpoint still "
-                f"changing after {max_rounds} rounds — raise max_rounds "
-                "for a deeper graph; a truncated coloring would "
-                "silently merge components"
-            )
         # -- phase 2: backward mark within each color class -------------
         # edges whose endpoints share a color, keyed for the backward walk
         ec = (
@@ -268,20 +266,14 @@ def strongly_connected_components(
             .select("_s", "_t")
             .transform(materialize)
         )
-        mark = color.filter(
-            F.col(NODE_ID) == F.col("_color")
-        ).transform(materialize)
-        frontier = mark
-        # emptiness is probed AFTER each expansion (ADVICE r13: a
-        # top-of-loop-only check spuriously raised when the walk
-        # converged in exactly max_rounds expansions — the final empty
-        # frontier was never observed before range() exhausted)
-        # r15: frontier checkpoint + drain probe fused into one job;
         # the mark set stays a LAZY union of checkpointed frontiers
-        # (children are checkpoints — no recompute, no per-round copy)
-        mark_rounds = 0
-        for _ in range(max_rounds):
-            mark_rounds += 1
+        # (children are checkpoints — no recompute, no per-round copy);
+        # a round's count is its frontier, so the walk stops on the
+        # first round that marks nothing new
+        marked: list[DataFrame] = []
+
+        def expand(frontier: DataFrame) -> DataFrame:
+            marked.append(frontier)
             preds = (
                 ec.join(
                     frontier.select(F.col(NODE_ID).alias("_t")),
@@ -291,21 +283,22 @@ def strongly_connected_components(
                 .select(F.col("_s").alias(NODE_ID))
                 .distinct()
             )
-            frontier, n_front = materialize_count(
-                preds.join(mark, NODE_ID, "anti")
+            return (
+                preds.join(_union(marked), NODE_ID, "anti")
                 .join(color, NODE_ID)
                 .select(NODE_ID, "_color")
             )
-            mark = mark.unionByName(frontier)
-            if n_front == 0:
-                break
-        else:
-            raise RuntimeError(
-                "strongly_connected_components: backward mark still "
-                f"expanding after {max_rounds} rounds — raise "
-                "max_rounds; a truncated mark would silently split a "
-                "component"
-            )
+
+        _, mark_rounds = fixpoint(
+            "strongly_connected_components",
+            color.filter(F.col(NODE_ID) == F.col("_color")).transform(
+                materialize
+            ),
+            expand, None, max_rounds,
+            "backward mark still expanding: raise max_rounds; a "
+            "truncated mark would silently split a component",
+        )
+        mark = _union(marked)
         stats["mark_rounds"].append(mark_rounds)
         found_parts.append(
             mark.select(
@@ -326,10 +319,7 @@ def strongly_connected_components(
     _RUN_STATS_TLS.stats = dict(stats)
     if not found_parts:
         return spark.createDataFrame([], f"{NODE_ID} long, scc_id long")
-    out = found_parts[0]
-    for part in found_parts[1:]:
-        out = out.unionByName(part)
-    return out
+    return _union(found_parts)
 
 
 def scc_condensation(

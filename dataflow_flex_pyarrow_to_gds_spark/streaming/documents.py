@@ -58,7 +58,10 @@ def curate_documents_batch(docs: DataFrame) -> DataFrame:
 def curate_documents_stream(spark: SparkSession, path: str) -> DataFrame:
     """Streaming twin: the same stateless expression chain over a file
     stream. Append-mode safe (no aggregation), so micro-batch output
-    equals the batch run over the same files."""
+    equals the batch run over the same files.
+
+    Kept without a catalog caller: the streaming twin of the batch
+    curation chain; no catalog row runs a stream."""
     docs = spark.readStream.schema(DOCS_SCHEMA).parquet(path)
     return curate_documents_batch(docs)
 

@@ -337,6 +337,10 @@ def enrich_events_stream(
     stateless), which is exactly how reference data (label maps, per-type
     weights, domain allowlists) attaches to a 100 TB/day event stream.
     The batch twin is an ordinary broadcast join — parity-tested.
+
+    Kept without a catalog caller: the streaming form of the enrichment
+    join; no catalog row runs a stream, and its test pins it to the
+    batch join.
     """
     stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(src_path)
     return stream.join(F.broadcast(dim), on).select(
@@ -546,7 +550,10 @@ def bloom_store_rollup(spark: SparkSession, store_dir: str) -> DataFrame:
     path never touches raw events; per-day filters fall out of the
     same store by keeping ``day`` in the groupBy, and the merged
     filter probes exactly like a freshly-built one
-    (:func:`~..operators.profile.bloom_probe`)."""
+    (:func:`~..operators.profile.bloom_probe`).
+
+    Kept without a catalog caller: the only reader of the store
+    :func:`bloom_store_stream` writes."""
     store = spark.read.parquet(store_dir)
     return (
         store.groupBy("bloom_word")
@@ -622,7 +629,10 @@ def kmv_store_rollup(
     batch) — and per-day sketches fall out of the same store by
     keeping ``day`` in the partition key. The merged sketch feeds
     :func:`~..operators.profile.kmv_estimate` exactly like a
-    freshly-built one."""
+    freshly-built one.
+
+    Kept without a catalog caller: the only reader of the store
+    :func:`kmv_store_stream` writes."""
     from pyspark.sql.window import Window
 
     store = spark.read.parquet(store_dir)
@@ -755,6 +765,9 @@ def interp_store_stream(
     overwrites itself, never double-reduces).
 
     Returns the started query (``availableNow`` — drains and stops).
+
+    Kept without a catalog caller: the only writer of the store
+    :func:`interp_store_rollup` reads.
     """
     events = spark.readStream.schema(EVENTS_SCHEMA).parquet(src_path)
 

@@ -856,7 +856,8 @@ CHECKS: list[tuple[str, str, object]] = [
         "multiplicity build), contributions partial-aggregate, no "
         "cartesian, no nested-loop join (base is a literal, not a "
         "1-row broadcast), no Python eval",
-        lambda p: "CartesianProduct" not in p
+        lambda p: _within_round_bounds("@prw_iter", p)
+        and "CartesianProduct" not in p
         and "BroadcastNestedLoopJoin" not in p
         and "partial_sum" in p
         and "BatchEvalPython" not in p
@@ -963,7 +964,8 @@ CHECKS: list[tuple[str, str, object]] = [
         "exchange, no nested-loop join — N and m are plan-time "
         "literals), contributions partial-aggregate, no cartesian, "
         "no Python eval",
-        lambda p: "CartesianProduct" not in p
+        lambda p: _within_round_bounds("@ar_iter", p)
+        and "CartesianProduct" not in p
         and "BroadcastNestedLoopJoin" not in p
         and "partial_sum" in p
         and "BatchEvalPython" not in p
@@ -1480,6 +1482,40 @@ def _no_exchange_between_scan_and_smj(p: str) -> bool:
     return False
 
 
+def _groupbys(p: str) -> int:
+    """Aggregations in a formatted plan: each groupBy or distinct is one
+    partial + final HashAggregate pair."""
+    return len(re.findall(r"^\(\d+\) HashAggregate\b", p, re.M)) // 2
+
+
+def _exchanges(p: str) -> int:
+    return len(re.findall(r"^\(\d+\) Exchange\b", p, re.M))
+
+
+#: ``(groupBys, Exchanges)`` a rank-round plan may have, recorded when the
+#: plan is built: the groupBys its check names on top of its inputs', and
+#: the Exchanges of the unweighted PageRank round over the same inputs.
+_ROUND_BOUNDS: dict[str, tuple[int, int]] = {}
+
+
+def _record_round_bounds(name, nodes, edges, groupbys: int) -> None:
+    from pyspark.sql import functions as F
+
+    from dataflow_flex_pyarrow_to_gds_spark.operators.graph_algo import (
+        _out_degree,
+    )
+
+    plain = _rank_round_plan(
+        nodes, edges, _out_degree(edges), F.expr("rank_fp div _od")
+    )
+    _ROUND_BOUNDS[name] = (groupbys, _exchanges(plan_of(plain)))
+
+
+def _within_round_bounds(name: str, p: str) -> bool:
+    groupbys, exchanges = _ROUND_BOUNDS[name]
+    return _groupbys(p) == groupbys and _exchanges(p) <= exchanges
+
+
 def _rank_round_plan(nodes, edges, norm, contrib):
     """One rank-family superstep (``graph_algo._rank_round``) over
     un-checkpointed inputs: uniform start ranks, a literal teleport.
@@ -1650,6 +1686,12 @@ def _prw_iter(spark, sf: str):
     wsum = e.groupBy(F.col("sourceNodeId").alias("nodeId")).agg(
         F.sum("_w").alias("_wt")
     )
+    # the round's groupBys: the order-part distincts and one multiplicity
+    # build per direction of the edge list, which the round reads four
+    # times (edge side, W_u, node table, start ranks); one W_u; the node
+    # distinct, read twice (node table, start ranks); one contribution sum
+    edge_list = 2 * (2 * _groupbys(plan_of(li)) + 1)
+    _record_round_bounds("@prw_iter", nodes, e, 4 * edge_list + 1 + 2 + 1)
     contrib = F.expr("(CAST(rank_fp AS DECIMAL(25,0)) * _w) div _wt")
     return _rank_round_plan(nodes, e, wsum, contrib.cast("long"))
 
@@ -1760,6 +1802,10 @@ def _ar_iter(spark, sf: str):
         .unionByName(edges.select(F.col("targetNodeId").alias("nodeId")))
         .distinct()
     )
+    # the round's groupBys: the node distinct (node table and start
+    # ranks), the out-degree count and the contribution sum — the edge
+    # list itself aggregates nothing
+    _record_round_bounds("@ar_iter", nodes, edges, 2 + 1 + 1)
     n, m = 1000, 1500
     contrib = F.expr(
         f"CAST((CAST(rank_fp AS DECIMAL(38,0)) * {n})"
@@ -1894,6 +1940,7 @@ def _scc_color_round(spark, sf: str):
     @lpa_iter / @eigen_iter precedent)."""
     from pyspark.sql import functions as F
 
+    from dataflow_flex_pyarrow_to_gds_spark.operators.scc import _color_round
     from dataflow_flex_pyarrow_to_gds_spark.queries import _scc_edges
 
     e = (
@@ -1911,22 +1958,7 @@ def _scc_color_round(spark, sf: str):
         .select("nodeId", F.col("nodeId").alias("_color"))
         .localCheckpoint(eager=True)
     )
-    cand = (
-        e.join(
-            color.select(
-                F.col("nodeId").alias("_s"), F.col("_color").alias("_cs")
-            ),
-            "_s",
-        )
-        .groupBy(F.col("_t").alias("nodeId"))
-        .agg(F.min("_cs").alias("_cin"))
-    )
-    return color.join(cand, "nodeId", "left_outer").select(
-        "nodeId",
-        F.least(
-            F.col("_color"), F.coalesce("_cin", F.col("_color"))
-        ).alias("_color"),
-    )
+    return _color_round(e, color)
 
 
 def _gq_round(spark, sf: str):

@@ -1906,11 +1906,12 @@ def test_rank_job_census(spark, op):
     and the round's checkpoint — measured at 9 Spark jobs (AQE books
     each shuffle stage as its own job). Two more rounds may add at most
     18 jobs; a per-round count, probe or re-derived operand breaks the
-    bound."""
+    bound. Personalized PageRank's setup (seed count, out-degrees) costs
+    no more jobs than PageRank's."""
     nodes, edges = _rank_graph(spark)
     sc = spark.sparkContext
 
-    def jobs(iters):
+    def jobs(op, iters):
         group = f"rank-census-{op}-{iters}"
         sc.setJobGroup(group, "rank job census")
         try:
@@ -1920,8 +1921,10 @@ def test_rank_job_census(spark, op):
         sc._jsc.sc().listenerBus().waitUntilEmpty()  # fed async
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    one, three = jobs(1), jobs(3)
+    one, three = jobs(op, 1), jobs(op, 3)
     assert three - one <= 18, (one, three)
+    if op == "personalized":
+        assert one <= jobs("pagerank", 1), one
 
 
 def test_dag_longest_path_reference(spark):

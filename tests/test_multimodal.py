@@ -7,7 +7,6 @@ from dataflow_flex_pyarrow_to_gds_spark.operators.multimodal import (
     attach_meta,
     fake_decode,
     image_features,
-    resize_images,
     sample_frames,
 )
 
@@ -57,37 +56,3 @@ def test_sample_frames_flatmap_shape(spark):
         per_item.setdefault(r["media_id"], []).append((r["frame_idx"], r["frame_ms"]))
     assert all(sorted(v) == [(0, 0), (1, 500), (2, 1000), (3, 1500)]
                for v in per_item.values())
-
-
-def test_resize_images_golden(spark):
-    """Pure-numpy NN resize over the decoded-array path: dims honored,
-    pixels match a driver-side recomputation exactly (golden)."""
-    import numpy as np
-
-    from dataflow_flex_pyarrow_to_gds_spark.operators.multimodal import (
-        fake_decode,
-        nn_resize,
-    )
-
-    rows = resize_images(_media(spark, n=4), target=(4, 6)).collect()
-    assert len(rows) == 4
-    for r in rows:
-        assert (r["height"], r["width"], r["channels"]) == (4, 6, 3)
-        got = np.frombuffer(bytes(r["pixels"]), dtype=np.uint8).reshape(4, 6, 3)
-        src = fake_decode(_payload_for(r["media_id"]))
-        np.testing.assert_array_equal(got, nn_resize(src, (4, 6)))
-
-
-def test_nn_resize_identity_and_upscale():
-    import numpy as np
-
-    from dataflow_flex_pyarrow_to_gds_spark.operators.multimodal import nn_resize
-
-    img = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
-    np.testing.assert_array_equal(nn_resize(img, (2, 3)), img)  # identity
-    up = nn_resize(img, (4, 6))
-    assert up.shape == (4, 6, 3)
-    # each source pixel replicated 2×2 under center sampling
-    np.testing.assert_array_equal(up[::2, ::2], img[
-        np.minimum(((np.arange(4)[::2] + 0.5) * 2 / 4).astype(int), 1)
-    ][:, np.minimum(((np.arange(6)[::2] + 0.5) * 3 / 6).astype(int), 2)])

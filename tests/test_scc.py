@@ -81,10 +81,18 @@ def test_scc_guards(spark):
         strongly_connected_components(e, max_outer=0)
     with pytest.raises(ValueError, match="max_rounds"):
         strongly_connected_components(e, max_rounds=0)
-    # a 2-cycle needs ~2 color rounds; max_rounds=1 must raise loudly,
-    # not return a truncated coloring
+    # max_rounds bounds the rounds that change the state: a 2-cycle's
+    # coloring changes in one round (its mark marks in one), so
+    # max_rounds=1 finishes; 1→2→3→4→1 needs two changing color rounds,
+    # so max_rounds=1 must raise loudly, not return a truncated coloring
+    got = {
+        r["nodeId"]: r["scc_id"]
+        for r in strongly_connected_components(e, max_rounds=1).collect()
+    }
+    assert got == {1: 1, 2: 1}
+    ring = _edges(spark, [(1, 2), (2, 3), (3, 4), (4, 1)])
     with pytest.raises(RuntimeError, match="color fixpoint"):
-        strongly_connected_components(e, max_rounds=1)
+        strongly_connected_components(ring, max_rounds=1)
     # condensation-deeper-than-max_outer raises loudly: 2 chained SCCs
     deep = _edges(spark, [(1, 2), (2, 1), (2, 3), (3, 4), (4, 3)])
     with pytest.raises(RuntimeError, match="outer peels"):
